@@ -250,7 +250,7 @@ object DedupQueries {
         |  WHERE e.doc_id % 5 < 3 AND md5(e.text) = md5(d.text))
         |ORDER BY d.doc_id""".stripMargin
     ) { (s, dir) =>
-      import graft.streaming.BatchLanding
+      import graft.streaming.{BatchLanding, StreamGate}
       import graft.sources.TopicStore
       val root = graft.TempRoots.create("graft-incdedup")
       val ckpt = graft.TempRoots.create("graft-incdedup-ckpt")
@@ -271,25 +271,15 @@ object DedupQueries {
           col("text").as("value_str"),
           lit(new java.sql.Timestamp(1700000000000L)).as("publish_time")),
         root, "fresh-docs", 4)
-      val q = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "fresh-docs")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000000")
-        .load()
-        .select(col("key").cast("long").as("doc_id"),
-          md5(col("value_str")).as("text_hash"))
-        .join(seen, Seq("text_hash"), "left_anti")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(df.select("doc_id", "text_hash"), outDir, bid)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamGate.run(s,
+        StreamGate.source(s, root, "fresh-docs", StreamGate.PlainCap)
+          .select(col("key").cast("long").as("doc_id"),
+            md5(col("value_str")).as("text_hash"))
+          .join(seen, Seq("text_hash"), "left_anti")
+          .writeStream
+          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+            BatchLanding.land(df.select("doc_id", "text_hash"), outDir, bid)
+          }, ckpt)
       BatchLanding.read(s, outDir).orderBy(col("doc_id"))
     },
 

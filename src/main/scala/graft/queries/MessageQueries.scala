@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.operators.MessageOps
+import graft.streaming.StreamGate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -307,14 +308,8 @@ object MessageQueries {
       val hopInLines = (0 until 4).map(p =>
         graft.sources.TopicStore.partitionMeta(root, "hop-in", p)._1).sum
       val epochCap = math.max(4000L, hopInLines / 4 + 1)
-      def runPass(): Unit = {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "hop-in")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", epochCap.toString)
-          .load()
+      def runPass(): Unit = StreamGate.run(s,
+        StreamGate.source(s, root, "hop-in", epochCap)
           // the transform leg: drop text/plain (pushed to the source scan)
           .filter(col("content_type") =!= "text/plain")
           .writeStream
@@ -323,12 +318,7 @@ object MessageQueries {
           .option("serviceUrl", "pulsar://local")
           .option("topicNames", "hop-out")
           .option("enableTransaction", "true")
-          .option("batchingMaxMessages", epochCap.toString)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .option("batchingMaxMessages", epochCap.toString), ckpt)
       runPass()
       graft.streaming.StreamReplay.forceLastEpochReplay(ckpt)
       runPass()
@@ -384,43 +374,20 @@ object MessageQueries {
         graft.sources.TopicStore.partitionMeta(root, "hop-in", p)._1).sum
       val legCap = math.max(20000L, hopInLines / 3 + 1)
       // leg 1: subscription "sub-relay" consumes hop-in, produces hop-out
-      val relay = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-in")
-        .option("subscriptionName", "sub-relay")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", legCap.toString)
-        .load()
-        .writeStream
-        .format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-out")
-        .option("enableTransaction", "true")
-        .option("batchingMaxMessages", legCap.toString)
-        .option("checkpointLocation", ckptRelay)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      relay.awaitTermination()
+      StreamGate.run(s,
+        StreamGate.source(s, root, "hop-in", legCap, Some("sub-relay"))
+          .writeStream
+          .format("pulsarlike")
+          .option("path", root)
+          .option("serviceUrl", "pulsar://local")
+          .option("topicNames", "hop-out")
+          .option("enableTransaction", "true")
+          .option("batchingMaxMessages", legCap.toString), ckptRelay)
       // leg 2: a FRESH subscription consumes the produced topic
-      val down = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-out")
-        .option("subscriptionName", "sub-down")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", legCap.toString)
-        .load()
-        .writeStream
-        .option("checkpointLocation", ckptDown)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(df, outDir, bid)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      down.awaitTermination()
+      StreamGate.run(s,
+        StreamGate.source(s, root, "hop-out", legCap, Some("sub-down"))
+          .writeStream
+          .foreachBatch(StreamGate.land(outDir)), ckptDown)
       BatchLanding.read(s, outDir)
         .select(col("message_id"), col("key"), col("publish_time"),
           col("redelivery_count"), col("content_type"))

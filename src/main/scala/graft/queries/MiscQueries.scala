@@ -336,8 +336,8 @@ object MiscQueries {
     // v04 — per-row TYPE dispatch + cast-vs-variant coercion: field v
     // is a number, a string (sometimes numeric-looking), an array, or
     // JSON null depending on the row. schema_of_variant drives the
-    // dispatch (BIGINT/STRING/ARRAY<...>/VOID — probed vocabulary,
-    // VariantProbe), is_variant_null separates JSON null from a
+    // dispatch (BIGINT/STRING/ARRAY<...>/VOID, the names Spark 4.1
+    // returns for these shapes), is_variant_null separates JSON null from a
     // missing path, and try_variant_get shows cast semantics: a
     // numeric STRING coerces to bigint ("42" → 42, the variant cast
     // rule), a non-numeric one nulls instead of erroring — mirrored

@@ -3,16 +3,15 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.operators.MessageOps
 import graft.sources.TopicStore
-import graft.streaming.BatchLanding
+import graft.streaming.{BatchLanding, StreamGate}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming surface under the oracle gate:
   *
   *  - ps01 runs the WHOLE ingest loop — publish `events` into a topic
   *    store, consume it back through the `pulsarlike` DSv2 micro-batch
-  *    source (Trigger.AvailableNow, admission-limited batches), parse by
+  *    source (an AvailableNow pass, admission-limited batches), parse by
   *    content type, and the result must hash-match the original rows in
   *    DuckDB. The streaming machinery itself is thereby
   *    correctness-gated, not just spec'd.
@@ -46,15 +45,8 @@ object StreamingQueries {
       // parse + project inside foreachBatch and land parquet
       // executor-side — the consumed topic never touches the driver
       // (the memory sink would be a driver OOM at 100× the volume)
-      val q = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "32768")
-        .load()
+      StreamGate.run(s, StreamGate.source(s, root, "events", 32768L)
         .writeStream
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
           BatchLanding.land(
             MessageOps.contentTypeDispatch(df, payloadSchema)
@@ -65,11 +57,7 @@ object StreamingQueries {
                 col("parsed.value").as("value"),
                 col("base_type")),
             outDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       BatchLanding.read(s, outDir).orderBy(col("event_id"))
     },
 
@@ -111,19 +99,12 @@ object StreamingQueries {
       val preLines = (0 until 4).map(p =>
         TopicStore.partitionMeta(root, "events", p)._1).sum
 
-      def stream = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      def stream = StreamGate.source(s, root, "events", StreamGate.PlainCap)
       val eid = expr("CAST(split(message_id, ':')[1] AS BIGINT)")
 
       // pass 1: every message acked except the two nacked families —
       // one store scan feeds both nack calls
-      val q1 = stream.writeStream
-        .option("checkpointLocation", ckpt)
+      StreamGate.run(s, stream.writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           val failed = df.filter(eid % 7 <= 1).persist()
           AckingSink.nack(s, failed.filter(eid % 7 === 0), root, "events",
@@ -132,10 +113,7 @@ object StreamingQueries {
             nackDelayMs = 36000000L)
           failed.unpersist()
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q1.awaitTermination()
+        }, ckpt)
       require((0 until 4).map(p =>
         TopicStore.partitionMeta(root, "events", p)._1).sum == preLines,
         "nack must not grow the main log")
@@ -144,17 +122,12 @@ object StreamingQueries {
       // Redelivered rows land as parquet executor-side (retry volume is
       // unbounded in general — a driver buffer would not scale)
       val redeliveredDir = root + "/redelivered"
-      val q2 = stream.writeStream
-        .option("checkpointLocation", ckpt)
+      StreamGate.run(s, stream.writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
           BatchLanding.land(
             df.select("message_id", "key", "redelivery_count"),
             redeliveredDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
+        }, ckpt)
 
       val retries = BatchLanding.read(s, redeliveredDir)
         .withColumn("src", lit("retry"))
@@ -206,13 +179,7 @@ object StreamingQueries {
       TopicStore.publish(s, chunks, root, "chunks", 4)
 
       val outDir = root + "/reassembled"
-      val stream = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "chunks")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val stream = StreamGate.source(s, root, "chunks", StreamGate.PlainCap)
       import s.implicits._
       val asChunks = stream.select(
           col("properties").getItem("uuid").as("chunk_uuid"),
@@ -227,11 +194,9 @@ object StreamingQueries {
       // hash-mismatch the oracle, which has no such bound). State
       // instances = shuffle partitions; right-sized to the bounded
       // slice (restored after the stream drains)
-      StreamHarness.withShufflePartitions(s, "8") {
-      val q = ChunkReassembly.reassemble(s, asChunks,
+      StreamGate.run(s, ChunkReassembly.reassemble(s, asChunks,
           watermarkDelay = "1 second", maxChunks = 4096)
         .writeStream
-        .option("checkpointLocation", ckpt)
         .foreachBatch {
           // hash + project executor-side; only (doc_id, md5) land on disk
           (ds: org.apache.spark.sql.Dataset[ChunkReassembly.Assembled], bid: Long) =>
@@ -240,12 +205,7 @@ object StreamingQueries {
               col("chunk_uuid").cast("long").as("doc_id"),
               md5(col("payload")).as("payload_md5")),
             outDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      }
+        }, ckpt, statePartitions = Some(8))
       BatchLanding.read(s, outDir).orderBy(col("doc_id"))
     },
 
@@ -588,28 +548,14 @@ object StreamingQueries {
         Tables(s, dir, "events").filter(col("event_id") < 30000))
       TopicStore.publish(s, slice, root, "events", 4)
       TopicStore.publish(s, slice, root, "events", 4) // the redelivery
-      StreamHarness.withShufflePartitions(s, "8") {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", "1000000")
-          .load()
+      StreamGate.run(s,
+        StreamGate.source(s, root, "events", StreamGate.PlainCap)
           .withWatermark("event_time", "60 days")
           .dropDuplicatesWithinWatermark("message_id")
           .select(col("message_id"), col("key"), col("publish_time"))
           .writeStream
           .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       BatchLanding.read(s, outDir).orderBy(col("message_id"))
     },
 
@@ -715,13 +661,7 @@ object StreamingQueries {
 
       val payloadSchema = MessageOps.payloadSchema
       def side(eventType: String, idAs: String, tsAs: String) = {
-        val raw = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", "1000000")
-          .load()
+        val raw = StreamGate.source(s, root, "events", StreamGate.PlainCap)
         MessageOps.contentTypeDispatch(raw, payloadSchema)
           .filter(col("parsed.event_type") === eventType)
           .select(
@@ -734,10 +674,9 @@ object StreamingQueries {
       // partitions (4 stores per partition); right-size them to the
       // bounded slice this query processes — a cluster deployment
       // sizes this to its core count instead
-      StreamHarness.withShufflePartitions(s, "8") {
       val clicks = side("click", "click_id", "click_ts")
       val buys = side("purchase", "buy_id", "buy_ts")
-      val q = clicks.join(buys,
+      StreamGate.run(s, clicks.join(buys,
           col("click_id_user") === col("buy_id_user") &&
           col("click_ts") >= col("buy_ts") - expr("INTERVAL 1 HOUR") &&
           col("click_ts") <= col("buy_ts"))
@@ -745,15 +684,7 @@ object StreamingQueries {
           col("click_id_user").as("user_id"),
           col("click_ts"), col("buy_ts"))
         .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (ds: org.apache.spark.sql.DataFrame, bid: Long) =>
-          BatchLanding.land(ds, outDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      }
+        .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       BatchLanding.read(s, outDir).orderBy(col("click_id"), col("buy_id"))
     },
 
@@ -1019,39 +950,17 @@ object StreamingQueries {
         lit("flush").as("value_str"),
         lit(java.sql.Timestamp.valueOf("2035-01-01 00:00:00")).as("publish_time"),
         lit(java.sql.Timestamp.valueOf("2035-01-01 00:00:00")).as("event_time"))
-      def runPass(): Unit = {
-        StreamHarness.withShufflePartitions(s, "8") {
-          val src = s.readStream.format("pulsarlike")
-            .option("path", root)
-            .option("serviceUrl", "pulsar://local")
-            .option("topicNames", "events")
-            .option("subscriptionInitialPosition", "Earliest")
-            // single-batch-per-pass is the determinism contract of the
-            // sentinel choreography: a pass that splits would run its tail
-            // batch under the sentinel-advanced watermark and silently drop
-            // real rows. The limit must exceed any fixture size (10x soak
-            // included), so it is 1e8, not the 1e6 the plain loops use.
-            .option("batchingMaxMessages", "100000000")
-            .load()
-            .withWatermark("event_time", "1 hour")
-          val q = src
-            .groupBy(window(col("event_time"), "1 hour"))
-            .agg(count(lit(1)).as("n"),
-              sum(expr("try_cast(key AS BIGINT)")).as("user_sum"))
-            .select(col("window.start").as("window_start"),
-              col("n"), col("user_sum"))
-            .writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-              BatchLanding.land(df, outDir, bid)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-      }
+      def runPass(): Unit = StreamGate.run(s,
+        StreamGate.source(s, root, "events", StreamGate.SingleBatchCap)
+          .withWatermark("event_time", "1 hour")
+          .groupBy(window(col("event_time"), "1 hour"))
+          .agg(count(lit(1)).as("n"),
+            sum(expr("try_cast(key AS BIGINT)")).as("user_sum"))
+          .select(col("window.start").as("window_start"),
+            col("n"), col("user_sum"))
+          .writeStream
+          .outputMode("update")
+          .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       TopicStore.publish(s,
         MessageOps.fromEvents(onTime.filter(col("ts") < mid)),
         root, "events", 4)
@@ -1099,29 +1008,13 @@ object StreamingQueries {
       val ckpt = graft.TempRoots.create("graft-complete-ckpt")
       val outDir = root + "/totals"
       val events = Tables(s, dir, "events")
-      def runPass(): Unit = {
-        StreamHarness.withShufflePartitions(s, "8") {
-          val q = s.readStream.format("pulsarlike")
-            .option("path", root)
-            .option("serviceUrl", "pulsar://local")
-            .option("topicNames", "events")
-            .option("subscriptionInitialPosition", "Earliest")
-            .option("batchingMaxMessages", "1000000")
-            .load()
-            .groupBy(expr("try_cast(key AS BIGINT)").as("user_id"))
-            .agg(count(lit(1)).as("n"), max(col("event_time")).as("last_ts"))
-            .writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-              BatchLanding.land(df, outDir, bid)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-      }
+      def runPass(): Unit = StreamGate.run(s,
+        StreamGate.source(s, root, "events", StreamGate.PlainCap)
+          .groupBy(expr("try_cast(key AS BIGINT)").as("user_id"))
+          .agg(count(lit(1)).as("n"), max(col("event_time")).as("last_ts"))
+          .writeStream
+          .outputMode("complete")
+          .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       TopicStore.publish(s,
         MessageOps.fromEvents(events.filter(pmod(col("event_id"), lit(2)) === 0)),
         root, "events", 4)
@@ -1217,28 +1110,14 @@ object StreamingQueries {
       val dim = Tables(s, dir, "customer")
         .select(col("c_custkey").cast("string").as("key"),
           col("c_mktsegment"))
-      StreamHarness.withShufflePartitions(s, "8") {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", "1000000")
-          .load()
+      StreamGate.run(s,
+        StreamGate.source(s, root, "events", StreamGate.PlainCap)
           .join(broadcast(dim), Seq("key"))
           .select(col("message_id"), col("key"),
             col("c_mktsegment").as("segment"))
           .writeStream
           .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       BatchLanding.read(s, outDir).orderBy(col("message_id"))
     },
 
@@ -1279,41 +1158,28 @@ object StreamingQueries {
       val ckpt = graft.TempRoots.create("graft-tws-ckpt")
       val outDir = root + "/top2"
       val events = Tables(s, dir, "events")
-      def runPass(): Unit = StreamHarness.withShufflePartitions(s, "8") {
-        StreamHarness.withRocksDbStateStore(s) {
-          val src = s.readStream.format("pulsarlike")
-            .option("path", root)
-            .option("serviceUrl", "pulsar://local")
-            .option("topicNames", "events")
-            .option("subscriptionInitialPosition", "Earliest")
-            .option("batchingMaxMessages", "100000000")
-            .load()
-          // the %5==4 family publishes as raw octet-stream (ps01's
-          // parse contract) — parsed is NULL there, and a stateful op
-          // over typed rows must drop them explicitly, not NPE
-          val parsed = MessageOps
-            .contentTypeDispatch(src, MessageOps.payloadSchema)
-            .filter(col("parsed").isNotNull)
-            .select(expr("try_cast(key AS BIGINT)").as("user_id"),
-              col("parsed.value").cast("double").as("value"),
-              col("parsed.event_id").cast("long").as("event_id"))
-            .as[TwsEvent]
-          val q = parsed.groupByKey(_.user_id)
-            .transformWithState(new Top2Processor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-            .toDF()
-            .writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-              BatchLanding.land(df, outDir, bid)
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+      def runPass(): Unit = {
+        val src =
+          StreamGate.source(s, root, "events", StreamGate.SingleBatchCap)
+        // the %5==4 family publishes as raw octet-stream (ps01's
+        // parse contract) — parsed is NULL there, and a stateful op
+        // over typed rows must drop them explicitly, not NPE
+        val parsed = MessageOps
+          .contentTypeDispatch(src, MessageOps.payloadSchema)
+          .filter(col("parsed").isNotNull)
+          .select(expr("try_cast(key AS BIGINT)").as("user_id"),
+            col("parsed.value").cast("double").as("value"),
+            col("parsed.event_id").cast("long").as("event_id"))
+          .as[TwsEvent]
+        StreamGate.run(s, parsed.groupByKey(_.user_id)
+          .transformWithState(new Top2Processor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+          .toDF()
+          .writeStream
+          .outputMode("update")
+          .foreachBatch(StreamGate.land(outDir)), ckpt,
+          statePartitions = Some(8), conf = StreamGate.RocksDbStateStore)
       }
       TopicStore.publish(s,
         MessageOps.fromEvents(events.filter(pmod(col("event_id"), lit(2)) === 0)),
@@ -1484,15 +1350,8 @@ object StreamingQueries {
           lit("flush").as("value_str"),
           lit(t).as("publish_time"), lit(t).as("event_time"))
       }
-      def runPass(): Unit = StreamHarness.withShufflePartitions(s, "8") {
-        val q = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          // single batch per pass — the sentinel-choreography contract
-          .option("batchingMaxMessages", "100000000")
-          .load()
+      def runPass(): Unit = StreamGate.run(s,
+        StreamGate.source(s, root, "events", StreamGate.SingleBatchCap)
           .withWatermark("event_time", "1 hour")
           .dropDuplicatesWithinWatermark("message_id")
           .groupBy(window(col("event_time"), "1 hour"))
@@ -1502,15 +1361,7 @@ object StreamingQueries {
             col("user_sum"))
           .writeStream
           .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       TopicStore.publish(s, sentinel("2035-01-01 00:00:00"),
         root, "events", 4)
       runPass()
@@ -1591,63 +1442,48 @@ object StreamingQueries {
       // sf0.1 before this, ~3 s after
       val batchCap = math.max(200L,
         TopicStore.partitionMeta(root, "docs", 0)._1 / 4 + 1)
-      StreamHarness.withShufflePartitions(s, "8") {
-        val q0 = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "docs")
-          .option("subscriptionInitialPosition", "Earliest")
-          .option("batchingMaxMessages", batchCap.toString)
-          .load()
-        // the topic is ONE partition by the ordering contract above, so
-        // each micro-batch's source stage is a single task — and the
-        // per-doc minhash pipeline below (3-gram explode, 8 md5 mins)
-        // would run its entire 30× compute blowup on one core before
-        // the groupByKey exchange (round-12 job profile: 1.5-2 s of the
-        // ~2 s batch job). Fan the raw (doc_id, text) rows across cores
-        // FIRST — the same §2.5 unsplittable-input repair as Par.fan;
-        // per-row results are placement-independent and the stateful
-        // flag is order-independent within a batch by the group min.
-        // At production scale the same gate would still read an
-        // intentionally-1-partition ordered log, so the fan is the
-        // correct shape there too, moving raw rows once before the
-        // blowup (guide §2.3/§2.5).
-        val ws = q0.repartition(s.sparkContext.defaultParallelism)
-          .select(col("key").cast("long").as("doc_id"),
-            DedupOps.words(col("value_str")).as("ws"))
-        val sh = ws.select(col("doc_id"),
-          array_distinct(DedupOps.shingles(col("ws"), 3)).as("sh"))
-        val sig = sh.select(col("doc_id") +:
-          DedupOps.minhashSignature(col("sh")): _*)
-        val bandKeys = (0 until 4).map(b => DedupOps.bandKey(b,
-          Seq(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))))
-        val bands = sig.select(col("doc_id"),
-          explode(array(bandKeys: _*)).as("band_key"))
-        import s.implicits._
-        val flagged = bands.as[(Long, String)]
-          .groupByKey(_._2)
-          .flatMapGroupsWithState(
-            OutputMode.Append, GroupStateTimeout.NoTimeout)(
-            (_: String, it: Iterator[(Long, String)],
-                state: org.apache.spark.sql.streaming.GroupState[Long]) => {
-              val ids = it.map(_._1).toVector
-              val prior = state.getOption.getOrElse(Long.MaxValue)
-              val mn = math.min(ids.min, prior)
-              state.update(mn)
-              ids.iterator.map(d => (d, mn < d))
-            })
-          .toDF("doc_id", "earlier")
-        val q = flagged.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val q0 = StreamGate.source(s, root, "docs", batchCap)
+      // the topic is ONE partition by the ordering contract above, so
+      // each micro-batch's source stage is a single task — and the
+      // per-doc minhash pipeline below (3-gram explode, 8 md5 mins)
+      // would run its entire 30× compute blowup on one core before
+      // the groupByKey exchange (round-12 job profile: 1.5-2 s of the
+      // ~2 s batch job). Fan the raw (doc_id, text) rows across cores
+      // FIRST — the same §2.5 unsplittable-input repair as Par.fan;
+      // per-row results are placement-independent and the stateful
+      // flag is order-independent within a batch by the group min.
+      // At production scale the same gate would still read an
+      // intentionally-1-partition ordered log, so the fan is the
+      // correct shape there too, moving raw rows once before the
+      // blowup (guide §2.3/§2.5).
+      val ws = q0.repartition(s.sparkContext.defaultParallelism)
+        .select(col("key").cast("long").as("doc_id"),
+          DedupOps.words(col("value_str")).as("ws"))
+      val sh = ws.select(col("doc_id"),
+        array_distinct(DedupOps.shingles(col("ws"), 3)).as("sh"))
+      val sig = sh.select(col("doc_id") +:
+        DedupOps.minhashSignature(col("sh")): _*)
+      val bandKeys = (0 until 4).map(b => DedupOps.bandKey(b,
+        Seq(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))))
+      val bands = sig.select(col("doc_id"),
+        explode(array(bandKeys: _*)).as("band_key"))
+      import s.implicits._
+      val flagged = bands.as[(Long, String)]
+        .groupByKey(_._2)
+        .flatMapGroupsWithState(
+          OutputMode.Append, GroupStateTimeout.NoTimeout)(
+          (_: String, it: Iterator[(Long, String)],
+              state: org.apache.spark.sql.streaming.GroupState[Long]) => {
+            val ids = it.map(_._1).toVector
+            val prior = state.getOption.getOrElse(Long.MaxValue)
+            val mn = math.min(ids.min, prior)
+            state.update(mn)
+            ids.iterator.map(d => (d, mn < d))
+          })
+        .toDF("doc_id", "earlier")
+      StreamGate.run(s, flagged.writeStream
+        .outputMode("append")
+        .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
       // per-doc flag = any band flagged; the 4 band rows per doc land
       // across whichever batches served them
       BatchLanding.read(s, outDir)
@@ -1991,37 +1827,25 @@ private[queries] object StreamKllShardGate {
     val batchIds =
       java.util.Collections.synchronizedList(
         new java.util.ArrayList[Long]())
-    StreamHarness.withShufflePartitions(s, "8") {
-      val raw = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", maxPerBatch.toString)
-        .load()
-      val parsed = MessageOps
-        .contentTypeDispatch(raw, MessageOps.payloadSchema)
-        .select(
-          coalesce(col("parsed.event_type"),
-            split_part(col("value_str"), lit(" "), lit(1)))
-            .as("event_type"),
-          coalesce(col("parsed.value").cast("double"),
-            expr("try_cast(split_part(value_str, ' ', 2) AS DOUBLE)"))
-            .as("value"))
-        .filter(col("event_type").isNotNull && col("value").isNotNull)
-      val q = parsed.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          graft.operators.SketchOps.writeKllShard(df,
-            col("event_type"), col("value"), shardRoot, bid)
-          batchIds.add(bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val raw = StreamGate.source(s, root, "events", maxPerBatch)
+    val parsed = MessageOps
+      .contentTypeDispatch(raw, MessageOps.payloadSchema)
+      .select(
+        coalesce(col("parsed.event_type"),
+          split_part(col("value_str"), lit(" "), lit(1)))
+          .as("event_type"),
+        coalesce(col("parsed.value").cast("double"),
+          expr("try_cast(split_part(value_str, ' ', 2) AS DOUBLE)"))
+          .as("value"))
+      .filter(col("event_type").isNotNull && col("value").isNotNull)
+    StreamGate.run(s, parsed.writeStream
+      .outputMode("append")
+      .foreachBatch { (df: DataFrame, bid: Long) =>
+        graft.operators.SketchOps.writeKllShard(df,
+          col("event_type"), col("value"), shardRoot, bid)
+        batchIds.add(bid)
+        ()
+      }, ckpt, statePartitions = Some(8))
     import scala.jdk.CollectionConverters._
     batchIds.asScala.toSeq
   }
@@ -2039,35 +1863,23 @@ private[queries] object StreamSketchGate {
   def pass(s: SparkSession, root: String, ckpt: String,
       storePath: String, maxPerBatch: Long): Long = {
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    StreamHarness.withShufflePartitions(s, "8") {
-      val raw = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", maxPerBatch.toString)
-        .load()
-      val parsed = MessageOps
-        .contentTypeDispatch(raw, MessageOps.payloadSchema)
-        .select(
-          coalesce(col("parsed.event_type"),
-            split_part(col("value_str"), lit(" "), lit(1)))
-            .as("event_type"),
-          expr("try_cast(key AS BIGINT)").as("user_id"))
-        .filter(col("event_type").isNotNull && col("user_id").isNotNull)
-      val q = parsed.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          graft.operators.SketchOps.mergeThetaIntoStore(df,
-            col("event_type"), col("user_id"), storePath)
-          batches.incrementAndGet()
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val raw = StreamGate.source(s, root, "events", maxPerBatch)
+    val parsed = MessageOps
+      .contentTypeDispatch(raw, MessageOps.payloadSchema)
+      .select(
+        coalesce(col("parsed.event_type"),
+          split_part(col("value_str"), lit(" "), lit(1)))
+          .as("event_type"),
+        expr("try_cast(key AS BIGINT)").as("user_id"))
+      .filter(col("event_type").isNotNull && col("user_id").isNotNull)
+    StreamGate.run(s, parsed.writeStream
+      .outputMode("append")
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        graft.operators.SketchOps.mergeThetaIntoStore(df,
+          col("event_type"), col("user_id"), storePath)
+        batches.incrementAndGet()
+        ()
+      }, ckpt, statePartitions = Some(8))
     batches.get()
   }
 }
@@ -2192,18 +2004,7 @@ private[queries] object StreamOuterJoinGate {
 
     val payloadSchema = MessageOps.payloadSchema
     def side(eventType: String, idAs: String, tsAs: String) = {
-      val raw = s.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        // single-batch-per-pass is the determinism contract of the
-        // sentinel choreography: a pass that splits would run its tail
-        // batch under the sentinel-advanced watermark and silently drop
-        // real rows. The limit must exceed any fixture size (10x soak
-        // included), so it is 1e8, not the 1e6 the plain loops use.
-        .option("batchingMaxMessages", "100000000")
-        .load()
+      val raw = StreamGate.source(s, root, "events", StreamGate.SingleBatchCap)
       MessageOps.contentTypeDispatch(raw, payloadSchema)
         .filter(col("parsed.event_type") === eventType)
         .select(
@@ -2229,46 +2030,34 @@ private[queries] object StreamOuterJoinGate {
       // discards anyway (the 2035 sentinels' own unmatched-outer
       // rows). Gated output is byte-identical; one full batch of
       // store ceremony per pass is saved.
-      StreamHarness.withConf(s,
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      StreamHarness.withShufflePartitions(s, "4") {
-        val clicks = side("click", "click_id", "click_ts")
-        val buys = side("purchase", "buy_id", "buy_ts")
-        val joined = clicks.join(buys,
-            col("click_id_user") === col("buy_id_user") &&
-            col("click_ts") >= col("buy_ts") - expr("INTERVAL 1 HOUR") &&
-            col("click_ts") <= col("buy_ts"),
-            joinType)
-        // a semi join's output carries only the left side's columns
-        val projected =
-          if (joinType == "left_semi")
-            joined.select(col("click_id"),
-              col("click_id_user").as("user_id"), col("click_ts"))
-          else
-            joined.select(col("click_id"), col("buy_id"),
-              coalesce(col("click_id_user"), col("buy_id_user")).as("user_id"),
-              col("click_ts"), col("buy_ts"))
-        val out =
-          if (windowAgg)
-            projected
-              .groupBy(window(col("click_ts"), "1 day"))
-              .agg(count(lit(1)).as("n"),
-                sum(col("user_id")).as("user_sum"))
-              .select(col("window.start").as("window_start"),
-                col("n"), col("user_sum"))
-          else projected
-        val q = out
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (ds: org.apache.spark.sql.DataFrame, bid: Long) =>
-            BatchLanding.land(ds, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      }
+      val clicks = side("click", "click_id", "click_ts")
+      val buys = side("purchase", "buy_id", "buy_ts")
+      val joined = clicks.join(buys,
+          col("click_id_user") === col("buy_id_user") &&
+          col("click_ts") >= col("buy_ts") - expr("INTERVAL 1 HOUR") &&
+          col("click_ts") <= col("buy_ts"),
+          joinType)
+      // a semi join's output carries only the left side's columns
+      val projected =
+        if (joinType == "left_semi")
+          joined.select(col("click_id"),
+            col("click_id_user").as("user_id"), col("click_ts"))
+        else
+          joined.select(col("click_id"), col("buy_id"),
+            coalesce(col("click_id_user"), col("buy_id_user")).as("user_id"),
+            col("click_ts"), col("buy_ts"))
+      val out =
+        if (windowAgg)
+          projected
+            .groupBy(window(col("click_ts"), "1 day"))
+            .agg(count(lit(1)).as("n"),
+              sum(col("user_id")).as("user_sum"))
+            .select(col("window.start").as("window_start"),
+              col("n"), col("user_sum"))
+        else projected
+      StreamGate.run(s, out.writeStream.foreachBatch(StreamGate.land(outDir)),
+        ckpt, statePartitions = Some(4),
+        conf = Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
     }
     runPass()
     // second pass on the same checkpoint: one more trigger after the
@@ -2345,40 +2134,20 @@ private[queries] object StreamingWindowGate {
       // every late row landed — 15 of 15 ws11 day rows over-counted).
       // The soj gate survives because its pass 2 only needs outer-row
       // FLUSH, which the commit-log watermark recovery provides.
-      StreamHarness.withShufflePartitions(s, "8") {
-        val src = s.readStream.format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "events")
-          .option("subscriptionInitialPosition", "Earliest")
-          // single-batch-per-pass is the determinism contract of the
-          // sentinel choreography: a pass that splits would run its tail
-          // batch under the sentinel-advanced watermark and silently drop
-          // real rows. The limit must exceed any fixture size (10x soak
-          // included), so it is 1e8, not the 1e6 the plain loops use.
-          .option("batchingMaxMessages", "100000000")
-          .load()
-          // observed BEFORE the watermark node: counts every delivered
-          // row (late ones included) in the same pass as the work — the
-          // per-stage invariant counter a 100 TB job emits for free
-          .observe("ingest", count(lit(1)).as("rows_seen"))
-          .withWatermark("event_time", "1 hour")
-        val q = agg(src)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            BatchLanding.land(df, outDir, bid)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress.foreach { p =>
-          val om = p.observedMetrics
-          if (om.containsKey("ingest")) observed += om.get("ingest").getLong(0)
-          dropped += p.stateOperators.map(_.numRowsDroppedByWatermark).sum
-        }
+      val src = StreamGate.source(s, root, "events", StreamGate.SingleBatchCap)
+        // observed BEFORE the watermark node: counts every delivered
+        // row (late ones included) in the same pass as the work — the
+        // per-stage invariant counter a 100 TB job emits for free
+        .observe("ingest", count(lit(1)).as("rows_seen"))
+        .withWatermark("event_time", "1 hour")
+      val q = StreamGate.run(s, agg(src)
+        .writeStream
+        .outputMode("append")
+        .foreachBatch(StreamGate.land(outDir)), ckpt, statePartitions = Some(8))
+      q.recentProgress.foreach { p =>
+        val om = p.observedMetrics
+        if (om.containsKey("ingest")) observed += om.get("ingest").getLong(0)
+        dropped += p.stateOperators.map(_.numRowsDroppedByWatermark).sum
       }
     }
 
@@ -2393,45 +2162,5 @@ private[queries] object StreamingWindowGate {
     runPass()
     (BatchLanding.read(s, outDir).orderBy(orderCols.map(col): _*),
       Counters(observed, dropped))
-  }
-}
-
-/** State-store-sized shuffle partitions for a stream loop's duration,
-  * restored afterwards even on failure. One definition — a hand-copied
-  * save/set/finally that forgets the restore would silently leak the
-  * override into every later query in the shared Verify/Bench session.
-  */
-private[queries] object StreamHarness {
-  def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession,
-      n: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Scoped session-conf override (same restore discipline). */
-  def withConf[T](s: org.apache.spark.sql.SparkSession, key: String,
-      v: String)(body: => T): T = {
-    val prev = util.Try(Option(s.conf.get(key))).toOption.flatten
-    s.conf.set(key, v)
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** transformWithState requires the RocksDB state-store provider —
-    * scoped to the gate's duration and restored even on failure, same
-    * discipline as the shuffle-partition override above. */
-  def withRocksDbStateStore[T](s: org.apache.spark.sql.SparkSession)
-      (body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body
-    finally s.conf.set(key, prev)
   }
 }

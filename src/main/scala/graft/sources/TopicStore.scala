@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-backed topic store — the local stand-in for the external broker
@@ -330,27 +330,71 @@ object TopicStore {
     * Appends after existing data; offsets stay contiguous per partition.
     */
   def publish(spark: SparkSession, df: DataFrame, root: String, topic: String,
-      numPartitions: Int): Unit =
-    publishTo(spark, df, root, topic, numPartitions, retrySub = None)
-
-  /** Append a DataFrame of already-bumped redeliveries to a
-    * subscription's retry log (A16). Same routing/ordering as `publish`
-    * — a key's retries land in the retry log's partition p, matching the
-    * main log's p, so merged delivery keeps per-key locality. */
-  def publishRetries(spark: SparkSession, df: DataFrame, root: String,
-      topic: String, sub: String, numPartitions: Int): Unit =
-    publishTo(spark, df, root, topic, numPartitions, retrySub = Some(sub))
-
-  private def publishTo(spark: SparkSession, df: DataFrame, root: String,
-      topic: String, requestedPartitions: Int, retrySub: Option[String]): Unit = {
-    val numPartitions = ensureNumPartitions(root, topic, requestedPartitions)
-    val dir = retrySub.map(retryDir(root, topic, _)).getOrElse(topicDir(root, topic))
+      numPartitions: Int): Unit = {
+    val parts = ensureNumPartitions(root, topic, numPartitions)
+    val dir = topicDir(root, topic)
     Files.createDirectories(dir)
+    val dirStr = dir.toAbsolutePath.toString
+    // one writer task per store partition — offsets are assigned inside
+    // the single task that owns the partition file (contiguous, ordered).
+    // __p leads the sort so each store partition arrives as one
+    // consecutive run and the writer can stream it in bounded chunks —
+    // per-partition publish order is unchanged (ties on __p keep the
+    // (publish_time, message_id) order).
+    sortedByPartition(canonical(df).withColumn("__p", routeExpr(lit(parts))),
+        parts)
+      .foreachPartition { (it: Iterator[Row]) =>
+        writeRuns(it)(writeGroup(dirStr, _, _))
+      }
+  }
+
+  /** Publish nacked rows in ONE shuffle-and-write job: rows where
+    * `toDlq` holds go to `dlqTopic`, the rest to `topic`'s retry log for
+    * `sub` (A16). Routing and per-partition order are `publish`'s, each
+    * side modulo its own partition count — a key's retries land in the
+    * retry log's partition p, matching the main log's p, so merged
+    * delivery keeps per-key locality. Returns (retried, dead) as counted
+    * by the write tasks that appended them. The DLQ topic is created by
+    * the first task that appends a dead row, so a nack in which nothing
+    * dies leaves no DLQ behind. */
+  def publishRetriesOrDlq(df: DataFrame, toDlq: Column, root: String,
+      topic: String, sub: String, dlqTopic: String): (Long, Long) = {
+    val liveParts = numPartitions(root, topic)
+    val deadParts = numPartitions(root, dlqTopic, default = liveParts)
+    val liveDir = retryDir(root, topic, sub).toAbsolutePath.toString
+    val deadDir = topicDir(root, dlqTopic).toAbsolutePath.toString
+    // slots [0, liveParts) are retry partitions, the rest DLQ partitions
+    val slot = when(toDlq, routeExpr(lit(deadParts)) + liveParts)
+      .otherwise(routeExpr(lit(liveParts)))
+    val counts = sortedByPartition(canonical(df).withColumn("__p", slot),
+        liveParts + deadParts)
+      .mapPartitions { (it: Iterator[Row]) =>
+        var live, dead = 0L
+        writeRuns(it) { (slot, rows) =>
+          val isLive = slot < liveParts
+          val (t, n, d, p) =
+            if (isLive) (topic, liveParts, liveDir, slot)
+            else (dlqTopic, deadParts, deadDir, slot - liveParts)
+          require(ensureNumPartitions(root, t, n) == n,
+            s"topic $t changed its partition count during a nack")
+          writeGroup(d, p, rows)
+          if (isLive) live += rows.size else dead += rows.size
+        }
+        Iterator((live, dead))
+      }(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.scalaLong,
+        org.apache.spark.sql.Encoders.scalaLong))
+      .collect()
+    (counts.map(_._1).sum, counts.map(_._2).sum)
+  }
+
+  /** The stored message shape, columns missing from `df` defaulted. */
+  private def canonical(df: DataFrame): DataFrame = {
     val cols = df.columns.toSet
     def orElse(name: String, default: org.apache.spark.sql.Column) =
       if (cols.contains(name)) col(name) else default
 
-    val canon = df.select(
+    df.select(
       orElse("message_id", lit(null).cast("string")).as("message_id"),
       orElse("key", lit(null).cast("string")).as("key"),
       // same per-row precedence as the DSv2 writer (PulsarLikeSink):
@@ -366,26 +410,17 @@ object TopicStore {
       orElse("event_time", lit(null).cast("timestamp")).as("event_time"),
       orElse("redelivery_count", lit(0)).cast("int").as("redelivery_count"),
       orElse("content_type", lit(null).cast("string")).as("content_type"))
-
-    // Pulsar key routing: hash(key) → partition; keyless rows spread by
-    // value hash. xxhash64 is stable across executors/runs.
-    val routed = canon.withColumn("__p",
-      pmod(xxhash64(coalesce(col("key"), base64(col("value")))),
-        lit(numPartitions)).cast("int"))
-
-    val dirStr = dir.toAbsolutePath.toString
-    // one writer task per store partition — offsets are assigned inside
-    // the single task that owns the partition file (contiguous, ordered).
-    // __p leads the sort so each store partition arrives as one
-    // consecutive run and the writer can stream it in bounded chunks —
-    // per-partition publish order is unchanged (ties on __p keep the
-    // (publish_time, message_id) order).
-    routed.repartition(numPartitions, col("__p"))
-      .sortWithinPartitions(col("__p"), col("publish_time"), col("message_id"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        writePartition(dirStr, it)
-      }
   }
+
+  /** Pulsar key routing: hash(key) → partition; keyless rows spread by
+    * value hash. xxhash64 is stable across executors/runs. */
+  private def routeExpr(numPartitions: Column): Column =
+    pmod(xxhash64(coalesce(col("key"), base64(col("value")))),
+      numPartitions).cast("int")
+
+  private def sortedByPartition(routed: DataFrame, tasks: Int): DataFrame =
+    routed.repartition(tasks, col("__p"))
+      .sortWithinPartitions(col("__p"), col("publish_time"), col("message_id"))
 
   /** Max rows buffered per append under the partition-file lock: bounds
     * writer-task memory to O(chunk), not O(partition) — a store
@@ -394,7 +429,8 @@ object TopicStore {
     * persisted meta under the lock. */
   private val WriteChunk = 10000
 
-  private def writePartition(dir: String, it: Iterator[Row]): Unit = {
+  private def writeRuns(it: Iterator[Row])(write: (Int, Vector[Row]) => Unit)
+      : Unit = {
     // a task may receive rows of several store partitions (hash
     // co-location), each as a consecutive run of the __p-led sort —
     // stream each run into bounded chunk appends, never materializing
@@ -403,7 +439,7 @@ object TopicStore {
     val buf = Vector.newBuilder[Row]
     var bufN = 0
     def flush(): Unit = if (bufN > 0) {
-      writeGroup(dir, curP, buf.result()); buf.clear(); bufN = 0
+      write(curP, buf.result()); buf.clear(); bufN = 0
     }
     it.foreach { r =>
       val p = r.getAs[Int]("__p")
@@ -539,13 +575,24 @@ object TopicStore {
       val lineBase = partitionBaseIn(dir, p)
       val idxJson = index.result()
         .map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")
-      Files.writeString(metaFile,
+      writeMeta(dir, p,
         s"""{"count":$off,"bytes":$bytes,"base":$lineBase,""" +
           s""""maxPt":$maxPt,"tsorted":$tsorted,""" +
-          s""""index":$idxJson,"txn":${txnJson(txn1)}}""",
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+          s""""index":$idxJson,"txn":${txnJson(txn1)}}""")
     } finally { lock.release(); ch.close() }
     }
+  }
+
+  /** Replace partition p's meta sidecar in one step: temp file, then
+    * ATOMIC_MOVE (rename(2)), the cursor files' discipline. Readers poll
+    * the meta without the lock, so an in-place rewrite would let them
+    * read a truncated or half-written file. Call under the partition
+    * lock. */
+  private def writeMeta(dir: Path, p: Int, json: String): Unit = {
+    val tmp = Files.createTempFile(dir, s".part-$p.meta", ".tmp")
+    Files.writeString(tmp, json)
+    Files.move(tmp, dir.resolve(s"part-$p.meta"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Reclaim the delivered prefix of a retry partition: drop all lines
@@ -569,7 +616,6 @@ object TopicStore {
 
   private def truncateIn(dir: Path, p: Int, upTo: Long): Unit = {
     val dataFile = dir.resolve(s"part-$p.jsonl")
-    val metaFile = dir.resolve(s"part-$p.meta")
     val lockFile = dir.resolve(s"part-$p.lock")
     if (!Files.exists(dataFile)) return
     val monitor = monitors.computeIfAbsent(
@@ -620,10 +666,9 @@ object TopicStore {
         val timeJson =
           if (mp == Long.MinValue) ""
           else s""""maxPt":$mp,"tsorted":$ts,"""
-        Files.writeString(metaFile,
+        writeMeta(dir, p,
           s"""{"count":$count,"bytes":$bytes,"base":$newBase,$timeJson""" +
-            s""""index":$idxJson,"txn":${txnJson(partitionTxnIn(dir, p))}}""",
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+            s""""index":$idxJson,"txn":${txnJson(partitionTxnIn(dir, p))}}""")
       } finally { lock.release(); ch.close() }
     }
   }

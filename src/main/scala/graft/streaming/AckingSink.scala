@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.TopicStore
 
@@ -31,16 +30,16 @@ import graft.sources.TopicStore
   */
 object AckingSink {
 
-  /** Split a processed batch by a failure predicate and route: failures
-    * below the DLQ threshold go to the subscription's retry log (delayed
-    * redelivery via the source's cursor merge); at/above it they go to
-    * the DLQ topic. Returns (redelivered, dead) counts. Call from inside
-    * foreachBatch.
+  /** Route a batch's failed rows: below the DLQ threshold they go to
+    * the subscription's retry log (delayed redelivery via the source's
+    * cursor merge); at/above it they go to the DLQ topic. Returns
+    * (redelivered, dead) counts. Call from inside foreachBatch.
     *
-    * One evaluation of the failed lineage: the bumped frame is persisted,
-    * `retry_at` is stamped from a single driver-side literal (every
-    * routed row carries the same stamp), and counts come from the same
-    * persisted data the publishes read. */
+    * One evaluation of the failed lineage: every row is bumped and
+    * stamped with one driver-side `retry_at` literal, tagged retry or
+    * DLQ, and both sides are written by a single shuffle-and-write job
+    * ([[TopicStore.publishRetriesOrDlq]]) whose tasks count what they
+    * appended. */
   def nack(spark: SparkSession, failed: DataFrame, root: String,
       topic: String, subscription: String = "sub-default",
       maxRedeliverCount: Int = 5, nackDelayMs: Long = 0L,
@@ -56,23 +55,8 @@ object AckingSink {
       .withColumn("properties", map_concat(
         map_filter(col("properties"), (k, _) => k =!= "retry_at"),
         map(lit("retry_at"), lit(retryAtMs.toString))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dead = bumped.filter(col("redelivery_count") >= maxRedeliverCount)
-      val live = bumped.filter(col("redelivery_count") < maxRedeliverCount)
-      val counts = bumped
-        .groupBy((col("redelivery_count") >= maxRedeliverCount).as("dead"))
-        .count().collect()
-        .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val deadN = counts.getOrElse(true, 0L)
-      val liveN = counts.getOrElse(false, 0L)
-      val parts = TopicStore.numPartitions(root, topic)
-      if (deadN > 0)
-        TopicStore.publish(spark, dead, root,
-          dlqTopic.getOrElse(s"$topic-dlq"), parts)
-      if (liveN > 0)
-        TopicStore.publishRetries(spark, live, root, topic, subscription, parts)
-      (liveN, deadN)
-    } finally { bumped.unpersist(); () }
+    TopicStore.publishRetriesOrDlq(bumped,
+      col("redelivery_count") >= maxRedeliverCount, root, topic,
+      subscription, dlqTopic.getOrElse(s"$topic-dlq"))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * Spark 4, so libraries shipping native Catalyst expressions expose
   * them through a shim in the `org.apache.spark.sql` namespace — the
   * established pattern for Spark extension libraries. */
-object ColumnBridge {
+object ColumnBridge extends org.apache.spark.internal.Logging {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   /** Eagerly convert a Column to its Catalyst expression.
@@ -30,9 +30,18 @@ object ColumnBridge {
   /** Block until the async listener bus has delivered every queued
     * event (`SparkContext.listenerBus` is `private[spark]`) — lets a
     * measurement listener read a complete job log instead of racing a
-    * fixed sleep against event delivery. */
+    * fixed sleep against event delivery. Gives up with a warning after
+    * `ListenerDrainTimeoutMs`: a wedged listener degrades the log it
+    * feeds, it does not hang the measurement. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
+    try sc.listenerBus.waitUntilEmpty(ListenerDrainTimeoutMs)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        logWarning(s"listener bus not empty after $ListenerDrainTimeoutMs ms;" +
+          " the job log read next may be incomplete")
+    }
+
+  val ListenerDrainTimeoutMs: Long = 10000L
 
   /** Eager local checkpoint that PRESERVES outputPartitioning,
     * outputOrdering, and statistics.

@@ -26,6 +26,33 @@ class HardeningRegressionSpec extends SparkSpec {
       root, "t", parts)
   }
 
+  test("a meta poller never reads a torn sidecar while appends rewrite it") {
+    // latestOffset polls partitionMetaIn without the partition lock; an
+    // in-place meta rewrite let it read an empty or half-written file
+    // and die with a NullPointerException
+    val root = tmpDir("meta-race")
+    val dir = TopicStore.topicDir(root, "t")
+    def append(i: Int): Unit = TopicStore.append(root, "t", 0,
+      Seq(TopicStore.Msg(null, s"k$i", "eA==", Map.empty,
+        1700000000000000L + i, 1700000000000000L + i, 0, "text/plain")))
+    append(0)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val polls = new java.util.concurrent.atomic.AtomicLong()
+    val poller = new Thread(() =>
+      try while (!stop.get()) {
+        TopicStore.partitionMetaIn(dir, 0)
+        polls.incrementAndGet()
+      } catch { case t: Throwable => failure.set(t) })
+    poller.start()
+    try (1 until 3000).foreach(append)
+    finally { stop.set(true); poller.join() }
+    assert(failure.get() == null,
+      s"poller failed after ${polls.get()} polls: ${failure.get()}")
+    assert(polls.get() > 0)
+    assert(TopicStore.partitionMetaIn(dir, 0)._1 == 3000L)
+  }
+
   test("byte-capped admission floors at one row per trigger instead of stalling") {
     val root = tmpDir("adm-floor")
     publishRows(root, (0 until 6).map(i => (s"k$i", "x" * 200)), parts = 1)

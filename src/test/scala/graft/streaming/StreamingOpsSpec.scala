@@ -221,6 +221,29 @@ class StreamingOpsSpec extends SparkSpec {
     assert(dlq(0).getAs[Int]("redelivery_count") == 5)
   }
 
+  test("nack creates the DLQ topic only once a row dies (A17)") {
+    import spark.implicits._
+    val root = tmpDir("store")
+    def failed(redeliveryCount: Int) =
+      Seq(("0:0:0:0", "k1", "bad-1", redeliveryCount))
+        .toDF("message_id", "key", "value_str", "redelivery_count")
+        .withColumn("properties", map().cast("map<string,string>"))
+        .withColumn("publish_time",
+          lit(new java.sql.Timestamp(1700000000000L)))
+        .withColumn("content_type", lit("text/plain"))
+    val dlqDir = TopicStore.topicDir(root, "events-dlq")
+
+    assert(AckingSink.nack(spark, failed(0), root, "events") == ((1L, 0L)))
+    assert(!java.nio.file.Files.exists(dlqDir),
+      "a nack with no dead row must not create the DLQ topic")
+
+    assert(AckingSink.nack(spark, failed(4), root, "events") == ((0L, 1L)))
+    assert(TopicStore.partitionIds(root, "events-dlq").map(p =>
+      TopicStore.partitionMeta(root, "events-dlq", p)._1).sum == 1L)
+    assert(TopicStore.numPartitions(root, "events-dlq") ==
+      TopicStore.numPartitions(root, "events"))
+  }
+
   test("retry-log entries keep the main log's key->partition affinity (A3/A16)") {
     import spark.implicits._
     val root = tmpDir("store")
