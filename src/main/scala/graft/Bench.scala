@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: one JSON line with per-query wall times.
   * A warmup query absorbs JVM/codegen/IO warm-up so per-query numbers
   * are comparable; queries run in name order for stable attribution.
@@ -75,39 +74,7 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // backstop for anything Stage.drain can't see (e.g. shuffle
-      // files of dead stages): force a periodic driver GC so the
-      // ContextCleaner actually runs during a long shared-JVM bench
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // Spark 4.1's checkpoint file-checksum writes a sibling .checksum
-      // file for EVERY offset/commit/state file — doubling the tiny-file
-      // count of every micro-batch (8 state partitions x ~3 files x
-      // N batches x 2 passes per gate). The stream gates here run on
-      // one-shot throwaway checkpoints where corruption detection buys
-      // nothing; a deployment with durable checkpoints can re-enable it.
-      // Correctness-neutral (pure I/O integrity feature); measured ~5-12%
-      // off the stateful streaming gates (OPTIMIZATION_r11.md).
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Hadoop's default `file:` filesystem is ChecksumFileSystem: every
-      // task output file gets a sibling .crc written on write and
-      // VERIFIED on read-back. The stream gates' foreachBatch landings
-      // are write-once scratch handoffs on local disk, re-read once in
-      // the same process — the checksum layer doubles their tiny-file
-      // count and re-hashes every byte both ways (round-12 A/B:
-      // ws10 7.3→3.7 s, ws05 3.9→2.5 s, ws04 7.4→5.8 s). Same class as
-      // the streaming checkpoint-checksum disable above: local-scratch
-      // I/O integrity, not results; HDFS/S3 deployments never use this
-      // FS and keep their own integrity layers.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NoChecksumLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cores)
     // warmup: touch every table + exercise codegen/shuffle machinery
     Tables.names.foreach { t =>
       try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
@@ -129,19 +96,7 @@ object Bench {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
-        // unload state-store providers between runs (outside the
-        // timer): every stream-loop query runs on a one-shot checkpoint,
-        // so cached HDFSBackedStateStoreProvider maps and their
-        // maintenance work are dead weight that taxes every LATER query
-        // in this shared JVM — a deployment runs one query per cluster
-        try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        catch { case _: Throwable => () }
-        // release this rep's staged localCheckpoint blocks (also
-        // outside the timer): un-drained they accumulate across the
-        // whole run — hundreds of dead block sets squeezing the
-        // storage pool, the round-6 adjudicated mechanism for a 6×
-        // recorded blowup on the heaviest staged queries
-        graft.operators.Stage.drain(spark)
+        GraftSession.release(spark)
         dt
       }
       val (med, extra) = measureWithRescue(reps, rep, fresh.get(name))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (guide §1): per-query plan
   * dumps and isolated timings, run OUTSIDE the official Bench so the
   * committed recording's methodology stays untouched.
@@ -15,29 +13,13 @@ import org.apache.spark.sql.SparkSession
   *     write instead (guide §1.4) to expose work count() lets the
   *     optimizer prune.
   *
-  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS exactly like Bench.
+  * Reads SPARK_GRAFT_SF_DIR like Bench and runs in its session
+  * ([[GraftSession]]).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // match Bench's session config so probe timings are comparable
-      // (env knob so a before/after A/B can restore the old default)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_CHECKSUM", "false"))
-      // A/B knob for the Hadoop local-FS checksum layer; default
-      // matches Bench (raw — see Bench.scala)
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_FILE_IMPL",
-          "graft.hadoop.NoChecksumLocalFileSystem"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cores)
     Tables.names.foreach { t =>
       try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
     }
@@ -51,7 +33,7 @@ object Probe {
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$outDir/$name.txt"), txt)
           println(s"[probe] wrote $outDir/$name.txt")
-          cleanup(spark)
+          GraftSession.release(spark)
         }
       case "time" :: rest0 =>
         val (noop, rest) =
@@ -75,7 +57,7 @@ object Probe {
                 case e: Throwable => println(s"[probe] $name ERR $e"); false
               }
             val dt = (System.nanoTime() - t0) / 1e9
-            cleanup(spark)
+            GraftSession.release(spark)
             (dt, ok)
           }
           val med = Bench.median(runs.collect { case (t, true) => t })
@@ -134,7 +116,7 @@ object Probe {
               println(f"[jobs]   job=$id%-4d ${ms / 1000.0}%7.3f s  tasks=$nTasks%-5d $desc")
             }
           }
-          cleanup(spark)
+          GraftSession.release(spark)
         }
         spark.sparkContext.removeSparkListener(listener)
       case other =>
@@ -148,11 +130,5 @@ object Probe {
     names.flatMap { n =>
       if (all.contains(n)) Seq(n) else all.filter(_.startsWith(n))
     }.distinct
-  }
-
-  private def cleanup(spark: SparkSession): Unit = {
-    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case _: Throwable => () }
-    graft.operators.Stage.drain(spark)
   }
 }

@@ -1,48 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName...] — extra names restrict the
-    // dump to those queries (dev iteration); the driver passes two args
+    // dump and oracle_sql.json to those queries (dev iteration, checked
+    // with tools/check_oracle.py as usual); the driver passes two args
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: no checksum siblings for one-shot stream-gate
-      // checkpoints (see Bench.scala) — keeps the verified config
-      // identical to the benched one
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // raw local FS, matching Bench (see Bench.scala — the verified
-      // config stays identical to the benched one)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NoChecksumLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    def selected[V](m: Map[String, V]) =
+      m.filter { case (name, _) => only.isEmpty || only.contains(name) }
+    selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // stream-loop queries run on one-shot checkpoints: unload their
-      // cached state-store providers so they don't tax later queries
-      // (same hygiene as Bench)
-      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case _: Throwable => () }
-      // and release the query's staged localCheckpoint blocks — the
-      // 196-query sweep otherwise carries every staged block set of
-      // every prior query in one storage pool
-      graft.operators.Stage.drain(spark)
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -56,7 +33,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = selected(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * One round = min-label propagation over the edge list plus a pointer
   * jump (`lab := lab(lab)`), which halves the remaining path per round
   * — O(log diameter) rounds (p06's original design note). Each
-  * generation is lineage-truncated via [[Stage.stage]]; superseded
-  * generations are dereferenced on rebind and the ContextCleaner
-  * reclaims their blocks, so live storage stays O(one generation).
+  * generation is lineage-truncated via [[Stage.stageExact]], which
+  * registers it in `Stage`'s staged set: every generation's blocks stay
+  * live until the caller's [[Stage.drain]], so live storage is
+  * O(rounds × one generation), not O(one generation).
   *
   * Convergence probe (round-12 optimization, guide §1.2 "per-task
   * work" / §2.4 "remove shuffles outright"): labels are node ids and
@@ -32,7 +33,13 @@ object MinLabel {
   /** Iterate to the fixpoint (or `maxRounds`) and return the final
     * (id, lab) frame. `start` must have columns (id, lab) with lab
     * initialized to id; `edges` must have columns (src, dst) and be
-    * cheap to rescan (the callers pass a staged edge list). */
+    * cheap to rescan (the callers pass a staged edge list).
+    *
+    * Precondition, unchecked: every edge `src` and `dst` is drawn from
+    * `start.id`. The sum-convergence probe is sound only under it — an
+    * endpoint outside the node set joins the label frame as a new node,
+    * raising the sum while other labels lower it, so two rounds can sum
+    * equal before the fixpoint and the loop stops early. */
   def fixpoint(start: DataFrame, edges: DataFrame,
       maxRounds: Int = 20): DataFrame = {
     def labSum(df: DataFrame): Long = {

@@ -79,7 +79,8 @@ object Stage {
   /** Like [[stage]], but the materialized frame KEEPS its final
     * outputPartitioning/ordering and carries EXACT statistics (row
     * count from the materializing pass, bytes from the persisted
-    * blocks) — `Dataset.localCheckpoint` reports UnknownPartitioning
+    * blocks; none if the block manager has no entry for them) —
+    * `Dataset.localCheckpoint` reports UnknownPartitioning
     * and default (huge) stats because it captures the unfinalized
     * adaptive plan (ColumnBridge.localCheckpointKeepingLayout has the
     * mechanics). Consumers that re-aggregate or re-join on the staged

@@ -570,8 +570,18 @@ object TopicStore {
         bytes += line.getBytes(StandardCharsets.UTF_8).length + 1
         off += 1
       }
-      Files.writeString(dataFile, sb.toString,
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      // a crash between an earlier append's data write and its meta
+      // rewrite leaves uncommitted lines past meta `bytes`; cut them off
+      // first, or this append's meta would serve them as committed
+      val data = java.nio.channels.FileChannel.open(dataFile,
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try {
+        if (data.size() > bytes0) data.truncate(bytes0)
+        data.position(data.size())
+        val buf = java.nio.ByteBuffer.wrap(
+          sb.toString.getBytes(StandardCharsets.UTF_8))
+        while (buf.hasRemaining) data.write(buf)
+      } finally data.close()
       val lineBase = partitionBaseIn(dir, p)
       val idxJson = index.result()
         .map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")

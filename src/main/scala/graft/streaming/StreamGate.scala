@@ -76,7 +76,9 @@ object StreamGate {
   def land(outDir: String): (DataFrame, Long) => Unit =
     (df, bid) => BatchLanding.land(df, outDir, bid)
 
-  private def withConf[T](s: SparkSession, kvs: Seq[(String, String)])
+  /** Run `body` with each of `kvs` set on the session, restoring the
+    * previous values (or unsetting) afterwards even on failure. */
+  def withConf[T](s: SparkSession, kvs: Seq[(String, String)])
       (body: => T): T = kvs match {
     case Seq() => body
     case (k, v) +: rest =>

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.storage.RDDInfo
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is `private[sql]` in
   * Spark 4, so libraries shipping native Catalyst expressions expose
@@ -43,6 +44,20 @@ object ColumnBridge extends org.apache.spark.internal.Logging {
 
   val ListenerDrainTimeoutMs: Long = 10000L
 
+  /** Statistics of a just-persisted checkpoint of `rows` rows: EXACT
+    * (row count from the materializing pass, bytes from its block
+    * manager entry `stored`), so joins against a staged table get the
+    * strategy the optimizer would pick with the truth in hand. No entry
+    * → no statistics: the frame is planned stats-blind (default size,
+    * never broadcast) rather than stats-wrong — a guessed size such as
+    * `rows * 64` understates wide rows and can flip a join against the
+    * frame to broadcast. */
+  def checkpointStats(rows: Long, stored: Option[RDDInfo])
+      : Option[org.apache.spark.sql.catalyst.plans.logical.Statistics] =
+    stored.map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      sizeInBytes = BigInt(i.memSize + i.diskSize).max(BigInt(rows)),
+      rowCount = Some(BigInt(rows))))
+
   /** Eager local checkpoint that PRESERVES outputPartitioning,
     * outputOrdering, and statistics.
     *
@@ -59,8 +74,11 @@ object ColumnBridge extends org.apache.spark.internal.Logging {
     * partitioning/ordering/stats to the new output attributes)
     * captures the FINAL plan's partitioning instead. Same lifecycle
     * as a plain localCheckpoint: the returned frame scans the
-    * persisted blocks, `rdd.unpersist` releases them. */
-  def localCheckpointKeepingLayout(df: org.apache.spark.sql.DataFrame)
+    * persisted blocks, `rdd.unpersist` releases them. `storage` lists
+    * the persisted RDDs the size is read from ([[checkpointStats]]). */
+  def localCheckpointKeepingLayout(df: org.apache.spark.sql.DataFrame,
+      storage: org.apache.spark.SparkContext => Seq[RDDInfo] =
+        _.getRDDStorageInfo.toSeq)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
     import org.apache.spark.sql.catalyst.plans.physical._
@@ -106,19 +124,11 @@ object ColumnBridge extends org.apache.spark.internal.Logging {
           .asInstanceOf[SortOrder])
       else Nil
     }
-    // EXACT stats off the just-persisted blocks (row count from the
-    // materializing pass; bytes from the block manager) — a staged
-    // table stops being stats-blind, so joins against it get the
-    // strategy the optimizer would pick with the truth in hand
-    val bytes = classic.sparkSession.sparkContext.getRDDStorageInfo
-      .find(_.id == internal.id)
-      .map(i => BigInt(i.memSize + i.diskSize).max(BigInt(rows)))
-      .getOrElse(BigInt(rows) * 64)
-    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = bytes, rowCount = Some(BigInt(rows)))
+    val stats = checkpointStats(rows,
+      storage(classic.sparkSession.sparkContext).find(_.id == internal.id))
     val logical = org.apache.spark.sql.execution.LogicalRDD(
       out, internal, partitioning, ordering, isStreaming = false, None)(
-      classic.sparkSession, Some(stats), None)
+      classic.sparkSession, stats, None)
     org.apache.spark.sql.classic.Dataset.ofRows(
       classic.sparkSession, logical)
   }

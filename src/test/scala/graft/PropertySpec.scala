@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
 import graft.sources.{PulsarLikeInputPartition, PulsarLikeMicroBatchStream, PulsarLikeOffset, TopicStore}
-import graft.streaming.{AckingSink, ChunkReassembly}
+import graft.streaming.{AckingSink, ChunkReassembly, StreamGate}
 
 /** Property-based invariants (SURVEY.md §5 item 4):
   *  - topic-store round trip is the identity on random messages
@@ -131,17 +131,9 @@ class PropertySpec extends SparkSpec {
   }
 
   test("chunk reassembly over random splits is identity (wall-clock/RocksDB backend)") {
-    // fileChecksum off: its async upload pool deadlocks under concurrent
-    // RocksDB snapshot zips (Spark 4.1.2, local fs)
-    val overrides = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
-    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try reassemblyIdentityProp(wallClock = true, runs = 3)
-    finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    StreamGate.withConf(spark, StreamGate.RocksDbStateStore.toSeq) {
+      reassemblyIdentityProp(wallClock = true, runs = 3)
+    }
   }
 
   test("GroupTopK == window-rank for arbitrary k and group shapes") {

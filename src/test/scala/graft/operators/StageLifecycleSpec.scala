@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.graft.ColumnBridge
+
 import graft.{QueryRegistry, SparkSpec}
 
 /** Round-7 lifecycle gate: staged `localCheckpoint` blocks must be
@@ -68,5 +72,26 @@ class StageLifecycleSpec extends SparkSpec {
       assert((sc.getPersistentRDDs.keySet -- pre).isEmpty,
         s"iteration $i: staged blocks leaked past drain")
     }
+  }
+
+  test("a layout-keeping checkpoint with no storage entry never plans a broadcast") {
+    // a guessed size (rows x 64 B) understates wide rows and can flip a
+    // join against the frame to broadcast; without an entry the frame
+    // must be planned stats-blind
+    val ids = spark.range(1000).toDF("id")
+    val blind = Seq.fill(2)(
+      ColumnBridge.localCheckpointKeepingLayout(ids, _ => Nil))
+    val exact = ColumnBridge.localCheckpointKeepingLayout(ids)
+    val frames = exact +: blind
+    try {
+      val plan = blind(0).join(blind(1), "id").queryExecution.sparkPlan
+      assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
+        s"stats-blind checkpoints planned a broadcast:\n$plan")
+      assert(exact.queryExecution.optimizedPlan.stats.rowCount
+        .contains(BigInt(1000)), "a stored checkpoint keeps exact stats")
+    } finally frames.foreach(_.queryExecution.logical match {
+      case l: LogicalRDD => l.rdd.unpersist()
+      case _ => ()
+    })
   }
 }

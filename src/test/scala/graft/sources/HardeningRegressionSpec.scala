@@ -53,6 +53,29 @@ class HardeningRegressionSpec extends SparkSpec {
     assert(TopicStore.partitionMetaIn(dir, 0)._1 == 3000L)
   }
 
+  test("a crash between the data append and the meta rewrite serves nothing uncommitted") {
+    // the torn append: X0/X1 reached part-0.jsonl, then the writer died
+    // before rewriting the meta, so they were never committed. The next
+    // append must not turn them into offsets 2-3 and hide c0/c1
+    // past the meta count.
+    val root = tmpDir("torn-append")
+    val dir = TopicStore.topicDir(root, "t")
+    def msg(key: String) = TopicStore.Msg(null, key, "eA==", Map.empty,
+      1700000000000000L, 1700000000000000L, 0, "text/plain")
+    TopicStore.append(root, "t", 0, Seq(msg("a0"), msg("a1")))
+    val torn = Seq("X0", "X1").zipWithIndex.map { case (k, i) =>
+      TopicStore.encode(msg(k).copy(messageId = s"0:${2 + i}:0:0")) + "\n"
+    }.mkString
+    java.nio.file.Files.writeString(dir.resolve("part-0.jsonl"), torn,
+      java.nio.file.StandardOpenOption.APPEND)
+    TopicStore.append(root, "t", 0, Seq(msg("c0"), msg("c1")))
+    assert(TopicStore.partitionMetaIn(dir, 0)._1 == 4L)
+    assert(TopicStore.readEntries(dir, 0, 2, 4).map(_.key) == Seq("c0", "c1"))
+    val stored = TopicStore.readEntries(dir, 0, 0, Long.MaxValue).map(_.key)
+    assert(stored == Seq("a0", "a1", "c0", "c1"),
+      s"uncommitted lines survived in the log: $stored")
+  }
+
   test("byte-capped admission floors at one row per trigger instead of stalling") {
     val root = tmpDir("adm-floor")
     publishRows(root, (0 until 6).map(i => (s"k$i", "x" * 200)), parts = 1)

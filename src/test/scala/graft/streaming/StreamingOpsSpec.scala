@@ -80,21 +80,8 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  private def withRocksDB[T](body: => T): T = {
-    // fileChecksum off: the checksum checkpoint manager's async uploads
-    // deadlock under many concurrent RocksDB snapshot zips (Spark 4.1.2,
-    // local fs) — every task parks in ChecksumCheckpointFileManager
-    // .awaitResult forever
-    val overrides = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
-    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
+  private def withRocksDB[T](body: => T): T =
+    StreamGate.withConf(spark, StreamGate.RocksDbStateStore.toSeq)(body)
 
   // processing-time timers make the engine run batches continuously, so
   // processAllAvailable never settles — wall-clock tests poll instead

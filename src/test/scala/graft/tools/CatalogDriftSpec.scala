@@ -8,7 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * be GENERATED, so a query added without regenerating it would ship a
   * stale catalog silently. This spec re-renders the catalog from the
   * live registry and diffs it against the committed file — red until
-  * `sbt "Test/runMain graft.CatalogGen"` is re-run. No Spark needed. */
+  * `sbt "Test/runMain graft.CatalogGen"` is re-run. Every query, its
+  * contract sentence and its file are compared; rows carry no line
+  * numbers, so moving a query inside its file keeps it green. No Spark
+  * needed. */
 class CatalogDriftSpec extends AnyFunSuite {
 
   test("CATALOG.md matches a fresh regeneration from QueryRegistry") {

@@ -6,8 +6,10 @@ import graft.queries._
 
 /** Generates CATALOG.md — a one-line-per-query index of the registry
   * (name, family, first sentence of the query's design comment, source
-  * anchor) — straight from QueryRegistry + the query sources, so the
-  * catalog can never drift from the code it documents.
+  * file) — straight from QueryRegistry + the query sources, so the
+  * catalog can never drift from the code it documents. A row is
+  * anchored by its file and query name, not by a line number, so
+  * edits that only move a query within its file leave it unchanged.
   *
   * Usage: sbt "Test/runMain graft.CatalogGen"   (no Spark needed)
   */
@@ -59,8 +61,9 @@ object CatalogGen {
     out ++= "# Query catalog\n\n"
     out ++= "GENERATED by `sbt \"Test/runMain graft.CatalogGen\"` — do " +
       "not edit by hand.\nOne row per registry query: its driver-gate " +
-      "name, the first sentence of its\ndesign comment, and the source " +
-      "anchor. Every row has a Spark rendering in\n`SparkEntry.queries`" +
+      "name, the first sentence of its\ndesign comment, and its source " +
+      "file (search it for the quoted name). Every row has a Spark " +
+      "rendering in\n`SparkEntry.queries`" +
       " and (unless noted `rows-only`) a DuckDB oracle in\n" +
       "`SparkEntry.oracleSql` that the driver hash-compares per round.\n"
     var total = 0
@@ -68,12 +71,11 @@ object CatalogGen {
       val lines = new String(Files.readAllBytes(Paths.get(qdir + file)),
         "UTF-8").split("\n")
       out ++= s"\n## $fam (${qs.size})\n\n"
-      out ++= "| query | contract | anchor |\n|---|---|---|\n"
+      out ++= "| query | contract | file |\n|---|---|---|\n"
       qs.foreach { q =>
-        val ln = lines.indexWhere(_.contains("\"" + q.name + "\"")) + 1
         val oracle = if (q.oracle.isEmpty) " *(rows-only)*" else ""
         out ++= s"| `${q.name}`$oracle | ${contract(lines, q.name)} " +
-          s"| $file:$ln |\n"
+          s"| $file |\n"
         total += 1
       }
     }

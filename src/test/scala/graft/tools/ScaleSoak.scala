@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc 10× scale soak (not part of the driver contract): the driver
@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Runs the given queries (default: the 6 most expensive) at sf0.1 and
   * at the N× derivative (default 10), reports wall times, the N×/1×
   * ratio per query (flat per-row cost ⇒ ratio ≈ N of the data-bound
-  * part), and peak driver heap.
+  * part), and peak driver heap. Runs in the Bench session
+  * ([[GraftSession]], `SPARK_GRAFT_CPUS` cores).
   *
   * Replica-count ceilings (round 9, for the 100× runs): queries that
   * PLANT ids (Q.plantedId offsets 100000+) raise on derived doc_ids ≥
@@ -63,13 +64,7 @@ object ScaleSoak {
       (if (r >= 0) a.patch(r, Nil, 2) else a).toSeq
     }
     val base = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cores)
 
     def replicate(name: String, f: (DataFrame, Int) => DataFrame): Unit = {
       if (java.nio.file.Files.exists(
@@ -184,10 +179,7 @@ object ScaleSoak {
       QueryRegistry.byName(name).run(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      // drop dead state-store providers between runs (same hygiene as
-      // Bench) so a stream loop's cached state doesn't tax later runs
-      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case _: Throwable => () }
+      GraftSession.release(spark)
       dt
     }
     import scala.jdk.CollectionConverters._

@@ -11,11 +11,10 @@
 #
 # Usage: tools/bench_fresh.sh [out.json]
 #   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-#   SPARK_GRAFT_CPUS   (default 8)
+#   SPARK_GRAFT_CPUS   (passed through; graft.GraftSession.cores defaults it)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-CPUS="${SPARK_GRAFT_CPUS:-8}"
 OUT="${1:-bench_fresh.json}"
 TMP="$(mktemp -d)"
 trap 'rm -rf "$TMP"' EXIT
@@ -28,8 +27,7 @@ FAMILIES=(
 )
 for fam in "${FAMILIES[@]}"; do
   echo "== fresh JVM for family [$fam]" >&2
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
-    SPARK_GRAFT_BENCH_ONLY="$fam" \
+  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_ONLY="$fam" \
     sbt -batch "runMain graft.Bench" >/dev/null 2>&1
   cp bench_out.json "$TMP/$(echo "$fam" | tr ',' '_').json"
 done
