@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryRegistry, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, StructType}
 
 /** Gated-surface float audit (VERDICT round-9 task #2). The driver's
@@ -55,16 +55,15 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType,
   */
 class FloatSurfaceSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
   // inventory value shapes: ("ieee", chain) — SharedIeee;
   // ("banded", companionColumn) — Banded; ("libm", why) — Transcendental
   import FloatSurfaceInventory.inventory
 
+  private def isFloat(dt: DataType): Boolean =
+    dt == DoubleType || dt == FloatType
+
   /** The audit primitive: problems for one query's output schema. */
   private def audit(name: String, schema: StructType): Seq[String] = {
-    def isFloat(dt: DataType): Boolean =
-      dt == DoubleType || dt == FloatType
     val decimalProblems = schema.fields.toSeq.collect {
       case f if f.dataType.isInstanceOf[DecimalType] =>
         s"$name.${f.name}: DecimalType (${f.dataType.simpleString}) in" +
@@ -95,20 +94,14 @@ class FloatSurfaceSpec extends SparkSpec {
     "in the inventory; Banded companions exist; no stale entries") {
     val problems = Seq.newBuilder[String]
     val seenFloatCols = Set.newBuilder[(String, String)]
-    QueryRegistry.all.foreach { q =>
-      val schema =
-        try q.run(spark, dir).schema
-        catch {
-          case e: Throwable =>
-            problems += s"${q.name}: schema derivation failed: " +
-              s"${e.getMessage}"
-            new StructType()
-        }
-      schema.fields.foreach { f =>
-        if (f.dataType == DoubleType || f.dataType == FloatType)
-          seenFloatCols += ((q.name, f.name))
-      }
-      problems ++= audit(q.name, schema)
+    RegistrySweep.atSmall.foreach { case (name, f) =>
+      val schema = f.schema.recover { case e =>
+        problems += s"$name: schema derivation failed: ${e.getMessage}"
+        new StructType()
+      }.get
+      schema.fields.filter(c => isFloat(c.dataType))
+        .foreach(c => seenFloatCols += ((name, c.name)))
+      problems ++= audit(name, schema)
     }
     val seen = seenFloatCols.result()
     inventory.keys.filterNot(seen.contains).toSeq.sorted.foreach { k =>

@@ -11,28 +11,19 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   * prune payload columns. Run at sf0.001 — plan shape, not timing. */
 class PlanSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-  private val dir10 = "/root/testdata/sf0.01" // 10x rows, for scale lints
+  import RegistrySweep.{streamLoops, value}
 
-  // queries whose run() executes a stream end-to-end (publish + consume
-  // + landed parquet) — their executed plan is the final parquet read,
-  // not the streaming pipeline, so plan-shape assertions don't apply
-  private def isStreamLoop(name: String): Boolean =
-    // m11 is NOT here: it publishes then batch-reads (like m09), so its
-    // plan is a real DSv2 scan worth sweeping; the excluded names run
-    // full stream loops whose returned plan is only the landed read
-    // m12 is NOT here either: its publish is a write side effect but the
-    // returned plan is a real DSv2 batch scan of the relayed topic —
-    // plan-shape coverage for the sink-relay read path is worth the write
-    name.startsWith("ps") || name.startsWith("m06") ||
-    name.startsWith("m07") || name.startsWith("m10") ||
-    name.startsWith("m13") || name.startsWith("m14") ||
-    name.startsWith("w04") ||
-    name.startsWith("w05") || name.startsWith("w06") ||
-    name.startsWith("w07") || name.startsWith("w08") ||
-    name.startsWith("w09") ||
-    name.startsWith("ws") || name.startsWith("d07") ||
-    name.startsWith("s10") || name.startsWith("d20")
+  private val dir = RegistrySweep.small
+
+  /** The sf0.001 sweep minus the stream loops, whose executed plan is
+    * only the landed parquet read — plan-shape lints don't apply. */
+  private def swept = RegistrySweep.atSmall.filterNot(e => streamLoops(e._1))
+
+  /** An equi-join NODE keyed on `key` — a plan that merely mentions the
+    * column elsewhere must not pass. */
+  private def joinsOn(plan: String, key: String): Boolean =
+    s"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\\n]*$key".r
+      .findFirstIn(plan).isDefined
 
   private def planOf(name: String): String = {
     val df = QueryRegistry.byName(name).run(spark, dir)
@@ -106,10 +97,7 @@ class PlanSpec extends SparkSpec {
     // winnowed fingerprint hash (the 2/(w+1)-density table) — never a
     // cartesian of the corpus against itself (d08/d10's pin style)
     val d24 = planOf("d24_winnowing")
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*fph"""
-        .r.findFirstIn(d24).isDefined,
-      s"no equi-join node keyed on fph:\n$d24")
+    assert(joinsOn(d24, "fph"), s"no equi-join node keyed on fph:\n$d24")
     assert(!d24.contains("CartesianProduct"), d24)
     // q87: the score-domain range joins are non-equi by nature — they
     // must plan as broadcast nested-loop against the bounded side
@@ -141,13 +129,9 @@ class PlanSpec extends SparkSpec {
     // NODES (d02/d03's shapes) — never a corpus-vs-corpus cartesian;
     // the pair-set reconciliation is a FullOuter join on the pair key
     val d25 = planOf("d25_capture_recapture")
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*band_key"""
-        .r.findFirstIn(d25).isDefined,
+    assert(joinsOn(d25, "band_key"),
       s"d25: no equi-join keyed on the minhash band_key:\n$d25")
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*band#"""
-        .r.findFirstIn(d25).isDefined,
+    assert(joinsOn(d25, "band#"),
       s"d25: no equi-join keyed on the simhash band:\n$d25")
     assert(d25.contains("FullOuter"), s"d25: pair reconciliation " +
       s"must be a full-outer join on the (a_id, b_id) key:\n$d25")
@@ -221,14 +205,10 @@ class PlanSpec extends SparkSpec {
   test("d08: semdedup pair join is an equi-join on the cluster key") {
     // in-cluster pair enumeration must key the join on pivot_id (cell-
     // bounded at 100 TB) — never a cartesian against the whole corpus
-    val df = QueryRegistry.byName("d08_semdedup").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("d08_semdedup")
     // pin the join NODE itself, keyed on pivot_id — a plan that merely
     // mentions the column elsewhere must not pass (mirrors p11/d09)
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*pivot_id"""
-        .r.findFirstIn(p).isDefined,
-      s"no equi-join node keyed on pivot_id:\n$p")
+    assert(joinsOn(p, "pivot_id"), s"no equi-join node keyed on pivot_id:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -236,32 +216,23 @@ class PlanSpec extends SparkSpec {
     // the dup-gram set scales with the duplication rate — the join back
     // must be an equi-join NODE keyed on gh (broadcast is fine when
     // stats allow; a cartesian or a non-gh key is not)
-    val df = QueryRegistry.byName("d10_repeated_spans").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*\bgh""".r
-        .findFirstIn(p).isDefined,
-      s"no equi-join node keyed on gh:\n$p")
+    val p = planOf("d10_repeated_spans")
+    assert(joinsOn(p, """\bgh"""), s"no equi-join node keyed on gh:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
   test("s08: the IVF-PQ probe is an equi-join on the cell key") {
     // candidates must come from the probed cells only — a join keyed on
     // cell_id, never a nested loop over the whole coded corpus
-    val df = QueryRegistry.byName("s08_ann_ivfpq").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*cell_id""".r
-        .findFirstIn(p).isDefined,
-      s"no equi-join node keyed on cell_id:\n$p")
+    val p = planOf("s08_ann_ivfpq")
+    assert(joinsOn(p, "cell_id"), s"no equi-join node keyed on cell_id:\n$p")
   }
 
   test("q37: pairs generate map-side — no join node, top-k never full-sorts") {
     // the oracle states items×items; the plan must NOT contain it —
     // baskets aggregate on the order key, pairs explode from the
     // basket array, and the top-100 is TakeOrderedAndProject
-    val df = QueryRegistry.byName("q37_copurchase").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("q37_copurchase")
     assert(!p.contains("Join"), s"pair generation joined:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"top-k full-sorted:\n$p")
   }
@@ -269,24 +240,16 @@ class PlanSpec extends SparkSpec {
   test("d14: the containment candidate join is keyed on the min-shingle") {
     // A's single probe key against B's inverted index — an equi-join
     // NODE keyed on msh; a cartesian against the corpus must fail
-    val df = QueryRegistry.byName("d14_containment").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*\bmsh"""
-        .r.findFirstIn(p).isDefined,
-      s"no equi-join node keyed on msh:\n$p")
+    val p = planOf("d14_containment")
+    assert(joinsOn(p, """\bmsh"""), s"no equi-join node keyed on msh:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
   test("s11: multiprobe candidates come from a bucket equi-join") {
     // 7 probe buckets per query fan the SMALL side out; the corpus
     // side must still be reached via an equi-join on the bucket key
-    val df = QueryRegistry.byName("s11_ann_multiprobe").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*pbucket"""
-        .r.findFirstIn(p).isDefined,
-      s"no equi-join node keyed on pbucket:\n$p")
+    val p = planOf("s11_ann_multiprobe")
+    assert(joinsOn(p, "pbucket"), s"no equi-join node keyed on pbucket:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -304,8 +267,7 @@ class PlanSpec extends SparkSpec {
     // dedup window + rule gate + split coin — only the md5 dedup
     // window may shuffle; the gates are stateless projections fused
     // around it
-    val df = QueryRegistry.byName("p17_full_pipeline").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("p17_full_pipeline")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
     assert(!p.contains("Join"), p)
   }
@@ -314,8 +276,7 @@ class PlanSpec extends SparkSpec {
     // lag-flag window, cumulative-sum window, and the per-session
     // aggregate all partition by user_id — Spark must plan a single
     // hash exchange (plus the presentation sort's range exchange)
-    val df = QueryRegistry.byName("q33_sessionize").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("q33_sessionize")
     assert("Exchange hashpartitioning\\(user_id".r.findAllIn(p).size == 1, p)
     assert(!p.contains("Join"), p)
   }
@@ -324,12 +285,8 @@ class PlanSpec extends SparkSpec {
     // the label restriction must reach the join condition — a
     // cartesian-with-filter would score n·q pairs instead of the
     // label-selective candidates
-    val df = QueryRegistry.byName("s09_ann_filtered").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)[^\n]*label"""
-        .r.findFirstIn(p).isDefined,
-      s"no equi-join node keyed on label:\n$p")
+    val p = planOf("s09_ann_filtered")
+    assert(joinsOn(p, "label"), s"no equi-join node keyed on label:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p)
     assert(p.contains("GroupTopK"), p)
   }
@@ -339,8 +296,7 @@ class PlanSpec extends SparkSpec {
     // exchange is the group window's hashpartitioning on canon_url
     // (plus the presentation sort's range partitioning); the documents
     // scan must not read text
-    val df = QueryRegistry.byName("p14_url_canonicalize").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("p14_url_canonicalize")
     assert(!p.contains("Join"), p)
     assert("Exchange hashpartitioning\\(canon_url".r.findAllIn(p).size == 1, p)
     assert(p.contains("ReadSchema") && !p.contains("text:"), p)
@@ -350,11 +306,8 @@ class PlanSpec extends SparkSpec {
     // the eval gram set is NOT assumed broadcastable (p11's bloom is the
     // broadcast variant): any equi strategy is fine, a cartesian or a
     // non-g key is not
-    val df = QueryRegistry.byName("p13_contamination_fraction").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*\[g#[^\n]*LeftSemi"""
-        .r.findFirstIn(p).isDefined,
+    val p = planOf("p13_contamination_fraction")
+    assert(joinsOn(p, """\[g#[^\n]*LeftSemi"""),
       s"no semi equi-join node keyed on g:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
@@ -419,12 +372,8 @@ class PlanSpec extends SparkSpec {
     // the two pair enumerations must key on src (wedges) and the
     // canonical (p1, p2) edge pair (closing test) — the naive form is
     // an all-pairs scan of the neighbor lists
-    val df = QueryRegistry.byName("q45_triangle_count").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*\bsrc"""
-        .r.findFirstIn(p).isDefined,
-      s"no wedge equi-join keyed on src:\n$p")
+    val p = planOf("q45_triangle_count")
+    assert(joinsOn(p, """\bsrc"""), s"no wedge equi-join keyed on src:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -447,8 +396,7 @@ class PlanSpec extends SparkSpec {
     // the running sum, the per-type max, and the peak aggregate all
     // partition by event_type — one hash exchange (the union's two
     // scan legs both feed it), like q33's single-exchange pin
-    val df = QueryRegistry.byName("q48_interval_concurrency").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("q48_interval_concurrency")
     assert("Exchange hashpartitioning\\(event_type".r.findAllIn(p).size == 1, p)
     assert(!p.contains("Join"), p)
   }
@@ -462,12 +410,8 @@ class PlanSpec extends SparkSpec {
   test("q50: the salted join keys on (partkey, salt) — the skew spread is in the plan") {
     // the whole point is the join KEY: a plan that joins on p_partkey
     // alone silently re-concentrates the hot key on one reducer
-    val df = QueryRegistry.byName("q50_salted_join").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(
-      """(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*salt"""
-        .r.findFirstIn(p).isDefined,
-      s"no equi-join node keyed on salt:\n$p")
+    val p = planOf("q50_salted_join")
+    assert(joinsOn(p, "salt"), s"no equi-join node keyed on salt:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -476,8 +420,7 @@ class PlanSpec extends SparkSpec {
     // per-outer-row rescan of orders), and the scalar mean must appear
     // as a subquery evaluated once — 4 scans total (customer twice:
     // outer + scalar mean; orders; nation), not scans × customers
-    val df = QueryRegistry.byName("q51_subquery_decorrelation").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("q51_subquery_decorrelation")
     assert(p.contains("LeftAnti"), s"NOT EXISTS not decorrelated:\n$p")
     assert(!p.contains("CartesianProduct"), p)
     // the mean must appear as a once-evaluated scalar Subquery node
@@ -504,8 +447,7 @@ class PlanSpec extends SparkSpec {
     // alphabet-bounded per doc, so the first exchange carries the
     // HISTOGRAM, never raw chars; the total window and the entropy
     // fold then share the single doc_id exchange
-    val df = QueryRegistry.byName("t15_char_entropy").run(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planOf("t15_char_entropy")
     assert(!p.contains("Join"), p)
     assert("Exchange hashpartitioning\\(doc_id#\\d+L, c#".r.findAllIn(p).size == 1, p)
     assert("Exchange hashpartitioning\\(doc_id#\\d+L, \\d".r.findAllIn(p).size == 1, p)
@@ -576,10 +518,9 @@ class PlanSpec extends SparkSpec {
     // provably small, a scale-killer over anything fact-sized. The
     // q43 shape compiled, passed its gate, and benched fine at sf0.1;
     // only a plan-shape gate catches the next one. Rule: every leaf
-    // under an unpartitioned Window must sit below an Aggregate or an
-    // explicit Limit (row-bounded by construction), or the site must
-    // be allowlisted with its data-contract row bound.
-    import org.apache.spark.sql.catalyst.plans.logical._
+    // under an unpartitioned Window must sit below an explicit Limit or
+    // be a literal table (row-bounded by construction), or the site
+    // must be allowlisted with its data-contract row bound.
     // audited sites (round 7): each unpartitioned window here runs
     // over an aggregate whose GROUPING DOMAIN is bounded by data
     // contract, so the single task holds a dimension-sized table at
@@ -593,26 +534,18 @@ class PlanSpec extends SparkSpec {
         "even the price domain is huge"),
       "p24_unimax_mix" -> "per-source aggregate; sources are a bounded vocabulary",
       "p27_repeat_schedule" -> "per-source aggregate; sources are a bounded vocabulary")
-    def bounded(p: LogicalPlan): Boolean = p match {
-      case _: GlobalLimit => true // explicit row bound
-      case _: LocalLimit => true
-      case _: LocalRelation => true // literal table
-      case _: OneRowRelation => true
-      case l if l.children.isEmpty => false // unreduced leaf reached
-      case o => o.children.forall(bounded)
+    swept.filterNot(e => allow.contains(e._1)).foreach { case (name, f) =>
+      val bad = value(name, f.windows)
+      if (bad.nonEmpty)
+        fail(s"$name: unpartitioned window over unreduced data " +
+          s"(single-task sort of the whole child at scale):\n${bad.head}")
     }
-    QueryRegistry.all
-      .filterNot(q => isStreamLoop(q.name) || allow.contains(q.name))
-      .foreach { q =>
-        val plan = q.run(spark, dir).queryExecution.optimizedPlan
-        val bad = plan.collect {
-          case w: Window if w.partitionSpec.isEmpty && !bounded(w.child) => w
-        }
-        if (bad.nonEmpty)
-          fail(s"${q.name}: unpartitioned window over unreduced data " +
-            s"(single-task sort of the whole child at scale):\n${bad.head}")
-        graft.operators.Stage.drain(spark)
-      }
+    // an exemption is stale once its query is gone or no longer plans
+    // the window it exempts
+    val stale = allow.keys.filterNot(name =>
+      swept.get(name).exists(f => value(name, f.windows).nonEmpty))
+    assert(stale.isEmpty, "stale allow entries (unregistered, a stream " +
+      s"loop, or no unpartitioned window left): ${stale.mkString(", ")}")
   }
 
   test("decimal-parity lint: every decimal multiply/divide is Spark-exact") {
@@ -626,43 +559,9 @@ class PlanSpec extends SparkSpec {
     // (multiply: p1+p2+1; divide: p1-s1+s2+max(6, s1+p2+1), Spark's
     // own result-type formulas), or the site must be allowlisted with
     // a measured-safe rationale.
-    import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply}
-    import org.apache.spark.sql.types.DecimalType
     val allow: Map[String, String] = Map.empty
-    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    QueryRegistry.all
-      .filterNot(q => isStreamLoop(q.name) || allow.contains(q.name))
-      .foreach { q =>
-        val plan = q.run(spark, dir).queryExecution.analyzed
-        plan.foreach { node =>
-          node.expressions.foreach { root =>
-            root.foreach {
-              case m: Multiply => (m.left.dataType, m.right.dataType) match {
-                case (a: DecimalType, b: DecimalType)
-                    if a.precision + b.precision + 1 > 38 =>
-                  bad += s"${q.name}: decimal multiply " +
-                    s"(${a.precision},${a.scale})·(${b.precision},${b.scale})" +
-                    s" needs ${a.precision + b.precision + 1} > 38 digits —" +
-                    s" Spark shrinks scale with per-row rounding: $m"
-                case _ => ()
-              }
-              case d: Divide => (d.left.dataType, d.right.dataType) match {
-                case (a: DecimalType, b: DecimalType)
-                    if a.precision - a.scale + b.scale +
-                      math.max(6, a.scale + b.precision + 1) > 38 =>
-                  bad += s"${q.name}: decimal divide " +
-                    s"(${a.precision},${a.scale})/(${b.precision},${b.scale})" +
-                    s" needs ${a.precision - a.scale + b.scale +
-                      math.max(6, a.scale + b.precision + 1)} > 38 digits —" +
-                    s" Spark shrinks scale: $d"
-                case _ => ()
-              }
-              case _ => ()
-            }
-          }
-        }
-        graft.operators.Stage.drain(spark)
-      }
+    val bad = swept.filterNot(e => allow.contains(e._1)).toSeq
+      .flatMap { case (n, f) => value(n, f.decimals).map(p => s"$n: $p") }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
@@ -677,32 +576,20 @@ class PlanSpec extends SparkSpec {
     // grows > 3× (above a 64-row noise floor) is data-scaling and
     // fails. It would catch a broadcast(vocabulary) or
     // broadcast(fact-aggregate) the moment it is written.
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ResolvedHint}
-    def hintSides(q: graft.Q, d: String): Seq[LogicalPlan] =
-      q.run(spark, d).queryExecution.analyzed.collect {
-        case h: ResolvedHint if h.hints.strategy.exists(
-            _.toString.contains("broadcast")) => h.child
-      }
-    def rows(p: LogicalPlan): Long =
-      spark.sessionState.executePlan(p).toRdd.count()
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    QueryRegistry.all
-      .filterNot(q => isStreamLoop(q.name))
-      .foreach { q =>
-        val s = hintSides(q, dir)
-        val l = hintSides(q, dir10)
-        // hint sites are positional in the plan walk: same code path,
-        // same order at both scales
-        assert(s.length == l.length, s"${q.name}: hint-count drift")
-        s.zip(l).zipWithIndex.foreach { case ((ps, pl), i) =>
-          val (ns, nl) = (rows(ps), rows(pl))
-          if (nl > 3 * math.max(ns, 64L))
-            bad += s"${q.name} hint #$i: broadcast side grew $ns -> $nl " +
-              "rows from sf0.001 to sf0.01 — it scales with the corpus " +
-              "and cannot broadcast at 100 TB"
-        }
-        graft.operators.Stage.drain(spark)
+    swept.foreach { case (name, f) =>
+      val s = value(name, f.hintRows)
+      val l = value(name, RegistrySweep.atLarge(name).hintRows)
+      // hint sites are positional in the plan walk: same code path,
+      // same order at both scales
+      assert(s.length == l.length, s"$name: hint-count drift")
+      s.zip(l).zipWithIndex.foreach { case ((ns, nl), i) =>
+        if (nl > 3 * math.max(ns, 64L))
+          bad += s"$name hint #$i: broadcast side grew $ns -> $nl " +
+            "rows from sf0.001 to sf0.01 — it scales with the corpus " +
+            "and cannot broadcast at 100 TB"
       }
+    }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
@@ -712,17 +599,14 @@ class PlanSpec extends SparkSpec {
     // Piggybacked on the same plan walk: output column names must be
     // DISTINCT — the driver's compare sorts columns BY NAME before
     // hashing, so a duplicate name silently scrambles the comparison.
-    QueryRegistry.all
-      .filterNot(q => isStreamLoop(q.name))
-      .foreach { q =>
-        val df = q.run(spark, dir)
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("CartesianProduct"),
-          s"${q.name} plans a cartesian product:\n$plan")
-        val names = df.schema.fieldNames
-        assert(names.distinct.length == names.length,
-          s"${q.name} emits duplicate column names: ${names.mkString(",")}")
-      }
+    swept.foreach { case (name, f) =>
+      val plan = value(name, f.plan)
+      assert(!plan.contains("CartesianProduct"),
+        s"$name plans a cartesian product:\n$plan")
+      val names = value(name, f.schema).fieldNames
+      assert(names.distinct.length == names.length,
+        s"$name emits duplicate column names: ${names.mkString(",")}")
+    }
   }
 
   test("registry contract: names, oracles, and the flagship entry") {
@@ -954,13 +838,16 @@ class PlanSpec extends SparkSpec {
       "t28_jsd_drift", "q91_markov_removal", "p40_quantile_normalize",
       "q92_sketch_store_roundtrip", "q94_mann_whitney",
       "q97_acf", "d25_capture_recapture", "q98_kruskal_wallis",
-      "q92b_store_quantiles", "q92d_store_varopt")
-    QueryRegistry.all
-      .filterNot(q => isStreamLoop(q.name) || checkpoints.contains(q.name))
-      .foreach { q =>
-        val plan = q.run(spark, dir).queryExecution.executedPlan.toString
-        assert(!plan.contains("Scan ExistingRDD"),
-          s"${q.name} materializes on the driver:\n$plan")
-      }
+      "q92b_store_quantiles")
+    swept.filterNot(e => checkpoints.contains(e._1)).foreach { case (name, f) =>
+      val plan = value(name, f.plan)
+      assert(!plan.contains("Scan ExistingRDD"),
+        s"$name materializes on the driver:\n$plan")
+    }
+    // an exemption is stale once its query is gone or no longer stages
+    val stale = checkpoints.filterNot(name => swept.get(name).exists(f =>
+      value(name, f.plan).contains("Scan ExistingRDD")))
+    assert(stale.isEmpty, "stale checkpoints entries (unregistered, a " +
+      s"stream loop, or no Scan ExistingRDD left): ${stale.mkString(", ")}")
   }
 }

@@ -66,25 +66,17 @@ import graft.{QueryRegistry, SparkSpec}
   */
 class RoundTieSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.01"
-
-  /** Streaming queries whose Spark rendering rounds doubles — linted
-    * despite the choreography cost. */
-  private val streamingIncludes = Set("ws11_stream_psi")
-
   test("no gated query rounds a double within noise-distance of a " +
     ".5 boundary at the driver's gate SF") {
-    val streamingFamilies =
-      (StreamingQueries.all ++ MessageQueries.all).map(_.name).toSet
-    val linted = QueryRegistry.all.filter(q =>
-      !streamingFamilies(q.name) || streamingIncludes(q.name))
-    val problems = linted.flatMap { q =>
-      try RoundTieLint.lint(q.name, q.run(spark, sfDir))
-      catch {
-        case e: Throwable =>
-          Seq(s"${q.name}: lint machinery failed: ${e.getMessage}")
+    assert(RegistrySweep.streamingIncludes.forall(QueryRegistry.byName.contains),
+      "streamingIncludes names an unregistered query")
+    val problems = RegistrySweep.atLarge.toSeq
+      .filter { case (name, _) => RegistrySweep.tieLinted(name) }
+      .flatMap { case (name, f) =>
+        f.roundTies.recover { case e =>
+          Seq(s"$name: lint machinery failed: ${e.getMessage}")
+        }.get
       }
-    }
     assert(problems.isEmpty,
       s"${problems.size} round-tie problem(s):\n" +
         problems.mkString("\n"))
@@ -107,7 +99,7 @@ class RoundTieSpec extends SparkSpec {
       s"round( count changed (StreamingQueries=$streaming expected 3, " +
         s"MessageQueries=$message expected 0): if the new round is in " +
         "a query's Spark rendering, add that query to " +
-        "streamingIncludes; then update the expected counts")
+        "RegistrySweep.streamingIncludes; then update the expected counts")
   }
 
   test("the lint catches a planted knife-edge and passes a planted " +

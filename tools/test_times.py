@@ -1,0 +1,95 @@
+#!/usr/bin/env python3
+"""Summarise sbt's JUnit test reports (target/test-reports/TEST-*.xml).
+
+One directory: summed test time, test count, the N slowest suites and
+the N slowest tests. Two directories (before, after): also the per-test
+time delta, largest moves first, and the tests present on one side only.
+
+  python3 tools/test_times.py target/test-reports
+  python3 tools/test_times.py before/ after/ -n 10
+  python3 tools/test_times.py before/ after/ --match 'lint|Cartesian'
+
+--match keeps only tests whose "suite::name" matches the regex, so the
+totals and the delta cover just that subset.
+"""
+import argparse
+import glob
+import os
+import re
+import sys
+import xml.etree.ElementTree as ET
+
+
+def load(directory, match=None):
+    """{"suite::test": (seconds, status)} from every report in directory."""
+    files = sorted(glob.glob(os.path.join(directory, "TEST-*.xml")))
+    if not files:
+        sys.exit(f"no TEST-*.xml reports in {directory}")
+    tests = {}
+    for path in files:
+        for case in ET.parse(path).getroot().iter("testcase"):
+            key = f"{case.get('classname')}::{case.get('name')}"
+            if match and not re.search(match, key):
+                continue
+            status = "ok"
+            for tag in ("failure", "error", "skipped"):
+                if case.find(tag) is not None:
+                    status = tag
+            tests[key] = (float(case.get("time") or 0.0), status)
+    return tests
+
+
+def summary(label, tests, n):
+    total = sum(t for t, _ in tests.values())
+    bad = sum(1 for _, s in tests.values() if s != "ok")
+    print(f"{label}: {len(tests)} tests, {total:.1f} s summed, "
+          f"{bad} not ok")
+    suites = {}
+    for key, (t, _) in tests.items():
+        suite = key.split("::", 1)[0]
+        suites[suite] = suites.get(suite, 0.0) + t
+    print("  slowest suites:")
+    for suite, t in sorted(suites.items(), key=lambda kv: -kv[1])[:n]:
+        print(f"    {t:8.1f} s  {suite}")
+    print("  slowest tests:")
+    for key, (t, s) in sorted(tests.items(), key=lambda kv: -kv[1][0])[:n]:
+        flag = "" if s == "ok" else f"  [{s}]"
+        print(f"    {t:8.1f} s  {key}{flag}")
+
+
+def delta(before, after, n):
+    shared = sorted(set(before) & set(after),
+                    key=lambda k: -abs(after[k][0] - before[k][0]))
+    tb = sum(before[k][0] for k in shared)
+    ta = sum(after[k][0] for k in shared)
+    ratio = f" ({ta / tb:.2f}x)" if tb else ""
+    print(f"delta over {len(shared)} shared tests: {tb:.1f} s -> "
+          f"{ta:.1f} s{ratio}")
+    for k in shared[:n]:
+        b, a = before[k][0], after[k][0]
+        print(f"    {b:8.1f} -> {a:8.1f} s  ({a - b:+8.1f})  {k}")
+    for label, only in (("only before", set(before) - set(after)),
+                        ("only after", set(after) - set(before))):
+        for k in sorted(only):
+            print(f"  {label}: {k}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("dirs", nargs="+", metavar="DIR",
+                    help="one reports directory, or two: before after")
+    ap.add_argument("-n", type=int, default=10,
+                    help="rows per ranking (default 10)")
+    ap.add_argument("--match", help="regex over 'suite::test'")
+    args = ap.parse_args()
+    if len(args.dirs) > 2:
+        ap.error("give one or two report directories")
+    runs = [load(d, args.match) for d in args.dirs]
+    for d, tests in zip(args.dirs, runs):
+        summary(d, tests, args.n)
+    if len(runs) == 2:
+        delta(runs[0], runs[1], args.n)
+
+
+if __name__ == "__main__":
+    main()
