@@ -380,7 +380,7 @@ object SketchOps {
   def mergeThetaIntoStore(batch: org.apache.spark.sql.DataFrame,
       key: org.apache.spark.sql.Column,
       value: org.apache.spark.sql.Column, path: String): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, udaf}
+    import org.apache.spark.sql.functions.{col, udaf}
     val theta = udaf(new ThetaDistinct(12), Encoders.scalaLong)
     val fresh = batch.groupBy(key.as("k"))
       .agg(theta(value).as("bytes"))

@@ -4,7 +4,6 @@ import graft.{Q, Tables}
 import graft.operators.MessageOps
 import graft.streaming.StreamGate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Batch-expressible forms of the reference's message operators
   * (SURVEY.md §2A) over the deterministic message fixture derived from

@@ -4,7 +4,6 @@ import graft.{Q, Tables}
 import graft.operators.VectorOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (array<float> column).

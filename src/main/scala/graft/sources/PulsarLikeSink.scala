@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.util.Base64
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._

@@ -384,22 +384,27 @@ class PulsarLikeMicroBatchStream(conf: PulsarLikeConf, root: String,
       "Parameter 'startFromSubscriptionCursor' positions BATCH reads " +
         "only — a stream's cursor is its checkpoint. Use spark.read.")
 
-  /** Current end offsets; re-lists topics/partitions (A20). Includes the
-    * subscription's retry-log cursors (A16) so nacked messages are
-    * re-served through `planInputPartitions` — the main log never grows
-    * from a redelivery. */
-  private def endCursors(): Map[String, Long] = {
+  /** One meta snapshot per cursor key; re-lists topics/partitions
+    * (A20). Includes the subscription's retry-log partitions (A16) so
+    * nacked messages are re-served through `planInputPartitions` — the
+    * main log never grows from a redelivery. */
+  private def partitionMetas(): Map[String, TopicStore.PartMeta] = {
     PulsarLikeSource.resolveTopics(conf, root).flatMap { t =>
-      val main = TopicStore.partitionIds(root, t).map { p =>
-        key(t, p) -> TopicStore.partitionMeta(root, t, p)._1
+      val dir = TopicStore.topicDir(root, t)
+      val main = TopicStore.partitionIdsIn(dir).map { p =>
+        key(t, p) -> TopicStore.PartMeta.read(dir, p)
       }
       val rdir = TopicStore.retryDir(root, t, conf.subscriptionName)
       val retry = TopicStore.partitionIdsIn(rdir).map { p =>
-        retryKey(t, p) -> TopicStore.partitionMetaIn(rdir, p)._1
+        retryKey(t, p) -> TopicStore.PartMeta.read(rdir, p)
       }
       main ++ retry
     }.toMap
   }
+
+  /** Current end offsets. */
+  private def endCursors(): Map[String, Long] =
+    partitionMetas().map { case (k, m) => k -> m.count }
 
   /** How far into a retry partition delivery may advance at `nowMs`:
     * consecutive entries whose `retry_at` has passed. Entries append in
@@ -426,15 +431,6 @@ class PulsarLikeMicroBatchStream(conf: PulsarLikeConf, root: String,
     availableNowEnd = Some(endCursors())
   }
 
-  /** Retention-aware earliest offset of a partition (the retained base
-    * — 0 unless a prefix was truncated). */
-  private def baseOf(k: String): Long = {
-    val (t, p, isRetry) = parse(k)
-    val dir = if (isRetry) TopicStore.retryDir(root, t, conf.subscriptionName)
-      else TopicStore.topicDir(root, t)
-    TopicStore.partitionBaseIn(dir, p)
-  }
-
   override def initialOffset(): Offset = conf.startingTimeUs match {
     // time-based seek (Reader#seek(timestamp)): main cursors land on
     // the first message with publish_time >= T via the index-guided
@@ -444,9 +440,9 @@ class PulsarLikeMicroBatchStream(conf: PulsarLikeConf, root: String,
     // first batch is recognized as fresh (readCompacted parity with
     // Earliest and with the batch path) across crash-restarts too.
     case Some(t) =>
-      val cur = endCursors().map { case (k, _) =>
+      val cur = partitionMetas().map { case (k, m) =>
         val (topic, p, isRetry) = parse(k)
-        if (isRetry) k -> baseOf(k)
+        if (isRetry) k -> m.base
         else k -> TopicStore.seekByTimeIn(TopicStore.topicDir(root, topic), p, t)
       }
       PulsarLikeOffset(cur + (PulsarLikeOffset.FreshKey -> 1L))
@@ -459,7 +455,8 @@ class PulsarLikeMicroBatchStream(conf: PulsarLikeConf, root: String,
         // subscription whose prefix was later truncated to exactly the
         // committed cursors, re-compacting (and so dropping) new tail
         // messages mid-subscription.
-        PulsarLikeOffset(endCursors().map { case (k, _) => k -> baseOf(k) }
+        // (the base is retention-aware: 0 unless a prefix was truncated)
+        PulsarLikeOffset(partitionMetas().map { case (k, m) => k -> m.base }
           + (PulsarLikeOffset.FreshKey -> 1L))
       case InitialPosition.Latest =>
         // NO FreshKey: a Latest subscription never reads the retained
@@ -500,30 +497,27 @@ class PulsarLikeMicroBatchStream(conf: PulsarLikeConf, root: String,
     val admitted = end.toSeq.sortBy(_._1).map { case (k, endRaw) =>
       val s = startCur.getOrElse(k, 0L)
       val (t, p, isRetry) = parse(k)
+      val dir = TopicStore.logDir(root, t, conf.subscriptionName, isRetry)
+      val m0 = TopicStore.PartMeta.read(dir, p)
+      // GC: the committed cursor start means everything below was
+      // delivered — reclaim a retry prefix once a full stride
+      // accumulated (offsets stay absolute; only storage shrinks), then
+      // snapshot the record the truncation left
+      val m = if (isRetry && s - m0.base >= TopicStore.IndexStride) {
+        TopicStore.truncateRetries(root, t, conf.subscriptionName, p, s)
+        TopicStore.PartMeta.read(dir, p)
+      } else m0
       // A16: a retry entry is only admissible once its retry_at has
       // passed — the due decision is frozen into the offset here, so
       // replaying the batch from the checkpoint is deterministic
-      val endOff = if (isRetry) {
-        // GC: the committed cursor start means everything below was
-        // delivered — reclaim the prefix once a full stride accumulated
-        // (offsets stay absolute; only storage shrinks)
-        if (s - TopicStore.partitionBaseIn(
-            TopicStore.retryDir(root, t, conf.subscriptionName), p)
-            >= TopicStore.IndexStride)
-          TopicStore.truncateRetries(root, t, conf.subscriptionName, p, s)
-        dueRetryEnd(t, p, s, endRaw, nowMs)
-      } else endRaw
+      val endOff = if (isRetry) dueRetryEnd(t, p, s, endRaw, nowMs) else endRaw
       val avail = math.max(0L, endOff - s)
-      val dir = if (isRetry) TopicStore.retryDir(root, t, conf.subscriptionName)
-        else TopicStore.topicDir(root, t)
-      val (cnt, bytes) = TopicStore.partitionMetaIn(dir, p)
-      // bytes/row over the rows still ON DISK: cnt is the absolute
+      // bytes/row over the rows still ON DISK: count is the absolute
       // offset count (incl. the truncation-reclaimed prefix) while
-      // bytes is the current file size — dividing by cnt after a GC
+      // bytes is the current file size — dividing by count after a GC
       // would underestimate row size ~10x and overshoot the byte cap
-      val baseRows = TopicStore.partitionBaseIn(dir, p)
-      val curRows = cnt - baseRows
-      val bytesPerRow = if (curRows > 0) math.max(1L, bytes / curRows) else 1L
+      val curRows = m.count - m.base
+      val bytesPerRow = if (curRows > 0) math.max(1L, m.bytes / curRows) else 1L
       val byByte = if (byteBudget == Long.MaxValue) avail
         else math.min(avail, byteBudget / bytesPerRow)
       // minimum-one-row floor while budget remains: Pulsar's batch
@@ -607,11 +601,10 @@ class PulsarLikeBatch(conf: PulsarLikeConf, root: String,
   private[sources] lazy val slices: Seq[(java.nio.file.Path, String, Int,
       Long, Long, Long, Long)] = {
     PulsarLikeSource.resolveTopics(conf, root).flatMap { t =>
-      val dir = if (conf.readRetries)
-        TopicStore.retryDir(root, t, conf.subscriptionName)
-      else TopicStore.topicDir(root, t)
+      val dir = TopicStore.logDir(root, t, conf.subscriptionName,
+        conf.readRetries)
       TopicStore.partitionIdsIn(dir).map { p =>
-        val (cnt, bytes) = TopicStore.partitionMetaIn(dir, p)
+        val m = TopicStore.PartMeta.read(dir, p)
         // startingTime bounds a batch read the same way it seeks a
         // stream: slice from the first message at-or-after T. A
         // message-id seek is an absolute per-partition offset instead
@@ -620,7 +613,7 @@ class PulsarLikeBatch(conf: PulsarLikeConf, root: String,
         // unlisted partitions start at base; a seek past the log end
         // yields an empty slice, never an error). The conf forbids
         // combining the two.
-        val base = TopicStore.partitionBaseIn(dir, p)
+        val base = m.base
         val start = conf.startingTimeUs.filter(_ => !conf.readRetries)
           .map(TopicStore.seekByTimeIn(dir, p, _))
           .orElse(conf.startingOffsets.get(p).filter(_ => !conf.readRetries)
@@ -640,20 +633,19 @@ class PulsarLikeBatch(conf: PulsarLikeConf, root: String,
         // seek monotonicity in T)
         val end = conf.endingTimeUs.filter(_ => !conf.readRetries)
           .map(TopicStore.seekByTimeIn(dir, p, _))
-          .getOrElse(cnt)
+          .getOrElse(m.count)
         val capped = limit.map(l => math.min(end, start + l)).getOrElse(end)
         // top-N by publish_time: head (ASC) or tail (DESC) of the
         // slice — ONLY when this partition's meta proves the log is
         // time-sorted; otherwise the whole slice serves (more rows,
         // never wrong — Spark's sort+limit sits above)
         val (s2, e2) = topN match {
-          case Some((asc, n))
-              if TopicStore.partitionTimeMetaIn(dir, p)._2 =>
+          case Some((asc, n)) if m.tsorted =>
             if (asc) (start, math.min(capped, start + n))
             else (math.max(start, capped - n), capped)
           case _ => (start, capped)
         }
-        (dir, t, p, s2, e2, cnt, bytes)
+        (dir, t, p, s2, e2, m.count, m.bytes)
       }
     }
   }
@@ -733,55 +725,20 @@ class PulsarLikePartitionReader(ip: PulsarLikeInputPartition,
     fields.contains("value") || fields.contains("value_str")
 
   // held open for the slice; released in close() (and on exhaustion)
-  private var channel: java.nio.channels.FileChannel = _
+  private var slice: Option[TopicStore.Slice] = None
 
-  /** Lines [startOff, endOff) of the partition file: seek to the nearest
-    * indexed line ≤ startOff via the meta sidecar's sparse byte index,
-    * skip the remainder — O(slice + IndexStride) I/O per micro-batch
-    * instead of O(offset), and Long-safe past 2^31 lines. */
-  private def openLines(): Iterator[String] = {
-    val dir = if (ip.retrySub != null)
-      TopicStore.retryDir(ip.root, ip.topic, ip.retrySub)
-    else TopicStore.topicDir(ip.root, ip.topic)
-    val f = dir.resolve(s"part-${ip.p}.jsonl")
-    if (!Files.exists(f) || ip.endOff <= ip.startOff) return Iterator.empty
-    // index read + open + seek under the partition lock: a racing
-    // truncation rewrites the data file and THEN its meta sidecar, so
-    // an unlocked reader could pair the old byte index with the new
-    // file and position mid-line. The scan itself runs after release —
-    // the channel stays valid across a concurrent rename (POSIX), and
-    // offsets within the slice are stable once opened.
-    val idxLine = TopicStore.withPartitionLock(dir, ip.p) {
-      val (idxLine0, idxByte0) = TopicStore.partitionIndexIn(dir, ip.p)
-        .takeWhile(_._1 <= ip.startOff).lastOption
-        .getOrElse((TopicStore.partitionBaseIn(dir, ip.p), 0L))
-      channel = java.nio.channels.FileChannel.open(f,
-        java.nio.file.StandardOpenOption.READ)
-      channel.position(idxByte0)
-      idxLine0
+  /** Lines [startOff, endOff) of the partition file, through the store's
+    * locked opener: it seeks to the nearest indexed line ≤ startOff via
+    * the meta snapshot's sparse byte index and this iterator skips the
+    * remainder — O(slice + IndexStride) I/O per micro-batch instead of
+    * O(offset), and Long-safe past 2^31 lines. */
+  private def openLines(): Iterator[String] =
+    if (ip.endOff <= ip.startOff) Iterator.empty
+    else {
+      slice = TopicStore.openSlice(TopicStore.logDir(ip.root, ip.topic,
+        ip.retrySub, ip.retrySub != null), ip.p, ip.startOff)
+      slice.fold(Iterator.empty[String])(_.lines(ip.startOff, ip.endOff))
     }
-    val reader = new java.io.BufferedReader(
-      java.nio.channels.Channels.newReader(channel, "UTF-8"), 1 << 16)
-    var line = idxLine
-    while (line < ip.startOff && reader.readLine() != null) line += 1
-    val remaining = ip.endOff - ip.startOff
-    new Iterator[String] {
-      private var served = 0L
-      private var nextLine: String = if (remaining > 0) reader.readLine() else null
-      override def hasNext: Boolean = nextLine != null
-      override def next(): String = {
-        val s = nextLine
-        served += 1
-        nextLine = if (served < remaining) reader.readLine() else null
-        if (nextLine == null) closeChannel()
-        s
-      }
-    }
-  }
-
-  private def closeChannel(): Unit = {
-    if (channel != null && channel.isOpen) channel.close()
-  }
 
   private val iter: Iterator[TopicStore.Msg] = {
     val decoded = openLines().map(TopicStore.decode)
@@ -840,5 +797,5 @@ class PulsarLikePartitionReader(ip: PulsarLikeInputPartition,
     InternalRow(cells: _*)
   }
 
-  override def close(): Unit = closeChannel()
+  override def close(): Unit = slice.foreach(_.close())
 }

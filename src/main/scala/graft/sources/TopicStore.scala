@@ -1,13 +1,14 @@
 package graft.sources
 
+import java.io.BufferedReader
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.Base64
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +17,10 @@ import org.apache.spark.sql.functions._
   * reproduced over this store).
   *
   * Layout: `<root>/<topic>/part-<p>.jsonl` (one JSON message per line,
-  * line number = offset) + `part-<p>.meta` (`{"count":N,"bytes":B}`) so
-  * the streaming source's `latestOffset()` never scans data files.
+  * line number = offset) + `part-<p>.meta`, the [[PartMeta]] record
+  * (`{"count","bytes","base","maxPt","tsorted","index","txn"}`), so the
+  * streaming source's `latestOffset()` never scans data files.
+  * `part-<p>.lock` is the partition lock (`withPartitionLock`).
   *
   * Messages are routed to partitions by key hash (Pulsar's key routing):
   * a key lives in exactly one partition, which is what makes per-key
@@ -53,6 +56,11 @@ object TopicStore {
   def retryDir(root: String, topic: String, sub: String): Path =
     topicDir(root, topic).resolve(s".retry-$sub")
 
+  /** A topic's main log, or with `retry` subscription `sub`'s retry log
+    * of it. */
+  def logDir(root: String, topic: String, sub: String, retry: Boolean): Path =
+    if (retry) retryDir(root, topic, sub) else topicDir(root, topic)
+
   def listTopics(root: String): Seq[String] = {
     val r = Paths.get(root)
     if (!Files.isDirectory(r)) Seq.empty
@@ -87,80 +95,90 @@ object TopicStore {
     }
   }
 
+  /** One partition's meta sidecar, `part-<p>.meta`, decoded. Appends
+    * and truncations build the next value by `copy`; [[PartMeta.read]]
+    * is its one decoder and [[PartMeta.encode]] its one encoder.
+    *
+    *  - `count`: the absolute end offset (lines ever committed).
+    *  - `bytes`: committed bytes of the current data file.
+    *  - `base`: absolute offset of the file's first line — non-zero once
+    *    a prefix was reclaimed (retry-log GC, topic retention).
+    *  - `maxPt`, `tsorted`: the publish-time high-water (µs) and whether
+    *    every append so far arrived in non-decreasing publish-time order
+    *    — the precondition the m08 time seek's binary search and the
+    *    top-N slice cap rest on. Tracked at APPEND time and sticky false
+    *    once violated, so consumers refuse the optimization instead of
+    *    silently mis-seeking.
+    *  - `index`: the sparse (line, byteOffset) index, ascending, one
+    *    entry per `IndexStride` lines. Lines are ABSOLUTE offsets; bytes
+    *    are positions in the current file.
+    *  - `txn`: producer-transaction high-waters, token
+    *    ("queryId/writerPartition") → highest epochId whose append was
+    *    applied here. See [[appendIn]]'s txn parameter.
+    *
+    * The defaults are a partition with no meta file: empty, trivially
+    * sorted. A legacy meta (`{"count":N,"bytes":B}`, written before the
+    * later fields existed) decodes as base 0, an empty index and txn,
+    * and NOT provably sorted. */
+  final case class PartMeta(
+      count: Long = 0L, bytes: Long = 0L, base: Long = 0L,
+      maxPt: Long = Long.MinValue, tsorted: Boolean = true,
+      index: Vector[(Long, Long)] = Vector.empty,
+      txn: Map[String, Long] = Map.empty)
+
+  object PartMeta {
+    def read(dir: Path, p: Int): PartMeta = {
+      val m = metaFile(dir, p)
+      if (Files.exists(m)) decode(Files.readString(m)) else PartMeta()
+    }
+
+    private[sources] def decode(json: String): PartMeta = {
+      val n = mapper.readTree(json)
+      def field(k: String) = Option(n.get(k))
+      val idx = field("index").filter(_.isArray).fold(Vector.empty[(Long, Long)])(
+        _.elements().asScala.map(e => (e.get(0).asLong(), e.get(1).asLong())).toVector)
+      val txn = field("txn").filter(_.isObject).fold(Map.empty[String, Long])(
+        _.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
+      PartMeta(
+        count = n.get("count").asLong(),
+        bytes = n.get("bytes").asLong(),
+        base = field("base").fold(0L)(_.asLong()),
+        maxPt = field("maxPt").fold(Long.MinValue)(_.asLong()),
+        tsorted = field("maxPt").isDefined &&
+          field("tsorted").exists(_.asBoolean()),
+        index = idx, txn = txn)
+    }
+
+    /** Key order is fixed (count, bytes, base, maxPt, tsorted, index,
+      * txn); txn tokens are sorted. The time fields are left out while
+      * no publish time was ever recorded (a legacy meta's truncation), so
+      * such a record keeps decoding as not provably sorted. */
+    private[sources] def encode(m: PartMeta): String = {
+      val o = mapper.createObjectNode()
+      o.put("count", m.count).put("bytes", m.bytes).put("base", m.base)
+      if (m.maxPt != Long.MinValue)
+        o.put("maxPt", m.maxPt).put("tsorted", m.tsorted)
+      val idx = o.putArray("index")
+      m.index.foreach { case (l, b) => idx.addArray().add(l).add(b) }
+      val txn = o.putObject("txn")
+      m.txn.toSeq.sortBy(_._1).foreach { case (k, v) => txn.put(k, v) }
+      mapper.writeValueAsString(o)
+    }
+  }
+
+  private def metaFile(dir: Path, p: Int): Path = dir.resolve(s"part-$p.meta")
+  private def dataFile(dir: Path, p: Int): Path = dir.resolve(s"part-$p.jsonl")
+
   /** (count, bytes) per partition from the meta sidecar (O(1), no scan). */
   def partitionMeta(root: String, topic: String, p: Int): (Long, Long) =
     partitionMetaIn(topicDir(root, topic), p)
 
   def partitionMetaIn(dir: Path, p: Int): (Long, Long) = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) (0L, 0L)
-    else {
-      val n = mapper.readTree(Files.readString(m))
-      (n.get("count").asLong(), n.get("bytes").asLong())
-    }
+    val m = PartMeta.read(dir, p)
+    (m.count, m.bytes)
   }
 
-  /** Sparse (line, byteOffset) index for a partition file — ascending,
-    * one entry per `IndexStride` lines (empty for pre-index metas).
-    * Line numbers are ABSOLUTE offsets; byte offsets are positions in
-    * the current file (a truncated file starts at `partitionBaseIn`). */
-  def partitionIndexIn(dir: Path, p: Int): IndexedSeq[(Long, Long)] = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) Vector.empty
-    else {
-      val n = mapper.readTree(Files.readString(m))
-      val idx = n.get("index")
-      if (idx == null || !idx.isArray) Vector.empty
-      else idx.elements().asScala
-        .map(e => (e.get(0).asLong(), e.get(1).asLong())).toVector
-    }
-  }
-
-  /** Producer-transaction high-waters persisted in the meta sidecar:
-    * token ("queryId/writerPartition") → highest epochId whose append
-    * was applied to this partition. See [[appendIn]]'s txn parameter. */
-  def partitionTxnIn(dir: Path, p: Int): Map[String, Long] = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) Map.empty
-    else {
-      val t = mapper.readTree(Files.readString(m)).get("txn")
-      if (t == null || !t.isObject) Map.empty
-      else t.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
-  }
-
-  /** Publish-time high-water + sortedness flag for a partition:
-    * (maxPt µs, tsorted). `tsorted` is TRUE only when every append so
-    * far arrived in non-decreasing publish-time order — the
-    * precondition the m08 time seek's binary search and the top-N
-    * slice cap both rest on. Tracked at APPEND time (sticky false once
-    * violated) so consumers can refuse the optimization instead of
-    * silently mis-seeking. A fresh partition is trivially sorted; a
-    * legacy meta without the field reports NOT-provably-sorted. */
-  def partitionTimeMetaIn(dir: Path, p: Int): (Long, Boolean) = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) (Long.MinValue, true)
-    else {
-      val n = mapper.readTree(Files.readString(m))
-      val mp = n.get("maxPt")
-      if (mp == null) (Long.MinValue, false)
-      else {
-        val ts = n.get("tsorted")
-        (mp.asLong(), ts != null && ts.asBoolean())
-      }
-    }
-  }
-
-  /** Absolute offset of the partition file's first line — non-zero once
-    * the delivered prefix has been reclaimed (retry-log GC). */
-  def partitionBaseIn(dir: Path, p: Int): Long = {
-    val m = dir.resolve(s"part-$p.meta")
-    if (!Files.exists(m)) 0L
-    else {
-      val b = mapper.readTree(Files.readString(m)).get("base")
-      if (b == null) 0L else b.asLong()
-    }
-  }
+  def partitionBaseIn(dir: Path, p: Int): Long = PartMeta.read(dir, p).base
 
   /** Durable subscription-cursor dir (the broker-side ack position):
     * `<topic>/.sub-<sub>/p<p>.cursor` holds the NEXT offset the
@@ -191,21 +209,30 @@ object TopicStore {
     * to A15's checkpoint-commit mapping. */
   def ackCumulative(root: String, topic: String, sub: String, p: Int,
       upToIncl: Long): Long = {
-    val dir = topicDir(root, topic)
-    withPartitionLock(dir, p) {
+    withPartitionLock(topicDir(root, topic), p) {
       val cur = subCursor(root, topic, sub, p)
       val next = math.max(cur, upToIncl + 1)
-      if (next != cur) {
-        val d = subDir(root, topic, sub)
-        Files.createDirectories(d)
-        val tmp = Files.createTempFile(d, s".p$p", ".tmp")
-        Files.writeString(tmp, next.toString)
-        // ATOMIC_MOVE: rename(2) replaces the old cursor in one step
-        Files.move(tmp, d.resolve(s"p$p.cursor"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      if (next != cur) writeCursor(root, topic, sub, p, next)
       next
     }
+  }
+
+  private def writeCursor(root: String, topic: String, sub: String, p: Int,
+      next: Long): Unit = {
+    val d = subDir(root, topic, sub)
+    Files.createDirectories(d)
+    replaceAtomically(d.resolve(s"p$p.cursor"), next.toString)
+  }
+
+  /** Replace a small file in one step: temp file beside it, then
+    * ATOMIC_MOVE (rename(2)). Readers poll metas and cursors without
+    * the lock, so an in-place rewrite would let them read a truncated or
+    * half-written file. Writers call it under the partition lock. */
+  private def replaceAtomically(target: Path, content: String): Unit = {
+    val tmp = Files.createTempFile(target.getParent,
+      s".${target.getFileName}", ".tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Message expiry for a subscription — pulsar-admin
@@ -233,13 +260,10 @@ object TopicStore {
       toUs: Long): Long = {
     val dir = topicDir(root, topic)
     withPartitionLock(dir, p) {
-      val target = seekByTimeIn(dir, p, toUs)
-      val d = subDir(root, topic, sub)
-      Files.createDirectories(d)
-      val tmp = Files.createTempFile(d, s".p$p", ".tmp")
-      Files.writeString(tmp, target.toString)
-      Files.move(tmp, d.resolve(s"p$p.cursor"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // already under the lock: open with the held variant (a second
+      // FileChannel.lock in this JVM would throw)
+      val target = seekByTime(dir, p, openHeld(dir, p, 0L), toUs)
+      writeCursor(root, topic, sub, p, target)
       target
     }
   }
@@ -462,9 +486,6 @@ object TopicStore {
     (((h % numPartitions) + numPartitions) % numPartitions).toInt
   }
 
-  /** Append pre-encoded messages to one partition file under the lock;
-    * offsets/meta stay contiguous. Null messageIds are assigned from the
-    * partition offset. Executor-side API (DSv2 writer + publish). */
   // JVM-level monitor per partition file: java FileLock throws (not
   // blocks) on overlap within one JVM, and local[n] runs all tasks in
   // one JVM — so serialize in-process first, then take the file lock
@@ -473,17 +494,17 @@ object TopicStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Run `f` holding partition p's lock (in-JVM monitor + cross-process
-    * file lock — the same pair every writer takes). Readers use it for
-    * the meta-index-read + file-open critical section, so a concurrent
-    * truncation can never leave them seeking a PRE-truncation byte
-    * index into the rewritten file. Keep `f` short (open/position, not
-    * the scan). */
-  def withPartitionLock[T](dir: Path, p: Int)(f: => T): T = {
+    * file lock). Every writer takes it (appends, truncations, cursor
+    * writes); readers take it only in [[openSlice]], so a truncation
+    * can never leave them seeking a PRE-truncation byte index into the
+    * rewritten file. Keep `f` short. Not reentrant: a second
+    * FileChannel.lock on the same file in one JVM throws. */
+  private def withPartitionLock[T](dir: Path, p: Int)(f: => T): T = {
     val lockFile = dir.resolve(s"part-$p.lock")
     val monitor = monitors.computeIfAbsent(
       lockFile.toAbsolutePath.toString, _ => new Object)
     monitor.synchronized {
-      val ch = java.nio.channels.FileChannel.open(lockFile,
+      val ch = FileChannel.open(lockFile,
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       val lock = ch.lock()
       try f finally { lock.release(); ch.close() }
@@ -493,18 +514,6 @@ object TopicStore {
   def append(root: String, topic: String, p: Int, msgs: Seq[Msg],
       txn: Option[(String, Long)] = None): Unit =
     appendIn(topicDir(root, topic).toAbsolutePath.toString, p, msgs, txn)
-
-  def appendRetries(root: String, topic: String, sub: String, p: Int,
-      msgs: Seq[Msg]): Unit =
-    appendIn(retryDir(root, topic, sub).toAbsolutePath.toString, p, msgs)
-
-  /** Serialize a txn high-water map as the meta sidecar's `txn` object
-    * (Jackson-escaped — token keys carry a queryId UUID). */
-  private def txnJson(t: Map[String, Long]): String = {
-    val o = mapper.createObjectNode()
-    t.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
-    mapper.writeValueAsString(o)
-  }
 
   /** Append messages to one partition file under the lock; offsets/meta
     * stay contiguous. Null messageIds are assigned from the partition
@@ -521,89 +530,60 @@ object TopicStore {
     * Spark's micro-batch contract; a NEW query (fresh checkpoint) gets a
     * new queryId, so its restarted epoch numbering never collides. */
   def appendIn(dirStr: String, p: Int, msgs: Seq[Msg],
-      txn: Option[(String, Long)] = None): Unit = {
-    if (msgs.isEmpty) return
+      txn: Option[(String, Long)] = None): Unit = if (msgs.nonEmpty) {
     val dir = Paths.get(dirStr)
     Files.createDirectories(dir)
-    val dataFile = dir.resolve(s"part-$p.jsonl")
-    val metaFile = dir.resolve(s"part-$p.meta")
-    val lockFile = dir.resolve(s"part-$p.lock")
-    val monitor = monitors.computeIfAbsent(
-      lockFile.toAbsolutePath.toString, _ => new Object)
-    monitor.synchronized {
-    val ch = java.nio.channels.FileChannel.open(lockFile,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
+    withPartitionLock(dir, p) {
       // every append path carries existing high-waters forward — a plain
       // publish interleaved with a transactional sink must not wipe them
-      val txn0 = partitionTxnIn(dir, p)
+      val prev = PartMeta.read(dir, p)
       val replayed = txn.exists { case (tok, epoch) =>
-        txn0.get(tok).exists(_ >= epoch) }
-      if (replayed) return
-      val txn1 = txn.fold(txn0) { case (tok, epoch) => txn0 + (tok -> epoch) }
-      val (base, bytes0) =
-        if (Files.exists(metaFile)) {
-          val n = mapper.readTree(Files.readString(metaFile))
-          (n.get("count").asLong(), n.get("bytes").asLong())
-        } else (0L, 0L)
-      val index = Vector.newBuilder[(Long, Long)]
-      index ++= partitionIndexIn(dir, p)
-      // publish-time monotonicity tracking (see partitionTimeMetaIn):
-      // an append below the high-water marks the partition unsorted —
-      // STICKY, so time-ordered optimizations refuse it forever after
-      val (maxPt0, sorted0) = partitionTimeMetaIn(dir, p)
-      var maxPt = maxPt0
-      var tsorted = sorted0
-      val sb = new StringBuilder
-      var off = base
-      var bytes = bytes0
-      msgs.foreach { m0 =>
-        val m = if (m0.messageId != null) m0
-          else m0.copy(messageId = s"0:$off:$p:0")
-        if (m.publishTimeUs < maxPt) tsorted = false
-        else maxPt = m.publishTimeUs
-        if (off % IndexStride == 0L) index += ((off, bytes))
-        val line = encode(m)
-        sb.append(line).append('\n')
-        // byte (not char) length — the reader seeks by byte position
-        bytes += line.getBytes(StandardCharsets.UTF_8).length + 1
-        off += 1
-      }
-      // a crash between an earlier append's data write and its meta
-      // rewrite leaves uncommitted lines past meta `bytes`; cut them off
-      // first, or this append's meta would serve them as committed
-      val data = java.nio.channels.FileChannel.open(dataFile,
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try {
-        if (data.size() > bytes0) data.truncate(bytes0)
-        data.position(data.size())
-        val buf = java.nio.ByteBuffer.wrap(
-          sb.toString.getBytes(StandardCharsets.UTF_8))
-        while (buf.hasRemaining) data.write(buf)
-      } finally data.close()
-      val lineBase = partitionBaseIn(dir, p)
-      val idxJson = index.result()
-        .map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")
-      writeMeta(dir, p,
-        s"""{"count":$off,"bytes":$bytes,"base":$lineBase,""" +
-          s""""maxPt":$maxPt,"tsorted":$tsorted,""" +
-          s""""index":$idxJson,"txn":${txnJson(txn1)}}""")
-    } finally { lock.release(); ch.close() }
+        prev.txn.get(tok).exists(_ >= epoch) }
+      if (!replayed) appendLocked(dir, p, prev, msgs,
+        txn.fold(prev.txn)(prev.txn + _))
     }
   }
 
-  /** Replace partition p's meta sidecar in one step: temp file, then
-    * ATOMIC_MOVE (rename(2)), the cursor files' discipline. Readers poll
-    * the meta without the lock, so an in-place rewrite would let them
-    * read a truncated or half-written file. Call under the partition
-    * lock. */
-  private def writeMeta(dir: Path, p: Int, json: String): Unit = {
-    val tmp = Files.createTempFile(dir, s".part-$p.meta", ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, dir.resolve(s"part-$p.meta"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def appendLocked(dir: Path, p: Int, prev: PartMeta, msgs: Seq[Msg],
+      txn: Map[String, Long]): Unit = {
+    val index = Vector.newBuilder[(Long, Long)] ++= prev.index
+    // an append below the publish-time high-water marks the partition
+    // unsorted — STICKY, so time-ordered optimizations refuse it forever
+    var maxPt = prev.maxPt
+    var tsorted = prev.tsorted
+    val sb = new StringBuilder
+    var off = prev.count
+    var bytes = prev.bytes
+    msgs.foreach { m0 =>
+      val m = if (m0.messageId != null) m0
+        else m0.copy(messageId = s"0:$off:$p:0")
+      if (m.publishTimeUs < maxPt) tsorted = false
+      else maxPt = m.publishTimeUs
+      if (off % IndexStride == 0L) index += ((off, bytes))
+      val line = encode(m)
+      sb.append(line).append('\n')
+      // byte (not char) length — the reader seeks by byte position
+      bytes += line.getBytes(StandardCharsets.UTF_8).length + 1
+      off += 1
+    }
+    // a crash between an earlier append's data write and its meta
+    // rewrite leaves uncommitted lines past meta `bytes`; cut them off
+    // first, or this append's meta would serve them as committed
+    val data = FileChannel.open(dataFile(dir, p),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      if (data.size() > prev.bytes) data.truncate(prev.bytes)
+      data.position(data.size())
+      val buf = java.nio.ByteBuffer.wrap(
+        sb.toString.getBytes(StandardCharsets.UTF_8))
+      while (buf.hasRemaining) data.write(buf)
+    } finally data.close()
+    writeMeta(dir, p, prev.copy(count = off, bytes = bytes, maxPt = maxPt,
+      tsorted = tsorted, index = index.result(), txn = txn))
   }
+
+  private def writeMeta(dir: Path, p: Int, m: PartMeta): Unit =
+    replaceAtomically(metaFile(dir, p), PartMeta.encode(m))
 
   /** Reclaim the delivered prefix of a retry partition: drop all lines
     * with absolute offset < `upTo`, record the new `base`, rebuild the
@@ -624,63 +604,51 @@ object TopicStore {
   def truncateTopic(root: String, topic: String, p: Int, upTo: Long): Unit =
     truncateIn(topicDir(root, topic), p, upTo)
 
-  private def truncateIn(dir: Path, p: Int, upTo: Long): Unit = {
-    val dataFile = dir.resolve(s"part-$p.jsonl")
-    val lockFile = dir.resolve(s"part-$p.lock")
-    if (!Files.exists(dataFile)) return
-    val monitor = monitors.computeIfAbsent(
-      lockFile.toAbsolutePath.toString, _ => new Object)
-    monitor.synchronized {
-      val ch = java.nio.channels.FileChannel.open(lockFile,
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      val lock = ch.lock()
-      try {
-        val (count, _) = partitionMetaIn(dir, p)
-        val base = partitionBaseIn(dir, p)
-        val newBase = math.min(math.max(upTo, base), count)
-        if (newBase == base) return
-        // streamed rewrite (never loads the log in memory) into a temp
-        // file, then an atomic move — a reader racing the rename sees
-        // either file complete
-        val tmp = dir.resolve(s"part-$p.jsonl.tmp")
-        val index = Vector.newBuilder[(Long, Long)]
-        var bytes = 0L
-        val in = Files.newBufferedReader(dataFile, StandardCharsets.UTF_8)
-        try {
-          var skip = newBase - base
-          while (skip > 0 && in.readLine() != null) skip -= 1
-          val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
-            StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-          try {
-            var off = newBase
-            var line = in.readLine()
-            while (line != null) {
-              if (off % IndexStride == 0L) index += ((off, bytes))
-              out.write(line); out.newLine()
-              bytes += line.getBytes(StandardCharsets.UTF_8).length + 1
-              off += 1
-              line = in.readLine()
-            }
-          } finally out.close()
-        } finally in.close()
-        Files.move(tmp, dataFile,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        val idxJson = index.result()
-          .map { case (l, b) => s"[$l,$b]" }.mkString("[", ",", "]")
+  private def truncateIn(dir: Path, p: Int, upTo: Long): Unit =
+    if (Files.exists(dataFile(dir, p))) withPartitionLock(dir, p) {
+      val m = PartMeta.read(dir, p)
+      val newBase = math.min(math.max(upTo, m.base), m.count)
+      if (newBase != m.base) {
+        val (bytes, index) = rewriteFrom(dir, p, newBase - m.base, newBase)
         // retention must not forget producer-epoch high-waters: wiping
         // them would let a replayed epoch duplicate after a truncation.
         // Time meta carries forward too (a prefix drop cannot unsort a
         // sorted log; an unsorted flag stays conservatively sticky).
-        val (mp, ts) = partitionTimeMetaIn(dir, p)
-        val timeJson =
-          if (mp == Long.MinValue) ""
-          else s""""maxPt":$mp,"tsorted":$ts,"""
-        writeMeta(dir, p,
-          s"""{"count":$count,"bytes":$bytes,"base":$newBase,$timeJson""" +
-            s""""index":$idxJson,"txn":${txnJson(partitionTxnIn(dir, p))}}""")
-      } finally { lock.release(); ch.close() }
+        writeMeta(dir, p, m.copy(bytes = bytes, base = newBase, index = index))
+      }
     }
+
+  /** Drop the data file's first `skip` lines: a streamed rewrite (never
+    * loads the log in memory) into a temp file, then an atomic move — a
+    * reader racing the rename sees either file complete. Returns the new
+    * file's bytes and its index, whose first line is `newBase`. */
+  private def rewriteFrom(dir: Path, p: Int, skip: Long, newBase: Long)
+      : (Long, Vector[(Long, Long)]) = {
+    val f = dataFile(dir, p)
+    val tmp = dir.resolve(s"part-$p.jsonl.tmp")
+    val index = Vector.newBuilder[(Long, Long)]
+    var bytes = 0L
+    val in = Files.newBufferedReader(f, StandardCharsets.UTF_8)
+    try {
+      var left = skip
+      while (left > 0 && in.readLine() != null) left -= 1
+      val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
+        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      try {
+        var off = newBase
+        var line = in.readLine()
+        while (line != null) {
+          if (off % IndexStride == 0L) index += ((off, bytes))
+          out.write(line); out.newLine()
+          bytes += line.getBytes(StandardCharsets.UTF_8).length + 1
+          off += 1
+          line = in.readLine()
+        }
+      } finally out.close()
+    } finally in.close()
+    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
+    (bytes, index.result())
   }
 
   private def writeGroup(dir: String, p: Int,
@@ -706,33 +674,82 @@ object TopicStore {
     appendIn(dir, p, msgs)
   }
 
+  /** A partition file opened by [[openSlice]]: the meta snapshot taken
+    * under the lock, and a read channel positioned at absolute line
+    * `line` — the nearest indexed line at or below the requested
+    * offset. The caller scans after the lock is released: the channel
+    * keeps the opened file across a truncation's rename (POSIX), and the
+    * snapshot's byte index belongs to that file. */
+  final class Slice private[TopicStore] (
+      private[TopicStore] val meta: PartMeta, line: Long,
+      channel: FileChannel) extends java.io.Closeable {
+
+    /** A reader over the file from byte `pos`. */
+    private[TopicStore] def readerAt(pos: Long): BufferedReader = {
+      channel.position(pos)
+      reader()
+    }
+
+    private def reader(): BufferedReader = new BufferedReader(
+      Channels.newReader(channel, StandardCharsets.UTF_8.name()), 1 << 16)
+
+    /** Lines [from, until), `from` ≥ the opened line; call once. The
+      * channel closes when the iterator is exhausted. */
+    def lines(from: Long, until: Long): Iterator[String] = {
+      val r = reader()
+      var l = line
+      while (l < from && r.readLine() != null) l += 1
+      val remaining = until - from
+      new Iterator[String] {
+        private var served = 0L
+        private var nextLine: String = if (remaining > 0) r.readLine() else null
+        override def hasNext: Boolean = nextLine != null
+        override def next(): String = {
+          val s = nextLine
+          served += 1
+          nextLine = if (served < remaining) r.readLine() else null
+          if (nextLine == null) close()
+          s
+        }
+      }
+    }
+
+    override def close(): Unit = if (channel.isOpen) channel.close()
+  }
+
+  /** Open partition p for reading from absolute offset `from`: under the
+    * partition lock, snapshot the meta, open the data file and position
+    * it at the nearest indexed line ≤ `from`. None when the partition
+    * has no data file. A racing truncation rewrites the data file and
+    * THEN its meta, so an unlocked reader could pair the old byte index
+    * with the new file and start mid-line. */
+  def openSlice(dir: Path, p: Int, from: Long): Option[Slice] =
+    if (!Files.exists(dataFile(dir, p))) None
+    else withPartitionLock(dir, p)(openHeld(dir, p, from))
+
+  /** [[openSlice]] for a caller that already holds partition p's lock. */
+  private def openHeld(dir: Path, p: Int, from: Long): Option[Slice] = {
+    val f = dataFile(dir, p)
+    if (!Files.exists(f)) None
+    else {
+      val m = PartMeta.read(dir, p)
+      val (line, byte) = m.index.takeWhile(_._1 <= from).lastOption
+        .getOrElse((m.base, 0L))
+      val ch = FileChannel.open(f, StandardOpenOption.READ)
+      ch.position(byte)
+      Some(new Slice(m, line, ch))
+    }
+  }
+
   /** Decode a closed range of lines from one partition file, seeking via
     * the sparse index — O(slice + IndexStride) work, Long-safe. Caller
-    * side: driver-side retry scans and tests; the DSv2 reader keeps its
-    * own streaming variant so it can close lazily. */
-  def readEntries(dir: Path, p: Int, from: Long, until: Long): Vector[Msg] = {
-    val f = dir.resolve(s"part-$p.jsonl")
-    if (!Files.exists(f) || until <= from) return Vector.empty
-    val (idxLine, idxByte) = partitionIndexIn(dir, p)
-      .takeWhile(_._1 <= from).lastOption
-      .getOrElse((partitionBaseIn(dir, p), 0L))
-    val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-    try {
-      ch.position(idxByte)
-      val r = new java.io.BufferedReader(
-        java.nio.channels.Channels.newReader(ch, StandardCharsets.UTF_8.name()), 1 << 16)
-      var line = idxLine
-      while (line < from && r.readLine() != null) line += 1
-      val out = Vector.newBuilder[Msg]
-      var s = r.readLine()
-      while (s != null && line < until) {
-        out += decode(s)
-        line += 1
-        s = if (line < until) r.readLine() else null
-      }
-      out.result()
-    } finally ch.close()
-  }
+    * side: driver-side retry scans and tests; the DSv2 reader iterates
+    * the same [[Slice]] lazily. */
+  def readEntries(dir: Path, p: Int, from: Long, until: Long): Vector[Msg] =
+    if (until <= from) Vector.empty
+    else openSlice(dir, p, from).fold(Vector.empty[Msg]) { s =>
+      try s.lines(from, until).map(decode).toVector finally s.close()
+    }
 
   /** First offset whose publish_time >= tUs, assuming per-partition
     * publish-time monotonicity (a broker stamps publish time in append
@@ -743,41 +760,40 @@ object TopicStore {
     * that prefix linearly — correct, just O(prefix); appends index
     * forward from where the log stands. Returns the partition end when
     * every retained message is older, the base when none is. */
-  def seekByTimeIn(dir: Path, p: Int, tUs: Long): Long = {
-    val f = dir.resolve(s"part-$p.jsonl")
-    val base = partitionBaseIn(dir, p)
-    val (cnt, _) = partitionMetaIn(dir, p)
-    if (!Files.exists(f) || cnt <= base) return base
-    val entries = ((base, 0L) +: partitionIndexIn(dir, p))
-      .filter(_._1 >= base).distinct.sortBy(_._1)
-    val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-    try {
-      def reader(bytePos: Long): java.io.BufferedReader = {
-        ch.position(bytePos)
-        new java.io.BufferedReader(java.nio.channels.Channels.newReader(
-          ch, StandardCharsets.UTF_8.name()), 1 << 16)
-      }
-      def ptAt(bytePos: Long): Long = {
-        val s = reader(bytePos).readLine()
-        if (s == null) Long.MaxValue else decode(s).publishTimeUs
-      }
-      if (ptAt(entries.head._2) >= tUs) return entries.head._1
-      // invariant: publish_time at entries(lo) < tUs
-      var lo = 0
-      var hi = entries.length - 1
-      while (lo < hi) {
-        val mid = (lo + hi + 1) / 2
-        if (ptAt(entries(mid)._2) < tUs) lo = mid else hi = mid - 1
-      }
-      val (startLine, startByte) = entries(lo)
-      val r = reader(startByte)
-      var line = startLine
-      var s = r.readLine()
-      while (s != null && decode(s).publishTimeUs < tUs) {
-        line += 1
-        s = r.readLine()
-      }
-      line
-    } finally ch.close()
+  def seekByTimeIn(dir: Path, p: Int, tUs: Long): Long =
+    seekByTime(dir, p, openSlice(dir, p, 0L), tUs)
+
+  private def seekByTime(dir: Path, p: Int, slice: Option[Slice],
+      tUs: Long): Long = slice match {
+    case None => PartMeta.read(dir, p).base
+    case Some(s) => try seekIn(s, tUs) finally s.close()
+  }
+
+  private def seekIn(s: Slice, tUs: Long): Long = {
+    val m = s.meta
+    if (m.count <= m.base) return m.base
+    val entries = ((m.base, 0L) +: m.index)
+      .filter(_._1 >= m.base).distinct.sortBy(_._1)
+    def ptAt(bytePos: Long): Long = {
+      val l = s.readerAt(bytePos).readLine()
+      if (l == null) Long.MaxValue else decode(l).publishTimeUs
+    }
+    if (ptAt(entries.head._2) >= tUs) return entries.head._1
+    // invariant: publish_time at entries(lo) < tUs
+    var lo = 0
+    var hi = entries.length - 1
+    while (lo < hi) {
+      val mid = (lo + hi + 1) / 2
+      if (ptAt(entries(mid)._2) < tUs) lo = mid else hi = mid - 1
+    }
+    val (startLine, startByte) = entries(lo)
+    val r = s.readerAt(startByte)
+    var line = startLine
+    var l = r.readLine()
+    while (l != null && decode(l).publishTimeUs < tUs) {
+      line += 1
+      l = r.readLine()
+    }
+    line
   }
 }

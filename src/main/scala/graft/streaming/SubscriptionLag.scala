@@ -34,10 +34,9 @@ object SubscriptionLag {
     val rows = TopicStore.listTopics(root).flatMap { t =>
       val dir = TopicStore.topicDir(root, t)
       TopicStore.partitionIdsIn(dir).map { p =>
-        val (logEnd, _) = TopicStore.partitionMetaIn(dir, p)
-        val base = TopicStore.partitionBaseIn(dir, p)
-        val cur = committed.getOrElse(PulsarLikeOffset.key(t, p), base)
-        (t, p, cur, logEnd, math.max(0L, logEnd - cur))
+        val m = TopicStore.PartMeta.read(dir, p)
+        val cur = committed.getOrElse(PulsarLikeOffset.key(t, p), m.base)
+        (t, p, cur, m.count, math.max(0L, m.count - cur))
       }
     }
     import spark.implicits._

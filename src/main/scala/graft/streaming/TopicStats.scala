@@ -29,9 +29,8 @@ object TopicStats {
     val meta = topics.flatMap { t =>
       val dir = TopicStore.topicDir(root, t)
       TopicStore.partitionIdsIn(dir).map { p =>
-        val (logEnd, _) = TopicStore.partitionMetaIn(dir, p)
-        val base = TopicStore.partitionBaseIn(dir, p)
-        (t, p, base, logEnd)
+        val m = TopicStore.PartMeta.read(dir, p)
+        (t, p, m.base, m.count)
       }
     }.toDF("topic", "partition", "base_offset", "log_end")
     val msgs = spark.read.format("pulsarlike")

@@ -221,7 +221,6 @@ class PropertySpec extends SparkSpec {
     check(Prop.forAllNoShrink(planGen) { case (w1, w2, limits) =>
       val root = tmpDir("prop-keyshared")
       val all = w1 ++ w2
-      val planOf = all.map(m => s"${m.key}/${m.seq}" -> m).toMap
       publishWave(root, w1)
 
       val conf = graft.model.PulsarLikeConf.fromOptions(Map(

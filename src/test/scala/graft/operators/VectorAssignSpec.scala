@@ -40,7 +40,6 @@ class VectorAssignSpec extends SparkSpec {
   }
 
   test("k=4096 banded assignment runs without codegen failure, total coverage") {
-    import spark.implicits._
     // deterministic synthetic model at production-ish k — training 4096
     // real cells on a 1k-row fixture is meaningless, the regime under
     // test is expression/broadcast structure, not model quality

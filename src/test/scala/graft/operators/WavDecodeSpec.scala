@@ -4,8 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Real-codec audio gate (round-7 mirror of ImageioDecodeSpec): WAV

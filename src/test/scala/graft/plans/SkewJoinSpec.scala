@@ -16,7 +16,6 @@ import graft.SparkSpec
 class SkewJoinSpec extends SparkSpec {
 
   test("AQE splits the hot key; results identical to the unsplit plan") {
-    import spark.implicits._
     val conf = spark.conf
     val keys = Seq(
       "spark.sql.adaptive.enabled",

@@ -2,8 +2,6 @@ package graft.queries
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.{QueryRegistry, SparkSpec}
 
 /** The shipped queries over inputs the driver fixture never produces:

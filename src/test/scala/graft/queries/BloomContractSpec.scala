@@ -37,11 +37,6 @@ class BloomContractSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  private val gramGen: Gen[String] = for {
-    n <- Gen.choose(3, 8)
-    ws <- Gen.listOfN(n, Gen.identifier.map(_.take(6)).suchThat(_.nonEmpty))
-  } yield ws.mkString(" ")
-
   test("bloom membership: zero false negatives, FP rate within analytic bound") {
     val corpusGen = for {
       nEval <- Gen.choose(500, 4000)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.{QueryRegistry, SparkSpec}
 
 /** The oracle only proves both engines agree — it cannot see whether

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 import graft.{QueryRegistry, SparkSpec, Tables}

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.{QueryRegistry, SparkSpec}
 
 /** p27's allocation invariants — the mirrored oracle proves both

@@ -13,7 +13,6 @@ import graft.operators.SketchOps
   * the gated surfaces ride on. */
 class Round10AdditionsSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
   import org.apache.datasketches.memory.Memory
 
   private def writeEvents(d: String,

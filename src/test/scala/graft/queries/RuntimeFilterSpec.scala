@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.{QueryRegistry, SparkSpec}
 
 /** q53's scale claim, proven at test scale: Spark's runtime

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.{QueryRegistry, SparkSpec}
 
 /** d09's per-doc rejection-accounting contract on the corner the shipped

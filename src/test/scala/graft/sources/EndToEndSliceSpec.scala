@@ -124,7 +124,6 @@ class EndToEndSliceSpec extends SparkSpec {
         col("publish_time"))
     // each key maps to exactly one partition, and within it publish_time
     // is non-decreasing with offset — so per-key order is total
-    import spark.implicits._
     val violations = df
       .withColumn("prev_ts", lag("publish_time", 1)
         .over(org.apache.spark.sql.expressions.Window

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -17,7 +19,7 @@ import graft.streaming.ChunkReassembly
 class HardeningRegressionSpec extends SparkSpec {
 
   private def publishRows(root: String, rows: Seq[(String, String)],
-      parts: Int = 2): Unit = {
+      parts: Int): Unit = {
     import spark.implicits._
     TopicStore.publish(spark,
       rows.toDF("key", "value_str")
@@ -74,6 +76,53 @@ class HardeningRegressionSpec extends SparkSpec {
     val stored = TopicStore.readEntries(dir, 0, 0, Long.MaxValue).map(_.key)
     assert(stored == Seq("a0", "a1", "c0", "c1"),
       s"uncommitted lines survived in the log: $stored")
+  }
+
+  test("readers racing a truncation never seek the old index into the new file") {
+    // seekByTimeIn and readEntries read the meta and opened the data
+    // file without the partition lock. A truncation moves the rewritten
+    // file in and THEN rewrites the meta, so a reader in between paired
+    // the old byte index with the new file: it started mid-line and
+    // threw, or read past the end and served nothing (5-11% of the
+    // reads in this loop, both kinds)
+    val root = tmpDir("truncate-race")
+    val dir = TopicStore.topicDir(root, "t")
+    val t0 = 1700000000000000L
+    TopicStore.append(root, "t", 0, (0 until 20000).map(i =>
+      TopicStore.Msg(null, s"k$i", "eA==", Map.empty, t0 + i, t0 + i, 0,
+        "text/plain")))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val calls = new java.util.concurrent.atomic.AtomicLong()
+    def loop(name: String)(read: => Option[String]): Thread = new Thread(() =>
+      while (!stop.get()) {
+        try read.foreach(failures.add)
+        catch { case e: Exception => failures.add(s"$name threw $e") }
+        calls.incrementAndGet()
+      })
+    val tail = (19990 until 20000).map(i => s"0:$i:0:0")
+    val readers = Seq(
+      loop("seekByTimeIn") {
+        val at = TopicStore.seekByTimeIn(dir, 0, t0 + 15000L)
+        Option.when(at != 15000L)(s"seekByTimeIn returned $at")
+      },
+      loop("readEntries") {
+        val got = TopicStore.readEntries(dir, 0, 19990L, 20000L)
+          .map(_.messageId)
+        Option.when(got != tail)(s"readEntries returned $got")
+      })
+    readers.foreach(_.start())
+    // 200 truncations, never past the offsets the readers ask for
+    try (1 to 200).foreach(i => TopicStore.truncateTopic(root, "t", 0, i * 50L))
+    finally { stop.set(true); readers.foreach(_.join()) }
+    assert(calls.get() > 0)
+    val failed = failures.asScala.toSeq
+    val byKind = failed.groupBy(_.takeWhile(_ != ' '))
+      .map { case (k, v) => s"$k ${v.size}" }
+    val nFailed = failed.size
+    assert(nFailed == 0, s"of ${calls.get()} reads: ${byKind.mkString(", ")}" +
+      s" failed; first: ${failed.headOption.getOrElse("")}")
+    assert(TopicStore.partitionBaseIn(dir, 0) == 10000L)
   }
 
   test("byte-capped admission floors at one row per trigger instead of stalling") {

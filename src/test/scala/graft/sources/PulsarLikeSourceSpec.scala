@@ -288,7 +288,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
     }.toDF("key", "value_str", "properties", "publish_time", "content_type")
     TopicStore.publish(spark, df, root, "big", 1)
     val dir = TopicStore.topicDir(root, "big")
-    assert(TopicStore.partitionIndexIn(dir, 0).length >= 2)
+    assert(TopicStore.PartMeta.read(dir, 0).index.length >= 2)
     // cut points around stride boundaries, interior, and the extremes
     for (cut <- Seq(0L, 1L, 4095L, 4096L, 4097L, 8192L, 9999L, 10000L)) {
       val tUs = (1700000000000L + cut * 100L) * 1000L
@@ -305,7 +305,6 @@ class PulsarLikeSourceSpec extends SparkSpec {
     val root = tmpDir("store")
     val ckpt = tmpDir("ckpt")
     publishEvents(root, "events", 30)
-    import spark.implicits._
 
     def run(): Long = {
       val seen = new java.util.concurrent.atomic.AtomicLong
@@ -439,7 +438,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
     }
     TopicStore.append(root, "big", 0, msgs)
     TopicStore.append(root, "big", 0, msgs)
-    val idx = TopicStore.partitionIndexIn(TopicStore.topicDir(root, "big"), 0)
+    val idx = TopicStore.PartMeta.read(TopicStore.topicDir(root, "big"), 0).index
     assert(idx.map(_._1) == Vector(0L, 4096L, 8192L), s"index: $idx")
     // a slice starting deep in the file decodes exactly those lines
     val slice = TopicStore.readEntries(
@@ -478,7 +477,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
     val ids = lines.asScala.map(l => TopicStore.decode(l).messageId).toSet
     assert(ids == (0 until 2000).map(i => s"0:$i:0:0").toSet)
     // sparse index entries point at real line starts
-    val idx = TopicStore.partitionIndexIn(dir, 0)
+    val idx = TopicStore.PartMeta.read(dir, 0).index
     assert(idx.nonEmpty)
     idx.foreach { case (line, _) =>
       val got = TopicStore.readEntries(dir, 0, line, line + 1)
@@ -536,7 +535,6 @@ class PulsarLikeSourceSpec extends SparkSpec {
     val root = tmpDir("store")
     val ckpt = tmpDir("ckpt")
     publishEvents(root, "events", 10)
-    import spark.implicits._
     def run(): Long = {
       val seen = new java.util.concurrent.atomic.AtomicLong
       val q = spark.readStream.format("pulsarlike")

@@ -36,7 +36,6 @@ class StatsLimitSpec extends SparkSpec {
     // a big-ish static side (too big to be the broadcast side itself
     // at the default 10 MB threshold it WOULD still broadcast — so
     // assert the DIRECTION: the topic relation is the build side)
-    import spark.implicits._
     val big = spark.range(0, 200000)
       .select(concat(lit("k"), (col("id") % 5).cast("string")).as("k2"),
         concat(lit("x" * 64), col("id").cast("string")).as("pad"))

@@ -65,16 +65,16 @@ class TopNPushdownSpec extends SparkSpec {
   test("an out-of-order append flips tsorted and disables the cap") {
     val root = tmpDir("topn-unsorted")
     publishEvents(root, 20, parts = 1)
-    assert(TopicStore.partitionTimeMetaIn(
-      TopicStore.topicDir(root, "events"), 0)._2)
+    assert(TopicStore.PartMeta.read(
+      TopicStore.topicDir(root, "events"), 0).tsorted)
     // a late append BELOW the high-water: the broker-assigned-time
     // premise is broken, the flag flips and stays
     TopicStore.append(root, "events", 0, Seq(TopicStore.Msg(
       null, "late", java.util.Base64.getEncoder.encodeToString(
         "late".getBytes), Map("seq" -> "99"), (t0 - 5000L) * 1000L,
       (t0 - 5000L) * 1000L, 0, "text/plain")))
-    assert(!TopicStore.partitionTimeMetaIn(
-      TopicStore.topicDir(root, "events"), 0)._2)
+    assert(!TopicStore.PartMeta.read(
+      TopicStore.topicDir(root, "events"), 0).tsorted)
 
     // top-N still answers CORRECTLY (full-slice fallback + Spark sort)
     val latest = read(root).orderBy(col("publish_time").desc).limit(3)

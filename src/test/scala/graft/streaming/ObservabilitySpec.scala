@@ -22,7 +22,6 @@ class ObservabilitySpec extends SparkSpec {
   import ObservabilitySpec._
 
   test("observe() collects named metrics in the same pass as the action") {
-    import spark.implicits._
     val obs = new org.apache.spark.sql.Observation("cleaning")
     val out = spark.range(100).toDF("id")
       .withColumn("ok", col("id") % 10 =!= 0)

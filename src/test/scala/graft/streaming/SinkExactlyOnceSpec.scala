@@ -98,7 +98,7 @@ class SinkExactlyOnceSpec extends SparkSpec {
     assert(TopicStore.partitionMetaIn(dir, 0)._1 == 2L)
     // a plain (non-transactional) append must carry the high-water forward
     TopicStore.appendIn(dir.toString, 0, Seq(msg(2)))
-    assert(TopicStore.partitionTxnIn(dir, 0) == Map("q/0" -> 3L))
+    assert(TopicStore.PartMeta.read(dir, 0).txn == Map("q/0" -> 3L))
     TopicStore.appendIn(dir.toString, 0, Seq(msg(0), msg(1)), Some(("q/0", 3L)))
     assert(TopicStore.partitionMetaIn(dir, 0)._1 == 3L, "replay after plain append must still skip")
     // a later epoch from the same writer appends
@@ -107,6 +107,6 @@ class SinkExactlyOnceSpec extends SparkSpec {
     // an unrelated writer (fresh queryId) is never mis-skipped
     TopicStore.appendIn(dir.toString, 0, Seq(msg(4)), Some(("q2/0", 0L)))
     assert(TopicStore.partitionMetaIn(dir, 0)._1 == 5L)
-    assert(TopicStore.partitionTxnIn(dir, 0) == Map("q/0" -> 4L, "q2/0" -> 0L))
+    assert(TopicStore.PartMeta.read(dir, 0).txn == Map("q/0" -> 4L, "q2/0" -> 0L))
   }
 }

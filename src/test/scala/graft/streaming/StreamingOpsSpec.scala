@@ -261,8 +261,8 @@ class StreamingOpsSpec extends SparkSpec {
     def msg(i: Int) = TopicStore.Msg(s"m-$i", s"k$i",
       java.util.Base64.getEncoder.encodeToString(s"v$i".getBytes),
       Map("retry_at" -> "0"), 1700000000000000L, 0L, 1, null)
-    TopicStore.appendRetries(root, "t", "s", 0, (0 until 100).map(msg))
     val dir = TopicStore.retryDir(root, "t", "s")
+    TopicStore.appendIn(dir.toString, 0, (0 until 100).map(msg))
     // reclaim the delivered prefix [0, 60)
     TopicStore.truncateRetries(root, "t", "s", 0, 60L)
     assert(TopicStore.partitionBaseIn(dir, 0) == 60L)
@@ -271,7 +271,7 @@ class StreamingOpsSpec extends SparkSpec {
     val tail = TopicStore.readEntries(dir, 0, 95L, 100L)
     assert(tail.map(_.messageId) == (95 until 100).map(i => s"m-$i").toVector)
     // appends continue at the absolute count
-    TopicStore.appendRetries(root, "t", "s", 0, Seq(msg(100)))
+    TopicStore.appendIn(dir.toString, 0, Seq(msg(100)))
     assert(TopicStore.partitionMetaIn(dir, 0)._1 == 101L)
     assert(TopicStore.readEntries(dir, 0, 100L, 101L).head.messageId == "m-100")
     // idempotent / monotone: truncating below base is a no-op
