@@ -301,14 +301,6 @@ object MultimodalOps {
     DecodedVideo(r.video_id, w, h, energies.length.toLong, energies.toArray)
   }
 
-  /** [[aviMjpegDecode]] as a typed per-partition pass — identical
-    * plumbing to [[decodeImagesReal]]/[[decodeAudioReal]]: media bytes
-    * stay executor-side one partition at a time, never collected. */
-  def decodeVideoReal(spark: SparkSession, video: DataFrame): Dataset[DecodedVideo] = {
-    import spark.implicits._
-    video.as[VideoRow].mapPartitions(_.map(aviMjpegDecode))
-  }
-
   /** Frame sampling over a "video" payload: fixed-size frames, keep every
     * `stride`-th, capped at `maxFrames` per clip. Pure generate+explode —
     * no shuffle, no driver loop. The cap is the sample BUDGET (a real

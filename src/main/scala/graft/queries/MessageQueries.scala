@@ -160,12 +160,7 @@ object MessageQueries {
       val root = graft.TempRoots.create("graft-infer")
       graft.sources.TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
-      val consumed = s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val consumed = StreamGate.read(s, root, "events")
       val schemas = MessageOps.inferPayloadSchemas(s, consumed,
         samplePerType = 200, xmlRowTag = "e")
       MessageOps.contentTypeDispatchInferred(consumed, schemas)
@@ -207,11 +202,10 @@ object MessageQueries {
       graft.sources.TopicStore.publish(s,
         MessageOps.fromEvents(ev.filter(col("event_type") =!= "click")),
         root, "ev-other", 4)
+      // a pattern subscription: `topicsPattern` replaces the topic list
       s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
+        .options(StreamGate.address(root, "") - "topicNames")
         .option("topicsPattern", "ev-.*")
-        .option("batchingMaxMessages", "1000000")
         .load()
         .select(col("topic"), col("message_id"), col("key"))
         .orderBy(col("message_id"))
@@ -247,17 +241,9 @@ object MessageQueries {
       MessageOps.fromEvents(Tables(s, dir, "events"))
         .write.format("pulsarlike")
         .mode("append") // publish appends to the topic (the only sane producer mode)
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "relayed")
-        .option("batchingMaxMessages", "1000000")
+        .options(StreamGate.address(root, "relayed"))
         .save()
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "relayed")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "relayed")
         .select(col("message_id"), col("key"), col("publish_time"),
           col("event_time"), col("redelivery_count"), col("content_type"))
         .orderBy(col("message_id"))
@@ -313,20 +299,12 @@ object MessageQueries {
           .filter(col("content_type") =!= "text/plain")
           .writeStream
           .format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "hop-out")
-          .option("enableTransaction", "true")
-          .option("batchingMaxMessages", epochCap.toString), ckpt)
+          .options(StreamGate.address(root, "hop-out"))
+          .option("enableTransaction", "true"), ckpt)
       runPass()
       graft.streaming.StreamReplay.forceLastEpochReplay(ckpt)
       runPass()
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "hop-out")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "hop-out")
         .select(col("message_id"), col("key"), col("publish_time"),
           col("event_time"), col("redelivery_count"), col("content_type"))
         .orderBy(col("message_id"))
@@ -377,11 +355,8 @@ object MessageQueries {
         StreamGate.source(s, root, "hop-in", legCap, Some("sub-relay"))
           .writeStream
           .format("pulsarlike")
-          .option("path", root)
-          .option("serviceUrl", "pulsar://local")
-          .option("topicNames", "hop-out")
-          .option("enableTransaction", "true")
-          .option("batchingMaxMessages", legCap.toString), ckptRelay)
+          .options(StreamGate.address(root, "hop-out"))
+          .option("enableTransaction", "true"), ckptRelay)
       // leg 2: a FRESH subscription consumes the produced topic
       StreamGate.run(s,
         StreamGate.source(s, root, "hop-out", legCap, Some("sub-down"))

@@ -131,12 +131,7 @@ object StreamingQueries {
 
       val retries = BatchLanding.read(s, redeliveredDir)
         .withColumn("src", lit("retry"))
-      val dlq = s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events-dlq")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      val dlq = StreamGate.read(s, root, "events-dlq")
         .select(col("message_id"), col("key"), col("redelivery_count"))
         .withColumn("src", lit("dlq"))
       retries.unionByName(dlq).orderBy(col("message_id"), col("src"))
@@ -229,13 +224,8 @@ object StreamingQueries {
       val root = graft.TempRoots.create("graft-seek")
       TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startingTime", "2024-01-15T00:00:00Z")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events",
+          Map("startingTime" -> "2024-01-15T00:00:00Z"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
     },
@@ -263,14 +253,9 @@ object StreamingQueries {
       val root = graft.TempRoots.create("graft-range")
       TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startingTime", "2024-01-10T00:00:00Z")
-        .option("endingTime", "2024-01-20T00:00:00Z")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events", Map(
+          "startingTime" -> "2024-01-10T00:00:00Z",
+          "endingTime" -> "2024-01-20T00:00:00Z"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
     },
@@ -306,13 +291,7 @@ object StreamingQueries {
       val slice = MessageOps.fromEvents(
         Tables(s, dir, "events").filter(col("event_id") < 30000))
       TopicStore.publish(s, slice, root, "events", 1)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startingMessageId", "0:500:0:0")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events", Map("startingMessageId" -> "0:500:0:0"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
     },
@@ -354,13 +333,8 @@ object StreamingQueries {
       TopicStore.ackCumulative(root, "events", "sub-default", 0, 499L)
       // …and a later cumulative ack BELOW the cursor is a no-op
       TopicStore.ackCumulative(root, "events", "sub-default", 0, 99L)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events",
+          Map("startFromSubscriptionCursor" -> "true"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
     },
@@ -395,13 +369,8 @@ object StreamingQueries {
         TopicStore.expireMessages(root, "events", "sub-default", p,
           cutoffUs)
       }
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events",
+          Map("startFromSubscriptionCursor" -> "true"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
     },
@@ -430,16 +399,11 @@ object StreamingQueries {
         MessageOps.fromEvents(
           Tables(s, dir, "events").filter(col("event_id") < 30000)),
         root, "events", 4)
-      def reader = s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "1000000")
-      val full = reader.load()
+      val full = StreamGate.read(s, root, "events")
         .agg(count(lit(1)).cast("long").as("n"))
         .select(lit("full").as("slice"), col("n"))
-      val tail = reader.option("startingTime", "2024-01-15T00:00:00Z")
-        .load()
+      val tail = StreamGate.read(s, root, "events",
+          Map("startingTime" -> "2024-01-15T00:00:00Z"))
         .agg(count(lit(1)).cast("long").as("n"))
         .select(lit("tail").as("slice"), col("n"))
       full.unionByName(tail).orderBy(col("slice"))
@@ -469,12 +433,7 @@ object StreamingQueries {
         MessageOps.fromEvents(
           Tables(s, dir, "events").filter(col("event_id") < 30000)),
         root, "events", 4)
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events")
         .orderBy(col("publish_time").desc).limit(100)
         .groupBy(col("publish_time"))
         .agg(count(lit(1)).cast("long").as("n"))
@@ -511,13 +470,8 @@ object StreamingQueries {
         // …then the admin rewinds it to T for a replay
         TopicStore.resetCursor(root, "events", "sub-default", p, toUs)
       }
-      s.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000000")
-        .load()
+      StreamGate.read(s, root, "events",
+          Map("startFromSubscriptionCursor" -> "true"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
     },

@@ -90,11 +90,7 @@ object MetricsTopic {
       "num_input_rows long, input_rows_per_second double, " +
       "processed_rows_per_second double, state_rows long, " +
       "dropped_by_watermark long, watermark_ms long"
-    spark.read.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", topic)
-      .option("batchingMaxMessages", "1000000")
-      .load()
+    StreamGate.read(spark, root, topic)
       .select(col("publish_time"), from_json(col("value_str"),
         org.apache.spark.sql.types.StructType.fromDDL(schema)).as("m"))
       .select(col("publish_time"), col("m.*"))

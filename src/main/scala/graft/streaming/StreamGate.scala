@@ -3,9 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** The consume half of every stream gate — Structured Streaming's one
-  * contract (source options → trigger → sink → commit) written once:
+/** The one place a `pulsarlike` topic is addressed, and the consume half
+  * of every stream gate — Structured Streaming's one contract (source
+  * options → trigger → sink → commit) written once:
   *
+  *  - [[address]] is the local store's connection options plus the
+  *    mandatory batch policy; producers pass it to `write`/`writeStream`
+  *    with `.options(...)`;
+  *  - [[read]] is the batch consumer of a topic;
   *  - [[source]] subscribes to a `pulsarlike` topic from its earliest
   *    retained offset;
   *  - [[run]] drives a configured writer through one AvailableNow pass
@@ -33,20 +38,36 @@ object StreamGate {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
+  /** The options that address `topic` (a comma-separated list is
+    * several topics) in the store at `root`: the path, the local
+    * `serviceUrl`, the topic list and the mandatory batch policy (A11) at
+    * [[PlainCap]]. Only a micro-batch stream's admission reads the cap; a
+    * batch read or a sink only validates it. */
+  def address(root: String, topic: String): Map[String, String] = Map(
+    "path" -> root,
+    "serviceUrl" -> "pulsar://local",
+    "topicNames" -> topic,
+    "batchingMaxMessages" -> PlainCap.toString)
+
+  /** Batch-read `topic` in the store at `root`. `opts` are further source
+    * options (`startingTime`, `startFromSubscriptionCursor`, …); they are
+    * applied last, so they win. */
+  def read(s: SparkSession, root: String, topic: String,
+      opts: Map[String, String] = Map.empty): DataFrame =
+    s.read.format("pulsarlike").options(address(root, topic) ++ opts).load()
+
   /** Subscribe to `topic` in the store at `root` from the earliest
     * retained offset, admitting at most `maxMessages` per micro-batch.
     * `subscription` names the durable cursor; unset, the source's
-    * default subscription is used. */
+    * default subscription is used. `opts` are further source options,
+    * applied last, so they win. */
   def source(s: SparkSession, root: String, topic: String,
-      maxMessages: Long, subscription: Option[String] = None): DataFrame = {
-    val reader = s.readStream.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", topic)
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", maxMessages)
-    subscription.fold(reader)(reader.option("subscriptionName", _)).load()
-  }
+      maxMessages: Long, subscription: Option[String] = None,
+      opts: Map[String, String] = Map.empty): DataFrame =
+    s.readStream.format("pulsarlike").options(address(root, topic) ++
+      Map("subscriptionInitialPosition" -> "Earliest",
+        "batchingMaxMessages" -> maxMessages.toString) ++
+      subscription.map("subscriptionName" -> _) ++ opts).load()
 
   /** Run `writer` through one AvailableNow pass checkpointed at `ckpt`
     * and return the finished query (its `recentProgress` and

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -45,23 +45,15 @@ object SubscriptionLag {
 
   /** The last committed offset map, or empty when no epoch has ever
     * committed (a fresh subscription — lag is then the full log). */
-  private def committedCursors(checkpointDir: String): Map[String, Long] = {
-    val commits = Paths.get(checkpointDir, "commits")
-    if (!Files.isDirectory(commits)) return Map.empty
-    def batchIds(d: Path): Seq[Long] = {
-      val s = Files.list(d)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.forall(c => c >= '0' && c <= '9')).map(_.toLong).toSeq
-      finally s.close()
+  private def committedCursors(checkpointDir: String): Map[String, Long] =
+    StreamReplay.lastCommitted(checkpointDir) match {
+      case None => Map.empty
+      case Some(last) =>
+        // OffsetSeqLog layout: "v1" / metadata json / one line per source
+        val lines = Files.readAllLines(
+          Paths.get(checkpointDir, "offsets", last.toString)).asScala
+        PulsarLikeOffset.fromJson(lines.drop(2).mkString).cursors
+          .filter { case (k, _) =>
+            k != PulsarLikeOffset.FreshKey && !k.endsWith("/retry") }
     }
-    val ids = batchIds(commits)
-    if (ids.isEmpty) return Map.empty
-    val offsetFile = Paths.get(checkpointDir, "offsets", ids.max.toString)
-    // OffsetSeqLog layout: "v1" / metadata json / one line per source
-    val lines = Files.readAllLines(offsetFile).asScala
-    val offJson = lines.drop(2).mkString
-    PulsarLikeOffset.fromJson(offJson).cursors
-      .filter { case (k, _) =>
-        k != PulsarLikeOffset.FreshKey && !k.endsWith("/retry") }
-  }
 }

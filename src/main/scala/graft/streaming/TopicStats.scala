@@ -33,15 +33,8 @@ object TopicStats {
         (t, p, m.base, m.count)
       }
     }.toDF("topic", "partition", "base_offset", "log_end")
-    val msgs = spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", topics.mkString(","))
-      .option("subscriptionInitialPosition", "Earliest")
-      // stats scan admits everything in one logical read; the batch
-      // policy is mandatory on the consumer surface (A11), so state it
-      .option("batchingMaxMessages", "1000000000")
-      .load()
+    val msgs = StreamGate.read(spark, root, topics.mkString(","),
+        Map("subscriptionInitialPosition" -> "Earliest"))
       .select(col("topic"),
         // message_id layout: ledger:offset:partition:batch
         split(col("message_id"), ":").getItem(2).cast("int").as("partition"),

@@ -53,10 +53,7 @@ class PropertySpec extends SparkSpec {
       }.toDF("key", "value_str", "properties", "publish_time",
         "content_type", "message_id")
       TopicStore.publish(spark, df, root, "t", 3)
-      val back = spark.read.format("pulsarlike")
-        .option("path", root).option("serviceUrl", "pulsar://local")
-        .option("topicNames", "t").option("batchingMaxMessages", "1000")
-        .load()
+      val back = StreamGate.read(spark, root, "t")
         .select("message_id", "key", "value_str", "properties", "content_type")
         .collect()
         .map(r => r.getAs[String]("message_id") ->
@@ -223,10 +220,10 @@ class PropertySpec extends SparkSpec {
       val all = w1 ++ w2
       publishWave(root, w1)
 
-      val conf = graft.model.PulsarLikeConf.fromOptions(Map(
-        "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
-        "subscriptionInitialPosition" -> "Earliest",
-        "batchingMaxMessages" -> "8"))
+      val conf = graft.model.PulsarLikeConf.fromOptions(
+        StreamGate.address(root, "t") ++ Map(
+          "subscriptionInitialPosition" -> "Earliest",
+          "batchingMaxMessages" -> "8"))
       val stream = new PulsarLikeMicroBatchStream(conf, root)
       val factory = stream.createReaderFactory()
       var cur = stream.initialOffset().asInstanceOf[PulsarLikeOffset]

@@ -100,7 +100,8 @@ class AviDecodeSpec extends SparkSpec {
       val frames = (0 to id.toInt).map(f => jpeg(12, 12, 20 + 40 * f))
       MultimodalOps.VideoRow(id, avi(frames, 12, 12))
     }
-    val decoded = MultimodalOps.decodeVideoReal(spark, rows.toDF())
+    val decoded = rows.toDF().as[MultimodalOps.VideoRow]
+      .mapPartitions(_.map(MultimodalOps.aviMjpegDecode))
       .collect().sortBy(_.video_id)
     assert(decoded.length == 5)
     decoded.foreach { d =>

@@ -3,11 +3,10 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.model.PulsarLikeConf
-import graft.streaming.StreamReplay
+import graft.streaming.{StreamGate, StreamReplay}
 
 /** Pins the `ackTimeoutMillis` subsumption claim (A16).
   *
@@ -28,14 +27,12 @@ import graft.streaming.StreamReplay
 class AckTimeoutSubsumptionSpec extends SparkSpec {
 
   test("conf carries a validated ackTimeoutMillis") {
-    val conf = PulsarLikeConf.fromOptions(Map(
-      "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
-      "batchingMaxMessages" -> "10", "ackTimeoutMillis" -> "30000"))
+    val conf = PulsarLikeConf.fromOptions(
+      StreamGate.address("", "t") ++ Map("ackTimeoutMillis" -> "30000"))
     assert(conf.ackTimeoutMs.contains(30000L))
     intercept[IllegalArgumentException] {
-      PulsarLikeConf.fromOptions(Map(
-        "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
-        "batchingMaxMessages" -> "10", "ackTimeoutMillis" -> "soon"))
+      PulsarLikeConf.fromOptions(
+        StreamGate.address("", "t") ++ Map("ackTimeoutMillis" -> "soon"))
     }
   }
 
@@ -52,22 +49,14 @@ class AckTimeoutSubsumptionSpec extends SparkSpec {
     // consumer-visible delivery log
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[String])]
     def pass(): Unit = {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root).option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "7") // several epochs per pass
-        .option("ackTimeoutMillis", "30000")
-        .load()
+      // several epochs per pass
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 7L,
+          opts = Map("ackTimeoutMillis" -> "30000"))
         .writeStream
         .foreachBatch { (df: DataFrame, epoch: Long) =>
           val ids = df.select("message_id").collect().map(_.getString(0)).toSet
           seen.add(epoch -> ids); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
     }
 
     pass()

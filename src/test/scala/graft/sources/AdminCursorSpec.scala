@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** The admin cursor surface next to CumulativeAckSpec's consumer one:
   * expire-messages (a time-cut cumulative ack the broker performs —
@@ -23,14 +24,8 @@ class AdminCursorSpec extends SparkSpec {
   }
 
   private def seqs(root: String, sub: String = "sub-default"): Seq[Int] = {
-    spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("subscriptionName", sub)
-      .option("startFromSubscriptionCursor", "true")
-      .option("batchingMaxMessages", "100000")
-      .load()
+    StreamGate.read(spark, root, "events", Map("subscriptionName" -> sub,
+        "startFromSubscriptionCursor" -> "true"))
       .select(expr("int(properties['seq'])")).collect()
       .map(_.getInt(0)).sorted.toSeq
   }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** COUNT(*) pushdown (SupportsPushDownAggregates): an unfiltered,
   * ungrouped count over the source is answered from partition
@@ -24,26 +25,18 @@ class AggPushdownSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, "events", parts)
   }
 
-  private def read(root: String, extra: (String, String)*) = {
-    val base = spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("batchingMaxMessages", "100000")
-    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-  }
-
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
   test("plain count(*) pushes to metadata and matches the data count") {
     val root = tmpDir("aggpd")
     publishEvents(root, 41)
-    val c = read(root).agg(count(lit(1)).as("n"))
+    val c = StreamGate.read(spark, root, "events").agg(count(lit(1)).as("n"))
     assert(planOf(c).contains("PushedAggregation=[COUNT(*)]"), planOf(c))
     assert(c.collect()(0).getLong(0) == 41L)
     // count over a time slice: bounds still metadata-computable
-    val t = read(root, "startingTime" -> "2023-11-14T22:13:30Z")
+    val t = StreamGate.read(spark, root, "events",
+        Map("startingTime" -> "2023-11-14T22:13:30Z"))
       .agg(count(lit(1)).as("n"))
     assert(planOf(t).contains("PushedAggregation=[COUNT(*)]"), planOf(t))
     assert(t.collect()(0).getLong(0) == 31L)
@@ -53,15 +46,18 @@ class AggPushdownSpec extends SparkSpec {
     val root = tmpDir("aggpd-no")
     publishEvents(root, 30, dupKeys = true)
     // a pushed FILTER changes the count — no pushdown, result correct
-    val f = read(root).filter(col("key") === "k1").agg(count(lit(1)))
+    val f = StreamGate.read(spark, root, "events")
+      .filter(col("key") === "k1").agg(count(lit(1)))
     assert(!planOf(f).contains("PushedAggregation"), planOf(f))
     assert(f.collect()(0).getLong(0) == 6L)
     // compaction: visible rows are latest-per-key, not slice length
-    val comp = read(root, "readCompacted" -> "true").agg(count(lit(1)))
+    val comp = StreamGate.read(spark, root, "events",
+        Map("readCompacted" -> "true")).agg(count(lit(1)))
     assert(!planOf(comp).contains("PushedAggregation"), planOf(comp))
     assert(comp.collect()(0).getLong(0) == 5L)
     // group-by needs real keys — no pushdown, result correct
-    val g = read(root).groupBy(col("key")).agg(count(lit(1)).as("n"))
+    val g = StreamGate.read(spark, root, "events")
+      .groupBy(col("key")).agg(count(lit(1)).as("n"))
     assert(!planOf(g).contains("PushedAggregation"), planOf(g))
     assert(g.collect().map(_.getLong(1)).sum == 30L)
   }
@@ -70,7 +66,7 @@ class AggPushdownSpec extends SparkSpec {
     val root = tmpDir("aggpd-trunc")
     publishEvents(root, 20, parts = 1)
     TopicStore.truncateTopic(root, "events", 0, 8L)
-    val c = read(root).agg(count(lit(1)).as("n"))
+    val c = StreamGate.read(spark, root, "events").agg(count(lit(1)).as("n"))
     assert(planOf(c).contains("PushedAggregation=[COUNT(*)]"), planOf(c))
     assert(c.collect()(0).getLong(0) == 12L)
   }

@@ -1,9 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** Cumulative ack (consumer.acknowledgeCumulative ≙
   * TopicStore.ackCumulative) + the startFromSubscriptionCursor batch
@@ -13,6 +13,8 @@ import graft.SparkSpec
   * retry log, streams). m17 gates the end-to-end read against the
   * DuckDB oracle; this spec pins the state machine itself. */
 class CumulativeAckSpec extends SparkSpec {
+
+  private val cursor = Map("startFromSubscriptionCursor" -> "true")
 
   private def publishEvents(root: String, topic: String, n: Int,
       parts: Int): Unit = {
@@ -24,16 +26,6 @@ class CumulativeAckSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, topic, parts)
   }
 
-  private def readCursor(root: String, extra: (String, String)*) = {
-    val base = spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("startFromSubscriptionCursor", "true")
-      .option("batchingMaxMessages", "100000")
-    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-  }
-
   test("cumulative ack advances monotonically and reads resume past it") {
     val root = tmpDir("cumack")
     publishEvents(root, "events", 30, parts = 2)
@@ -42,32 +34,32 @@ class CumulativeAckSpec extends SparkSpec {
     assert(perPart.values.sum == 30)
 
     // fresh subscription: no cursor file → full read (base)
-    assert(readCursor(root).count() == 30)
+    assert(StreamGate.read(spark, root, "events", cursor).count() == 30)
 
     // ack the first 5 of partition 0 only
     val c1 = TopicStore.ackCumulative(root, "events", "sub-default", 0, 4L)
     assert(c1 == 5L)
-    assert(readCursor(root).count() == 30 - 5)
+    assert(StreamGate.read(spark, root, "events", cursor).count() == 30 - 5)
 
     // a cumulative ack BELOW the cursor is a no-op, never a rewind
     val c2 = TopicStore.ackCumulative(root, "events", "sub-default", 0, 1L)
     assert(c2 == 5L)
     assert(TopicStore.subCursor(root, "events", "sub-default", 0) == 5L)
-    assert(readCursor(root).count() == 30 - 5)
+    assert(StreamGate.read(spark, root, "events", cursor).count() == 30 - 5)
 
     // partitions are independent cursors
     TopicStore.ackCumulative(root, "events", "sub-default", 1, 2L)
-    assert(readCursor(root).count() == 30 - 5 - 3)
+    assert(StreamGate.read(spark, root, "events", cursor).count() == 30 - 5 - 3)
     assert(TopicStore.subCursor(root, "events", "sub-default", 0) == 5L)
 
     // …and so are subscriptions: another sub still reads everything
-    assert(readCursor(root,
-      "subscriptionName" -> "other-sub").count() == 30)
+    assert(StreamGate.read(spark, root, "events",
+      cursor + ("subscriptionName" -> "other-sub")).count() == 30)
 
     // ack through the whole of partition 0 → only partition 1's tail
     TopicStore.ackCumulative(root, "events", "sub-default", 0,
       perPart(0) - 1)
-    val left = readCursor(root)
+    val left = StreamGate.read(spark, root, "events", cursor)
     assert(left.count() == perPart(1) - 3)
     assert(left.select("message_id").collect()
       .forall(_.getString(0).split(":")(2) == "1"))
@@ -99,7 +91,7 @@ class CumulativeAckSpec extends SparkSpec {
     // the cursor (5) sits below the new base (10): serve from base,
     // Pulsar's "earliest available" for a truncated position
     TopicStore.truncateTopic(root, "events", 0, 10L)
-    val got = readCursor(root)
+    val got = StreamGate.read(spark, root, "events", cursor)
     assert(got.count() == 10)
     assert(got.select(expr("int(properties['seq'])")).collect()
       .map(_.getInt(0)).sorted.toSeq == (10 until 20))
@@ -109,7 +101,8 @@ class CumulativeAckSpec extends SparkSpec {
     val root = tmpDir("cumack-fail")
     publishEvents(root, "events", 5, parts = 1)
     def failsWith(msg: String, extra: (String, String)*): Unit = {
-      val e = intercept[Exception](readCursor(root, extra: _*).count())
+      val e = intercept[Exception](
+        StreamGate.read(spark, root, "events", cursor ++ extra).count())
       assert(e.getMessage.contains(msg), e.getMessage)
     }
     failsWith("startingTime",
@@ -121,17 +114,10 @@ class CumulativeAckSpec extends SparkSpec {
     // a STREAM's durable cursor is its checkpoint — the option refuses
     // to construct (no silently ignored validated options)
     val err = intercept[Exception] {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root).option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startFromSubscriptionCursor", "true")
-        .option("batchingMaxMessages", "1000")
-        .load()
-        .writeStream.queryName("cumackq").format("memory")
-        .option("checkpointLocation", tmpDir("cumack-ckpt"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.exception.foreach(throw _)
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 1000L,
+          opts = cursor + ("subscriptionInitialPosition" -> "Latest"))
+        .writeStream.queryName("cumackq").format("memory"),
+        tmpDir("cumack-ckpt"))
     }
     val msgs = Iterator.iterate(err: Throwable)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString(" | ")

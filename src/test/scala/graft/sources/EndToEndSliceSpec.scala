@@ -2,10 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 import graft.operators.MessageOps
 
 /** SURVEY.md §7 "minimum end-to-end slice": publish events as messages →
@@ -32,15 +32,6 @@ class EndToEndSliceSpec extends SparkSpec {
     TopicStore.publish(spark, MessageOps.fromEvents(events), root, "events", 2)
   }
 
-  private def stream(root: String) =
-    spark.readStream.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", "64")
-      .load()
-
   test("windowed aggregation over the message stream with ack-on-success") {
     val root = tmpDir("store")
     val ckpt = tmpDir("ckpt")
@@ -48,7 +39,7 @@ class EndToEndSliceSpec extends SparkSpec {
 
     val agg = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     def run(): Unit = {
-      val q = stream(root)
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 64L)
         // A13: only JSON-typed messages parse against the JSON schema
         .withColumn("base_type", trim(split_part(col("content_type"), lit(";"), lit(1))))
         .filter(col("base_type") === "application/json")
@@ -61,7 +52,6 @@ class EndToEndSliceSpec extends SparkSpec {
         .count()
         .writeStream
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.collect().foreach { r =>
             val k = r.getAs[org.apache.spark.sql.Row]("window")
@@ -69,10 +59,7 @@ class EndToEndSliceSpec extends SparkSpec {
               r.getAs[String]("event_type")
             agg.put(k, r.getAs[Long]("count"))
           }: Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
     }
     run()
     // events 0..59 cycle content types by event_id % 5 ∈ {0,1} → JSON (24
@@ -90,17 +77,14 @@ class EndToEndSliceSpec extends SparkSpec {
     val delivered = new java.util.concurrent.atomic.AtomicLong
 
     def run(failFirst: Boolean): Either[Throwable, Unit] = {
-      val q = stream(root).writeStream
-        .option("checkpointLocation", ckpt)
+      val writer = StreamGate.source(spark, root, "events", 64L).writeStream
         .foreachBatch { (df: DataFrame, _: Long) =>
           val n = df.count()
           if (failFirst && attempts.getAndIncrement() == 0)
             throw new RuntimeException("mediation failed → SET_ROLLBACK_ONLY")
           delivered.addAndGet(n): Unit
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.awaitTermination(); Right(()) }
+      try { StreamGate.run(spark, writer, ckpt); Right(()) }
       catch { case e: Throwable => Left(e) }
     }
 
@@ -114,10 +98,7 @@ class EndToEndSliceSpec extends SparkSpec {
     val root = tmpDir("store")
     publish(root, 40)
     // batch-read in partition order; within a partition offsets ascend
-    val df = spark.read.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events").option("batchingMaxMessages", "1000")
-      .load()
+    val df = StreamGate.read(spark, root, "events")
       .select(col("key"),
         expr("CAST(split(message_id, ':')[1] AS BIGINT)").as("off"),
         expr("CAST(split(message_id, ':')[2] AS INT)").as("p"),

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
 import graft.model.PulsarLikeConf
-import graft.streaming.ChunkReassembly
+import graft.streaming.{ChunkReassembly, StreamGate}
 
 /** Regression pins for the core-engine hardening pass (one test per
   * fixed failure mode — each of these failed or stalled before the
@@ -128,12 +128,13 @@ class HardeningRegressionSpec extends SparkSpec {
   test("byte-capped admission floors at one row per trigger instead of stalling") {
     val root = tmpDir("adm-floor")
     publishRows(root, (0 until 6).map(i => (s"k$i", "x" * 200)), parts = 1)
-    val conf = PulsarLikeConf.fromOptions(Map(
-      "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
-      "subscriptionInitialPosition" -> "Earliest",
-      // far below one row's encoded size: pre-fix this admitted 0 rows
-      // forever and AvailableNow terminated claiming it drained
-      "batchingMaxBytes" -> "8"))
+    // a byte cap only: drop the address's row cap
+    val conf = PulsarLikeConf.fromOptions(
+      StreamGate.address(root, "t") - "batchingMaxMessages" ++ Map(
+        "subscriptionInitialPosition" -> "Earliest",
+        // far below one row's encoded size: pre-fix this admitted 0 rows
+        // forever and AvailableNow terminated claiming it drained
+        "batchingMaxBytes" -> "8"))
     val stream = new PulsarLikeMicroBatchStream(conf, root)
     var cur = stream.initialOffset()
     var triggers = 0
@@ -169,8 +170,7 @@ class HardeningRegressionSpec extends SparkSpec {
   test("freshness is the durable marker, not cursor==base coincidence") {
     val root = tmpDir("fresh-marker")
     publishRows(root, Seq(("k", "v1"), ("k", "v2")), parts = 1)
-    val conf = PulsarLikeConf.fromOptions(Map(
-      "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
+    val conf = PulsarLikeConf.fromOptions(StreamGate.address(root, "t") ++ Map(
       "subscriptionInitialPosition" -> "Earliest",
       "readCompacted" -> "true",
       "batchingMaxMessages" -> "100"))
@@ -199,8 +199,7 @@ class HardeningRegressionSpec extends SparkSpec {
   test("Latest + readCompacted delivers the tail uncompacted (no freshness marker)") {
     val root = tmpDir("latest-tail")
     publishRows(root, Seq(("k", "old1"), ("k", "old2")), parts = 1)
-    val conf = PulsarLikeConf.fromOptions(Map(
-      "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
+    val conf = PulsarLikeConf.fromOptions(StreamGate.address(root, "t") ++ Map(
       "subscriptionInitialPosition" -> "Latest",
       "readCompacted" -> "true",
       "batchingMaxMessages" -> "100"))
@@ -266,9 +265,8 @@ class HardeningRegressionSpec extends SparkSpec {
   }
 
   test("config rejects wrap-prone numeric extremes loudly") {
-    def conf(extra: (String, String)*) = PulsarLikeConf.fromOptions(Map(
-      "serviceUrl" -> "pulsar://local", "topicNames" -> "t",
-      "batchingMaxMessages" -> "100") ++ extra)
+    def conf(extra: (String, String)*) =
+      PulsarLikeConf.fromOptions(StreamGate.address("", "t") ++ extra)
     // Int wrap on dlqMaxRedeliverCount routed EVERY message to the DLQ
     val e1 = intercept[IllegalArgumentException] {
       conf("dlqMaxRedeliverCount" -> "2147483648")

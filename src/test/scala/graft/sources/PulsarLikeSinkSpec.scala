@@ -1,20 +1,14 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** DSv2 write path: batch + streaming producers into the topic store,
   * and routing consistency with the DataFrame publish path (same key →
   * same partition regardless of write path). */
 class PulsarLikeSinkSpec extends SparkSpec {
-
-  private def read(root: String, topic: String) =
-    spark.read.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", topic).option("batchingMaxMessages", "10000")
-      .load()
 
   private def canonical(n: Int) = {
     import spark.implicits._
@@ -28,13 +22,10 @@ class PulsarLikeSinkSpec extends SparkSpec {
   test("batch write publishes; consumer reads it back") {
     val root = tmpDir("sink")
     canonical(12).write.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "out")
-      .option("batchingMaxMessages", "100")
+      .options(StreamGate.address(root, "out"))
       .mode("append")
       .save()
-    val back = read(root, "out")
+    val back = StreamGate.read(spark, root, "out")
     assert(back.count() == 12)
     val r = back.filter(col("value_str") === "msg-5").collect()(0)
     assert(r.getAs[String]("key") == "k2")
@@ -43,26 +34,15 @@ class PulsarLikeSinkSpec extends SparkSpec {
 
   test("streaming write: source -> transform -> pulsarlike sink round trip") {
     val root = tmpDir("sink")
-    val ckpt = tmpDir("ckpt")
     TopicStore.publish(spark, canonical(20), root, "in", 2)
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "in").option("batchingMaxMessages", "7")
-      .option("subscriptionInitialPosition", "Earliest")
-      .load()
+    StreamGate.run(spark, StreamGate.source(spark, root, "in", 7L)
       .withColumn("value_str", upper(col("value_str")))
       .withColumn("value", col("value_str").cast("binary"))
       .withColumn("message_id", lit(null).cast("string")) // sink re-assigns
       .writeStream
       .format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "out")
-      .option("batchingMaxMessages", "100")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = read(root, "out")
+      .options(StreamGate.address(root, "out")), tmpDir("ckpt"))
+    val out = StreamGate.read(spark, root, "out")
     assert(out.count() == 20)
     assert(out.filter(col("value_str") === "MSG-7").count() == 1)
   }
@@ -72,10 +52,9 @@ class PulsarLikeSinkSpec extends SparkSpec {
     // half the keys through publish(), half through the DSv2 writer
     TopicStore.publish(spark, canonical(10), root, "t", 4)
     canonical(10).write.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "t").option("batchingMaxMessages", "100")
+      .options(StreamGate.address(root, "t"))
       .mode("append").save()
-    val perKey = read(root, "t")
+    val perKey = StreamGate.read(spark, root, "t")
       .select(col("key"), expr("split(message_id, ':')[2]").as("p"))
       .distinct()
       .groupBy("key").count().collect()

@@ -3,9 +3,9 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** End-to-end source semantics over the file-backed topic store
   * (SURVEY.md §5 item 2): batch + micro-batch reads, Earliest/Latest,
@@ -23,18 +23,10 @@ class PulsarLikeSourceSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, topic, parts)
   }
 
-  private def readBatch(root: String, extra: (String, String)*) = {
-    val base = spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("batchingMaxMessages", "100000")
-    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-  }
-
   test("batch read returns all published messages with canonical schema") {
     val root = tmpDir("store")
     publishEvents(root, "events", 20)
-    val df = readBatch(root, "topicNames" -> "events")
+    val df = StreamGate.read(spark, root, "events")
     assert(df.count() == 20)
     assert(df.schema.fieldNames.toSeq == Seq("topic", "message_id", "key",
       "value", "value_str", "properties", "publish_time", "event_time",
@@ -62,7 +54,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, "t", 1)
     val (cnt, _) = TopicStore.partitionMeta(root, "t", 0)
     assert(cnt == n.toLong)
-    val back = readBatch(root, "topicNames" -> "t")
+    val back = StreamGate.read(spark, root, "t")
       .select("message_id", "value_str", "publish_time").collect()
     assert(back.length == n)
     // offsets assigned 0..n-1 in publish_time order, no gaps/dupes
@@ -75,7 +67,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
   test("key routing: all messages of one key land in one partition") {
     val root = tmpDir("store")
     publishEvents(root, "events", 40, parts = 4)
-    val df = readBatch(root, "topicNames" -> "events")
+    val df = StreamGate.read(spark, root, "events")
       .select(col("key"), expr("split(message_id, ':')[2]").as("p"))
       .distinct()
     val perKey = df.groupBy("key").count().collect()
@@ -88,23 +80,23 @@ class PulsarLikeSourceSpec extends SparkSpec {
     publishEvents(root, "ev-a", 5)
     publishEvents(root, "ev-b", 5)
     publishEvents(root, "np-ev-c", 5)
-    val all = readBatch(root, "topicsPattern" -> ".*ev.*")
-    assert(all.select("topic").distinct().count() == 3)
-    val persistent = readBatch(root, "topicsPattern" -> ".*ev.*",
-      "subscriptionTopicsMode" -> "PersistentOnly")
-    assert(persistent.select("topic").distinct().collect()
+    // a pattern replaces the topic list
+    val byPattern = StreamGate.address(root, "") - "topicNames" +
+      ("topicsPattern" -> ".*ev.*")
+    def topics(extra: (String, String)*) = spark.read.format("pulsarlike")
+      .options(byPattern ++ extra).load().select("topic").distinct()
+    assert(topics().count() == 3)
+    assert(topics("subscriptionTopicsMode" -> "PersistentOnly").collect()
       .map(_.getString(0)).toSet == Set("ev-a", "ev-b"))
-    val np = readBatch(root, "topicsPattern" -> ".*ev.*",
-      "subscriptionTopicsMode" -> "NonPersistentOnly")
-    assert(np.select("topic").distinct().collect()
+    assert(topics("subscriptionTopicsMode" -> "NonPersistentOnly").collect()
       .map(_.getString(0)).toSet == Set("np-ev-c"))
   }
 
   test("readCompacted serves latest message per key (A21)") {
     val root = tmpDir("store")
     publishEvents(root, "events", 20)  // keys k0..k4, 4 messages each
-    val df = readBatch(root, "topicNames" -> "events",
-      "readCompacted" -> "true")
+    val df = StreamGate.read(spark, root, "events", Map(
+      "readCompacted" -> "true"))
     val rows = df.select("key", "value_str").collect()
     assert(rows.length == 5)
     // latest payload for k2 is payload-17 (publish_time ordered)
@@ -119,27 +111,19 @@ class PulsarLikeSourceSpec extends SparkSpec {
     def seqsOf(df: org.apache.spark.sql.DataFrame): Seq[Int] =
       df.select(expr("int(properties['seq'])")).collect().map(_.getInt(0))
         .sorted.toSeq
-    val batch = readBatch(root, "topicNames" -> "events",
-      "startingTime" -> cut.toString)
+    val batch = StreamGate.read(spark, root, "events", Map(
+      "startingTime" -> cut.toString))
     assert(seqsOf(batch) == (25 until 40))
     // seek past the last message → empty; before the first → everything
-    assert(readBatch(root, "topicNames" -> "events",
-      "startingTime" -> (t0 + 3600000L).toString).count() == 0)
-    assert(readBatch(root, "topicNames" -> "events",
-      "startingTime" -> "2001-01-01T00:00:00Z").count() == 40)
+    assert(StreamGate.read(spark, root, "events", Map(
+      "startingTime" -> (t0 + 3600000L).toString)).count() == 0)
+    assert(StreamGate.read(spark, root, "events", Map(
+      "startingTime" -> "2001-01-01T00:00:00Z")).count() == 40)
     // a fresh streaming subscription lands on the same cursor
-    val ckpt = tmpDir("ckpt")
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("startingTime", cut.toString)
-      .option("batchingMaxMessages", "1000")
-      .option("checkpointLocation", ckpt)
-      .load()
-      .writeStream.queryName("seekq").format("memory")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    StreamGate.run(spark, StreamGate.source(spark, root, "events", 1000L,
+        opts = Map("startingTime" -> cut.toString,
+          "subscriptionInitialPosition" -> "Latest"))
+      .writeStream.queryName("seekq").format("memory"), tmpDir("ckpt"))
     assert(seqsOf(spark.table("seekq")) == (25 until 40))
   }
 
@@ -151,35 +135,27 @@ class PulsarLikeSourceSpec extends SparkSpec {
       df.select(expr("int(properties['seq'])")).collect().map(_.getInt(0))
         .sorted.toSeq
     // [T1, T2): 10 inclusive, 30 exclusive
-    assert(seqsOf(readBatch(root, "topicNames" -> "events",
+    assert(seqsOf(StreamGate.read(spark, root, "events", Map(
       "startingTime" -> (t0 + 10 * 1000L).toString,
-      "endingTime" -> (t0 + 30 * 1000L).toString)) == (10 until 30))
+      "endingTime" -> (t0 + 30 * 1000L).toString))) == (10 until 30))
     // endingTime alone is a pure upper bound
-    assert(seqsOf(readBatch(root, "topicNames" -> "events",
-      "endingTime" -> (t0 + 5 * 1000L).toString)) == (0 until 5))
+    assert(seqsOf(StreamGate.read(spark, root, "events", Map(
+      "endingTime" -> (t0 + 5 * 1000L).toString))) == (0 until 5))
     // boundary exactness: a message AT T2 is excluded
-    assert(seqsOf(readBatch(root, "topicNames" -> "events",
-      "endingTime" -> t0.toString)).isEmpty)
+    assert(seqsOf(StreamGate.read(spark, root, "events", Map(
+      "endingTime" -> t0.toString))).isEmpty)
     // inverted range: config-time contradiction, not zero rows
-    val inv = intercept[Exception](readBatch(root,
-      "topicNames" -> "events",
+    val inv = intercept[Exception](StreamGate.read(spark, root, "events", Map(
       "startingTime" -> (t0 + 20 * 1000L).toString,
-      "endingTime" -> (t0 + 10 * 1000L).toString).count())
+      "endingTime" -> (t0 + 10 * 1000L).toString)).count())
     assert(inv.getMessage.contains("endingTime"))
     // a STREAM with endingTime refuses to construct (no silently
     // ignored validated options)
     val err = intercept[Exception] {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root).option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("endingTime", (t0 + 30 * 1000L).toString)
-        .option("batchingMaxMessages", "1000")
-        .load()
-        .writeStream.queryName("rangeq").format("memory")
-        .option("checkpointLocation", tmpDir("ckpt"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.exception.foreach(throw _)
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 1000L,
+          opts = Map("endingTime" -> (t0 + 30 * 1000L).toString,
+            "subscriptionInitialPosition" -> "Latest"))
+        .writeStream.queryName("rangeq").format("memory"), tmpDir("ckpt"))
     }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -190,7 +166,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
   test("startingMessageId seeks each listed partition; the rest start at base") {
     val root = tmpDir("store")
     publishEvents(root, "events", 40, parts = 2)  // key-routed to 2 parts
-    val all = readBatch(root, "topicNames" -> "events")
+    val all = StreamGate.read(spark, root, "events")
       .select(col("message_id"), expr("int(properties['seq'])").as("seq"))
       .collect().map(r => r.getString(0) -> r.getInt(1))
     def partOf(id: String) = id.split(":")(2).toInt
@@ -199,47 +175,41 @@ class PulsarLikeSourceSpec extends SparkSpec {
     assert(p0.length > 5, "expected both partitions populated")
     // seek partition 0 to its 3rd message (INCLUSIVE); partition 1 full
     val seekId = p0(2)._1
-    val got = readBatch(root, "topicNames" -> "events",
-      "startingMessageId" -> seekId)
+    val got = StreamGate.read(spark, root, "events", Map(
+      "startingMessageId" -> seekId))
       .select(col("message_id")).collect().map(_.getString(0)).toSet
     val expect = (p0.drop(2).map(_._1) ++
       all.filter(t => partOf(t._1) == 1).map(_._1)).toSet
     assert(got == expect,
       s"missing=${expect -- got} extra=${got -- expect}")
     // a seek past the log end is an empty slice for that partition
-    val pastEnd = readBatch(root, "topicNames" -> "events",
-      "startingMessageId" -> "0:999999:0:0")
+    val pastEnd = StreamGate.read(spark, root, "events", Map(
+      "startingMessageId" -> "0:999999:0:0"))
       .select(col("message_id")).collect().map(_.getString(0)).toSet
     assert(pastEnd == all.filter(t => partOf(t._1) == 1).map(_._1).toSet)
     // contradictory / ambiguous configs fail loudly at validation
     Seq(
-      Seq("topicNames" -> "events", "startingMessageId" -> seekId,
-        "startingTime" -> "1700000000000") -> "startingTime",
-      Seq("topicNames" -> "events,audit",
-        "startingMessageId" -> seekId) -> "one explicit topic",
-      Seq("topicNames" -> "events", "readRetries" -> "true",
+      ("events", Map("startingMessageId" -> seekId,
+        "startingTime" -> "1700000000000")) -> "startingTime",
+      ("events,audit",
+        Map("startingMessageId" -> seekId)) -> "one explicit topic",
+      ("events", Map("readRetries" -> "true",
         "subscriptionName" -> "s",
-        "startingMessageId" -> seekId) -> "retry",
-      Seq("topicNames" -> "events",
-        "startingMessageId" -> "garbage") -> "malformed"
-    ).foreach { case (opts, needle) =>
-      val e = intercept[Exception](readBatch(root, opts: _*).count())
+        "startingMessageId" -> seekId)) -> "retry",
+      ("events",
+        Map("startingMessageId" -> "garbage")) -> "malformed"
+    ).foreach { case ((topic, opts), needle) =>
+      val e = intercept[Exception](
+        StreamGate.read(spark, root, topic, opts).count())
       assert(e.getMessage.toLowerCase.contains(needle.toLowerCase),
-        s"$opts -> ${e.getMessage}")
+        s"$topic $opts -> ${e.getMessage}")
     }
     // and a STREAM with a message-id seek refuses to construct
     val err2 = intercept[Exception] {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root).option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("startingMessageId", seekId)
-        .option("batchingMaxMessages", "1000")
-        .load()
-        .writeStream.queryName("midq").format("memory")
-        .option("checkpointLocation", tmpDir("ckpt"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.exception.foreach(throw _)
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 1000L,
+          opts = Map("startingMessageId" -> seekId,
+            "subscriptionInitialPosition" -> "Latest"))
+        .writeStream.queryName("midq").format("memory"), tmpDir("ckpt"))
     }
     def chain2(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -252,23 +222,15 @@ class PulsarLikeSourceSpec extends SparkSpec {
     val root = tmpDir("store")
     publishEvents(root, "events", 40) // keys k0..k4, times t0..t0+39s
     val cut = (1700000000000L + 20 * 1000L).toString
-    val batch = readBatch(root, "topicNames" -> "events",
-      "readCompacted" -> "true", "startingTime" -> cut)
+    val batch = StreamGate.read(spark, root, "events", Map(
+      "readCompacted" -> "true", "startingTime" -> cut))
       .select("key", "value_str").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(batch.size == 5 && batch("k2") == "payload-37")
-    val ckpt = tmpDir("ckpt")
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("readCompacted", "true")
-      .option("startingTime", cut)
-      .option("batchingMaxMessages", "1000")
-      .load()
-      .writeStream.queryName("seekcq").format("memory")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    StreamGate.run(spark, StreamGate.source(spark, root, "events", 1000L,
+        opts = Map("readCompacted" -> "true", "startingTime" -> cut,
+          "subscriptionInitialPosition" -> "Latest"))
+      .writeStream.queryName("seekcq").format("memory"), tmpDir("ckpt"))
     val streamed = spark.table("seekcq")
       .select("key", "value_str").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -308,21 +270,11 @@ class PulsarLikeSourceSpec extends SparkSpec {
 
     def run(): Long = {
       val seen = new java.util.concurrent.atomic.AtomicLong
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "10")
-        .load()
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 10L)
         .writeStream
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           seen.addAndGet(df.count()): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       seen.get()
     }
     assert(run() == 30)       // first run: everything
@@ -336,21 +288,11 @@ class PulsarLikeSourceSpec extends SparkSpec {
     val ckpt = tmpDir("ckpt")
     publishEvents(root, "events", 25)
     val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", "10")
-      .load()
+    StreamGate.run(spark, StreamGate.source(spark, root, "events", 10L)
       .writeStream
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         sizes.add(df.count()): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, ckpt)
     val batches = sizes.toArray(Array.empty[java.lang.Long]).map(_.toLong)
     assert(batches.sum == 25)
     assert(batches.forall(_ <= 10), s"batch over cap: ${batches.mkString(",")}")
@@ -363,22 +305,18 @@ class PulsarLikeSourceSpec extends SparkSpec {
     publishEvents(root, "disc-a", 5)
     def run(): Set[String] = {
       val topics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicsPattern", "disc-.*")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "100")
+      // a pattern replaces the topic list
+      StreamGate.run(spark, spark.readStream.format("pulsarlike")
+        .options(StreamGate.address(root, "") - "topicNames" ++ Map(
+          "topicsPattern" -> "disc-.*",
+          "subscriptionInitialPosition" -> "Earliest",
+          "batchingMaxMessages" -> "100"))
         .load()
         .writeStream
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.select("topic").distinct().collect()
             .foreach(r => topics.add(r.getString(0))): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       topics.toArray(Array.empty[String]).toSet
     }
     assert(run() == Set("disc-a"))
@@ -390,7 +328,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
   test("filter pushdown + column pruning reach the source scan") {
     val root = tmpDir("store")
     publishEvents(root, "events", 30)
-    val df = readBatch(root, "topicNames" -> "events")
+    val df = StreamGate.read(spark, root, "events")
       .filter(col("key") === "k3")
       .select(col("message_id"), col("key"))
     val plan = df.queryExecution.executedPlan.toString
@@ -400,7 +338,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
       s"columns not pruned:\n$plan")
     assert(df.count() == 6)   // keys cycle 0..4 over 30 msgs
     // unsupported predicates (payload) still evaluate correctly above
-    val viaPayload = readBatch(root, "topicNames" -> "events")
+    val viaPayload = StreamGate.read(spark, root, "events")
       .filter(col("value_str").endsWith("-7"))
     assert(viaPayload.count() == 1)
   }
@@ -418,7 +356,7 @@ class PulsarLikeSourceSpec extends SparkSpec {
       (id, k, v, ct, new java.sql.Timestamp(1700000000000L + i * 1000L))
     }.toDF("message_id", "key", "value_str", "content_type", "publish_time")
     TopicStore.publish(spark, df, root, "c", 2)
-    val out = readBatch(root, "topicNames" -> "c", "readCompacted" -> "true")
+    val out = StreamGate.read(spark, root, "c", Map("readCompacted" -> "true"))
       .filter(col("content_type") === "text/plain")
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("pushedFilters=[") && plan.contains("content_type"),
@@ -491,14 +429,12 @@ class PulsarLikeSourceSpec extends SparkSpec {
     import spark.implicits._
     // a DSv2 write (which defaults to 4) must route mod 6, not mod 4
     Seq(("kX", "late-row")).toDF("key", "value_str")
-      .write.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "t6").option("batchingMaxMessages", "100")
+      .write.format("pulsarlike").options(StreamGate.address(root, "t6"))
       .mode("append").save()
     assert(TopicStore.numPartitions(root, "t6") == 6)
     val expected = TopicStore.route("kX",
       java.util.Base64.getEncoder.encodeToString("late-row".getBytes), 6)
-    val p = readBatch(root, "topicNames" -> "t6")
+    val p = StreamGate.read(spark, root, "t6")
       .filter(col("key") === "kX")
       .select(expr("CAST(split(message_id, ':')[2] AS INT)")).collect()(0).getInt(0)
     assert(p == expected, s"routed to $p, expected $expected")
@@ -509,25 +445,17 @@ class PulsarLikeSourceSpec extends SparkSpec {
     publishEvents(root, "r", 30, parts = 1)
     TopicStore.truncateTopic(root, "r", 0, 20L)
     // batch read serves only the retained tail, original offsets intact
-    val rows = readBatch(root, "topicNames" -> "r")
+    val rows = StreamGate.read(spark, root, "r")
       .select(expr("CAST(split(message_id, ':')[1] AS BIGINT)").as("off"))
       .collect().map(_.getLong(0)).sorted
     assert(rows.toSeq == (20L until 30L))
     // an Earliest subscription starts at the retained base
-    val ckpt = tmpDir("ckpt")
     val seen = new java.util.concurrent.atomic.AtomicLong
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "r")
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", "100")
-      .load()
-      .writeStream.option("checkpointLocation", ckpt)
+    StreamGate.run(spark, StreamGate.source(spark, root, "r", 100L)
+      .writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         seen.addAndGet(df.count()): Unit
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      }, tmpDir("ckpt"))
     assert(seen.get() == 10)
   }
 
@@ -537,21 +465,13 @@ class PulsarLikeSourceSpec extends SparkSpec {
     publishEvents(root, "events", 10)
     def run(): Long = {
       val seen = new java.util.concurrent.atomic.AtomicLong
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Latest")
-        .option("batchingMaxMessages", "1000")
-        .load()
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 1000L,
+          opts = Map("subscriptionInitialPosition" -> "Latest"))
         .writeStream
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           seen.addAndGet(df.count()): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(); seen.get()
+        }, ckpt)
+      seen.get()
     }
     assert(run() == 0)        // Latest: backlog invisible
     publishEvents(root, "events", 3)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** The other two batch-planner integrations: SupportsReportStatistics
   * (metadata row/byte stats → Catalyst auto-broadcasts a small topic
@@ -21,15 +22,6 @@ class StatsLimitSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, "events", parts)
   }
 
-  private def read(root: String, extra: (String, String)*) = {
-    val base = spark.read.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("batchingMaxMessages", "100000")
-    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-  }
-
   test("metadata statistics let Catalyst broadcast the topic side unhinted") {
     val root = tmpDir("stats")
     publishEvents(root, 50)
@@ -39,7 +31,8 @@ class StatsLimitSpec extends SparkSpec {
     val big = spark.range(0, 200000)
       .select(concat(lit("k"), (col("id") % 5).cast("string")).as("k2"),
         concat(lit("x" * 64), col("id").cast("string")).as("pad"))
-    val joined = read(root).join(big, col("key") === col("k2"))
+    val joined = StreamGate.read(spark, root, "events")
+      .join(big, col("key") === col("k2"))
       .groupBy(col("key")).agg(count(lit(1)).as("n"))
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
@@ -56,17 +49,19 @@ class StatsLimitSpec extends SparkSpec {
   test("LIMIT caps partition slices; refused under filters/compaction") {
     val root = tmpDir("limit")
     publishEvents(root, 40, parts = 2)
-    val lim = read(root).limit(7)
+    val lim = StreamGate.read(spark, root, "events").limit(7)
     val plan = lim.queryExecution.executedPlan.toString
     assert(plan.contains("PushedLimit=7"), plan)
     assert(lim.count() == 7L)
     // pushed metadata filter → limit not pushed, result still right
-    val f = read(root).filter(col("key") === "k1").limit(3)
+    val f = StreamGate.read(spark, root, "events")
+      .filter(col("key") === "k1").limit(3)
     val fPlan = f.queryExecution.executedPlan.toString
     assert(!fPlan.contains("PushedLimit"), fPlan)
     assert(f.count() == 3L)
     // compaction → refused (the scan must see the whole slice)
-    val c = read(root, "readCompacted" -> "true").limit(2)
+    val c = StreamGate.read(spark, root, "events",
+      Map("readCompacted" -> "true")).limit(2)
     val cPlan = c.queryExecution.executedPlan.toString
     assert(!cPlan.contains("PushedLimit"), cPlan)
     assert(c.count() == 2L)

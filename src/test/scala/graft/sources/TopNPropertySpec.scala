@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** Property: for ANY publish-time sequence — monotone, shuffled, with
   * duplicate timestamps, across any partition count — a top-N read on
@@ -45,14 +46,8 @@ class TopNPropertySpec extends SparkSpec {
           half.toDF("key", "value_str", "publish_time"),
           root, "events", parts)
       }
-      def reader = spark.read.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("batchingMaxMessages", "100000")
-        .load()
       val ord = if (desc) col("publish_time").desc else col("publish_time")
-      val got = reader.orderBy(ord).limit(k)
+      val got = StreamGate.read(spark, root, "events").orderBy(ord).limit(k)
         .select(col("publish_time")).collect()
         .map(_.getTimestamp(0).getTime).sorted.toSeq
       val all = ts.map(t => 1700000000000L + t * 1000L)

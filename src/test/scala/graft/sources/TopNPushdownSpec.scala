@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.StreamGate
 
 /** Top-N pushdown on publish_time (SupportsPushDownTopN): "latest N"
   * over a topic of any size serves N rows per partition — the slice
@@ -26,25 +27,20 @@ class TopNPushdownSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, "events", parts)
   }
 
-  private def read(root: String) = spark.read.format("pulsarlike")
-    .option("path", root)
-    .option("serviceUrl", "pulsar://local")
-    .option("topicNames", "events")
-    .option("batchingMaxMessages", "100000")
-    .load()
-
   test("latest-N serves slice tails; first-N serves heads; order correct") {
     val root = tmpDir("topn")
     publishEvents(root, 60)
 
-    val latest = read(root).orderBy(col("publish_time").desc).limit(5)
+    val latest = StreamGate.read(spark, root, "events")
+      .orderBy(col("publish_time").desc).limit(5)
     val lPlan = latest.queryExecution.executedPlan.toString
     assert(lPlan.contains("PushedTopN=[publish_time DESC, 5]"), lPlan)
     val got = latest.select(expr("int(properties['seq'])"))
       .collect().map(_.getInt(0)).toSeq
     assert(got == (59 to 55 by -1), s"latest-5 wrong: $got")
 
-    val first = read(root).orderBy(col("publish_time")).limit(4)
+    val first = StreamGate.read(spark, root, "events")
+      .orderBy(col("publish_time")).limit(4)
     val fPlan = first.queryExecution.executedPlan.toString
     assert(fPlan.contains("PushedTopN=[publish_time ASC, 4]"), fPlan)
     assert(first.select(expr("int(properties['seq'])"))
@@ -52,9 +48,8 @@ class TopNPushdownSpec extends SparkSpec {
 
     // the cap is physical: the planner's slices serve ≤ N rows per
     // partition, not the whole log
-    val conf = graft.model.PulsarLikeConf.fromOptions(Map(
-      "path" -> root, "serviceUrl" -> "pulsar://local",
-      "topicNames" -> "events", "batchingMaxMessages" -> "100000"))
+    val conf = graft.model.PulsarLikeConf.fromOptions(
+      StreamGate.address(root, "events"))
     val capped = new PulsarLikeBatch(conf, root,
       topN = Some((false, 5))).slices
     capped.foreach { case (_, _, p, s, e, _, _) =>
@@ -77,12 +72,12 @@ class TopNPushdownSpec extends SparkSpec {
       TopicStore.topicDir(root, "events"), 0).tsorted)
 
     // top-N still answers CORRECTLY (full-slice fallback + Spark sort)
-    val latest = read(root).orderBy(col("publish_time").desc).limit(3)
+    val latest = StreamGate.read(spark, root, "events")
+      .orderBy(col("publish_time").desc).limit(3)
     assert(latest.select(expr("int(properties['seq'])"))
       .collect().map(_.getInt(0)).toSeq == Seq(19, 18, 17))
-    val conf = graft.model.PulsarLikeConf.fromOptions(Map(
-      "path" -> root, "serviceUrl" -> "pulsar://local",
-      "topicNames" -> "events", "batchingMaxMessages" -> "100000"))
+    val conf = graft.model.PulsarLikeConf.fromOptions(
+      StreamGate.address(root, "events"))
     val slices = new PulsarLikeBatch(conf, root,
       topN = Some((false, 3))).slices
     assert(slices.exists { case (_, _, _, s, e, _, _) => e - s == 21 },
@@ -92,7 +87,7 @@ class TopNPushdownSpec extends SparkSpec {
   test("ordering by any other column refuses the pushdown") {
     val root = tmpDir("topn-no")
     publishEvents(root, 10)
-    val byKey = read(root).orderBy(col("key")).limit(3)
+    val byKey = StreamGate.read(spark, root, "events").orderBy(col("key")).limit(3)
     val plan = byKey.queryExecution.executedPlan.toString
     assert(!plan.contains("PushedTopN"), plan)
     assert(byKey.count() == 3L)

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.sources.TopicStore
@@ -46,16 +45,9 @@ class KeySharedRedeliverySpec extends SparkSpec {
     // small admission budget → many micro-batches, so cross-batch
     // order is observable; nack every key's seq-2 message on first
     // delivery (redeliveries carry rc=1 and are not re-nacked)
-    def runPass(): Unit = {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "ks")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "7")
-        .load()
+    def runPass(): Unit = StreamGate.run(spark,
+      StreamGate.source(spark, root, "ks", 7L)
         .writeStream
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
           BatchLanding.land(
             df.select("message_id", "key", "value_str",
@@ -67,11 +59,7 @@ class KeySharedRedeliverySpec extends SparkSpec {
                 "redelivery_count", "publish_time", "properties"),
             root, "ks", maxRedeliverCount = 5, nackDelayMs = 0L)
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        }, ckpt)
     runPass() // fresh deliveries (+ any retries already visible)
     runPass() // same checkpoint: the source merges remaining due retries
 

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.sources.TopicStore
@@ -39,20 +38,12 @@ class MetricsTopicSpec extends SparkSpec {
     val sunk = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
     val listener = MetricsTopic.attach(spark, root, "events-metrics")
     try {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root).option("serviceUrl", "pulsar://local")
-        .option("topicNames", "events")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "7") // several micro-batches
-        .load()
+      // several micro-batches
+      StreamGate.run(spark, StreamGate.source(spark, root, "events", 7L)
         .writeStream
         .foreachBatch { (df: DataFrame, bid: Long) =>
           sunk.put(bid, df.count()); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
 
       val expected = sunk.asScala.toMap.filter(_._2 > 0)
       val metrics = awaitMetrics(root, "events-metrics", expected.size.toLong)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.sources.TopicStore
@@ -23,7 +22,7 @@ import graft.sources.TopicStore
 class SinkExactlyOnceSpec extends SparkSpec {
 
   private val N = 20
-  private val EpochRows = 7 // several epochs per pass: ceil(20/7) = 3
+  private val EpochRows = 7L // several epochs per pass: ceil(20/7) = 3
 
   private def fixture = {
     import spark.implicits._
@@ -34,40 +33,22 @@ class SinkExactlyOnceSpec extends SparkSpec {
 
   /** One AvailableNow relay pass hop-in → hop-out on a shared checkpoint. */
   private def relayPass(root: String, ckpt: String, txn: Boolean): Unit = {
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "hop-in")
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", EpochRows.toString)
-      .load()
+    StreamGate.run(spark, StreamGate.source(spark, root, "hop-in", EpochRows)
       .writeStream
       .format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "hop-out")
-      .option("enableTransaction", txn.toString)
-      .option("batchingMaxMessages", "1000")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .options(StreamGate.address(root, "hop-out"))
+      .option("enableTransaction", txn.toString), ckpt)
   }
-
-  private def outRows(root: String) =
-    spark.read.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "hop-out")
-      .option("batchingMaxMessages", "1000")
-      .load()
 
   test("a forced epoch replay DUPLICATES without enableTransaction (at-least-once)") {
     val root = tmpDir("xonce-off")
     val ckpt = tmpDir("xonce-off-ckpt")
     TopicStore.publish(spark, fixture, root, "hop-in", 2)
     relayPass(root, ckpt, txn = false)
-    assert(outRows(root).count() == N.toLong)
+    assert(StreamGate.read(spark, root, "hop-out").count() == N.toLong)
     StreamReplay.forceLastEpochReplay(ckpt)
     relayPass(root, ckpt, txn = false)
-    val n = outRows(root).count()
+    val n = StreamGate.read(spark, root, "hop-out").count()
     assert(n > N.toLong,
       s"expected duplicates from the replayed epoch, got $n — the forced replay is not real")
   }
@@ -80,7 +61,7 @@ class SinkExactlyOnceSpec extends SparkSpec {
     val replayedEpoch = StreamReplay.forceLastEpochReplay(ckpt)
     assert(replayedEpoch > 0, "fixture must span several epochs")
     relayPass(root, ckpt, txn = true)
-    val out = outRows(root)
+    val out = StreamGate.read(spark, root, "hop-out")
     assert(out.count() == N.toLong, "replayed epoch must not duplicate")
     // every payload exactly once — not just the right total
     val dup = out.groupBy(col("value_str")).count()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.SparkSpec
 import graft.sources.TopicStore
@@ -29,13 +29,7 @@ class StreamStateRecoverySpec extends SparkSpec {
 
   private def runPass(root: String, ckpt: String, outDir: String): Unit = {
     import spark.implicits._
-    val bands = spark.readStream.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "docs")
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", "100000")
-      .load()
+    val bands = StreamGate.source(spark, root, "docs", 100000L)
       // one band per doc: the first word IS the band key — the state
       // machinery under test is identical to d20's, the banding is
       // just made transparent
@@ -53,16 +47,9 @@ class StreamStateRecoverySpec extends SparkSpec {
           ids.iterator.map(d => (d, mn < d))
         })
       .toDF("doc_id", "earlier")
-    val q = flagged.writeStream
+    StreamGate.run(spark, flagged.writeStream
       .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-        BatchLanding.land(df, outDir, bid)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .foreachBatch(StreamGate.land(outDir)), ckpt)
   }
 
   test("band-min state survives a restart: late band-mates still flag") {

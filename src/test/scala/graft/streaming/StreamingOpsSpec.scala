@@ -149,15 +149,10 @@ class StreamingOpsSpec extends SparkSpec {
       .withColumn("publish_time", lit(new java.sql.Timestamp(1700000000000L)))
       .withColumn("content_type", lit("text/plain"))
     AckingSink.nack(spark, failed, root, "t", nackDelayMs = 3600000L) // 1h
-    def read(retries: Boolean) = spark.read.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "t").option("batchingMaxMessages", "100")
-      .option("readRetries", retries.toString)
-      .load()
     import graft.operators.MessageOps
     // the nack went to the retry log, NOT the main topic log
-    assert(read(retries = false).count() == 0)
-    val pending = read(retries = true)
+    assert(StreamGate.read(spark, root, "t").count() == 0)
+    val pending = StreamGate.read(spark, root, "t", Map("readRetries" -> "true"))
     assert(pending.count() == 1)
     assert(MessageOps.dueOnly(pending).count() == 0)   // not yet due
     assert(MessageOps.dueOnly(pending,
@@ -183,18 +178,13 @@ class StreamingOpsSpec extends SparkSpec {
       dlqTopic = Some("events-dead"))
     assert((live, dead) == (1L, 1L))
 
-    def read(topic: String, retries: Boolean = false) = spark.read
-      .format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", topic).option("batchingMaxMessages", "100")
-      .option("readRetries", retries.toString)
-      .option("subscriptionName", "s1")
-      .load()
+    val s1 = Map("subscriptionName" -> "s1")
 
     // main log does not grow from a nack
-    assert(read("events").count() == 0)
+    assert(StreamGate.read(spark, root, "events", s1).count() == 0)
 
-    val redelivered = read("events", retries = true).collect()
+    val redelivered = StreamGate.read(spark, root, "events",
+      s1 + ("readRetries" -> "true")).collect()
     assert(redelivered.length == 1)
     assert(redelivered(0).getAs[String]("message_id") == "0:0:0:0") // id preserved
     assert(redelivered(0).getAs[Int]("redelivery_count") == 1)
@@ -202,7 +192,7 @@ class StreamingOpsSpec extends SparkSpec {
       .contains("retry_at"))
 
     // the configured dlqTopic is honored (not the default <topic>-dlq)
-    val dlq = read("events-dead").collect()
+    val dlq = StreamGate.read(spark, root, "events-dead", s1).collect()
     assert(dlq.length == 1)
     assert(dlq(0).getAs[String]("message_id") == "0:1:0:0")
     assert(dlq(0).getAs[Int]("redelivery_count") == 5)
@@ -293,38 +283,26 @@ class StreamingOpsSpec extends SparkSpec {
     def logLines: Long = (0 until 2).map(p =>
       TopicStore.partitionMeta(root, "t", p)._1).sum
 
-    def stream = spark.readStream.format("pulsarlike")
-      .option("path", root).option("serviceUrl", "pulsar://local")
-      .option("topicNames", "t").option("batchingMaxMessages", "100")
-      .option("subscriptionInitialPosition", "Earliest")
-      .load()
-
     // pass 1: consume all, nack v1 and v3 — v1 immediately due, v3 in 1h
-    val q1 = stream.writeStream
-      .option("checkpointLocation", ckpt)
+    StreamGate.run(spark, StreamGate.source(spark, root, "t", 100L)
+      .writeStream
       .foreachBatch { (df: DataFrame, _: Long) =>
         val failedNow = df.filter(col("value_str").cast("string") === "v1")
         val failedLater = df.filter(col("value_str").cast("string") === "v3")
         AckingSink.nack(spark, failedNow, root, "t", nackDelayMs = 0L)
         AckingSink.nack(spark, failedLater, root, "t", nackDelayMs = 3600000L)
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q1.awaitTermination()
+      }, ckpt)
     assert(logLines == 6)   // nack did not append to the main log
 
     // pass 2, same checkpoint: only the due retry (v1) is redelivered,
     // with redelivery_count bumped and the original message_id
     val sink2 = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    val q2 = stream.writeStream
-      .option("checkpointLocation", ckpt)
+    StreamGate.run(spark, StreamGate.source(spark, root, "t", 100L)
+      .writeStream
       .foreachBatch { (df: DataFrame, _: Long) =>
         df.collect().foreach(sink2.add); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination()
+      }, ckpt)
     val got = sink2.toArray(Array.empty[org.apache.spark.sql.Row])
     assert(got.length == 1, s"expected only the due retry, got ${got.toSeq}")
     assert(got(0).getAs[String]("message_id") == "0:1:0:0")

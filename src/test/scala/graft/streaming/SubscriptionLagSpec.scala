@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 import graft.sources.TopicStore
 
@@ -20,24 +18,6 @@ class SubscriptionLagSpec extends SparkSpec {
     TopicStore.publish(spark, df, root, "events", 4)
   }
 
-  private def drain(root: String, ckpt: String): Unit = {
-    val q = spark.readStream.format("pulsarlike")
-      .option("path", root)
-      .option("serviceUrl", "pulsar://local")
-      .option("topicNames", "events")
-      .option("subscriptionInitialPosition", "Earliest")
-      .option("batchingMaxMessages", "1000000")
-      .load()
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.count(): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   test("lag: full log before any commit, zero after drain, exact backlog after") {
     val root = tmpDir("lagstore")
     val ckpt = tmpDir("lagckpt")
@@ -48,7 +28,12 @@ class SubscriptionLagSpec extends SparkSpec {
       .agg(org.apache.spark.sql.functions.sum("lag")).head.getLong(0)
     assert(fresh == 40, s"fresh-subscription lag $fresh != 40")
 
-    drain(root, ckpt)
+    StreamGate.run(spark,
+      StreamGate.source(spark, root, "events", StreamGate.PlainCap)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.count(): Unit
+        }, ckpt)
     val drained = SubscriptionLag.report(spark, root, ckpt).collect()
     assert(drained.length == 4) // one row per partition
     assert(drained.forall(_.getAs[Long]("lag") == 0L),

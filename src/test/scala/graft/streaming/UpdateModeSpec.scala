@@ -2,10 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.sources.TopicStore
@@ -38,29 +36,15 @@ class UpdateModeSpec extends SparkSpec {
           .toDF("message_id", "key", "value_str", "event_time")
           .withColumn("publish_time", col("event_time")),
         root, "t", 2)
-    def runPass(): Unit = {
-      val q = spark.readStream.format("pulsarlike")
-        .option("path", root)
-        .option("serviceUrl", "pulsar://local")
-        .option("topicNames", "t")
-        .option("subscriptionInitialPosition", "Earliest")
-        .option("batchingMaxMessages", "1000")
-        .load()
+    def runPass(): Unit = StreamGate.run(spark,
+      StreamGate.source(spark, root, "t", 1000L)
         .withWatermark("event_time", "1 hour")
         .groupBy(window(col("event_time"), "1 hour"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("window_start"), col("n"))
         .writeStream
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          BatchLanding.land(df, outDir, bid)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .foreachBatch(StreamGate.land(outDir)), ckpt)
     publish("0:0:0:0", at(10 * 3600 + 5 * 60))   // 10:05, window [10:00, 11:00)
     runPass()
     publish("0:1:0:0", at(10 * 3600 + 40 * 60))  // 10:40, same window
