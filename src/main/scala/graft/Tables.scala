@@ -14,6 +14,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Where table `name` of the fixture directory `dir` lives:
+    * `<dir>/<name>.parquet`. The one place that spells the layout. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
@@ -23,7 +27,7 @@ object Tables {
       // everywhere in this repo, so downstream typing is identical either
       // way). Dispatch on the landed type, not the fixture generation.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = spark.read.parquet(path(dir, name))
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.LongType
       if (raw.schema("ts").dataType == LongType)
@@ -31,6 +35,6 @@ object Tables {
       else
         raw.withColumn("ts", col("ts").cast("timestamp"))
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      spark.read.parquet(path(dir, name))
     }
 }

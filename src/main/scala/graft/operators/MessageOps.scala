@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
 
 /** The reference's per-message dataflow operators (SURVEY.md §2A),
   * re-expressed as Catalyst-native transformations over the canonical
@@ -220,25 +219,11 @@ object MessageOps {
     (dead, live)
   }
 
-  /** A21 — readCompacted snapshot: latest message per key. Keyed window,
-    * one shuffle on `key`; ties broken by message_id for determinism.
-    * At 100 TB prefer `max_by` aggregation (partial agg, no full sort) —
-    * both forms are provided. */
-  def compacted(messages: DataFrame): DataFrame = {
-    // broker parity (and the source reader's behavior): compaction
-    // collapses KEYED messages only — unkeyed messages all survive, so
-    // they must bypass the rank entirely, not share one null partition
-    val w = Window.partitionBy(col("key"))
-      .orderBy(col("publish_time").desc, col("message_id").desc)
-    messages.filter(col("key").isNotNull)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-      .unionByName(messages.filter(col("key").isNull))
-  }
-
-  /** A21 scale variant — aggregation form of `compacted`: partial
-    * (map-side) max_by per key, no per-partition sort of the full data. */
+  /** A21 — readCompacted snapshot: latest message per key, by
+    * (publish_time, message_id). A partial (map-side) max_by per key, so
+    * no sort of the full data. Broker parity (and the source reader's
+    * behavior): compaction collapses KEYED messages only — unkeyed
+    * messages all survive. */
   def compactedAgg(messages: DataFrame): DataFrame = {
     val ordering = struct(col("publish_time"), col("message_id"))
     messages.filter(col("key").isNotNull)

@@ -2947,7 +2947,7 @@ object AnalyticsQueries {
     // to flag). Degenerate input (empty click stream) yields zero
     // rows in both renderings. The PAV pooled-means property and
     // monotonicity vs an independent sequential PAV are pinned in
-    // Round9EvalSpec.
+    // Round9AdditionsSpec.
     Q(
       "q87_isotonic_calibration",
       s"""WITH $convSql,

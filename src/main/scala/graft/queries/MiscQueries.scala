@@ -1761,7 +1761,7 @@ object MiscQueries {
     // bracket flags. At the gate SF the per-type user sets are < 4096
     // keys so the sketches are exact and the flags cannot flake; the
     // stored-vs-in-session byte identity and the 8-shard merge
-    // contract are pinned in Round10AdditionsSpec / ThetaSketchSpec.
+    // contract are pinned in SketchStoreSpec / ThetaSketchSpec.
     // At 100 TB: per-ingest-batch stores merge associatively, and any
     // later cross-batch question costs a metadata-sized read.
     Q(
@@ -2068,7 +2068,7 @@ object MiscQueries {
     // sampled id joins back to a real document. Corpus-side work: the
     // sketch pass plus one broadcast join of the k-row sample for the
     // membership/weight checks; the 8-shard merge and the planted
-    // heavy-item determinism are pinned in Round10AdditionsSpec.
+    // heavy-item determinism are pinned in SketchStoreSpec.
     Q(
       "q93_varopt_sample",
       """SELECT CAST(64 AS BIGINT) AS k,

@@ -1504,11 +1504,12 @@ object PipelineQueries {
     // and the eval set silently measures memorization). Clusters are
     // p04's 3-round group-min labels over the planted dup corpus
     // (exact + near + far copies). The oracle mirrors the labeling
-    // AND the cluster-keyed coin; LeakFreeSpec pins the behavior the
-    // oracle can't distinguish from a doc-keyed coin mirrored on both
-    // sides: multi-doc clusters exist and NONE spans splits. Shape at
-    // 100 TB: labeling is p04's bounded-iteration machinery; the coin
-    // and projection are stateless; one order-by for presentation.
+    // AND the cluster-keyed coin; CorpusReportSpec's p26 test pins the
+    // behavior the oracle can't distinguish from a doc-keyed coin
+    // mirrored on both sides: multi-doc clusters exist and NONE spans
+    // splits. Shape at 100 TB: labeling is p04's bounded-iteration
+    // machinery; the coin and projection are stateless; one order-by
+    // for presentation.
     Q(
       "p26_leakfree_split",
       s"""WITH ${DedupQueries.corpusSql},
@@ -1846,8 +1847,8 @@ object PipelineQueries {
     // probabilities, target = the 'en' slice. Honesty note: in THIS
     // fixture `lang` is assigned independently of text (all five
     // languages share one 31-word vocabulary at matched frequencies —
-    // measured during the rejected LR-trainer investigation, see
-    // ARCHITECTURE.md), so the top-50 'en' enrichment the direction
+    // measured while a logistic-regression trainer was evaluated and
+    // rejected), so the top-50 'en' enrichment the direction
     // spec pins is driven by SELF-INCLUSION: each target doc's own
     // tokens tilt p_target toward its own buckets. That is the
     // textbook estimator computed faithfully (production DSIR uses a

@@ -1666,7 +1666,7 @@ object StreamingQueries {
     // (< 4096 users/type = theta exact mode) and deterministic at any
     // SF (the retained set is a pure function of the input set).
     // Restart-resume (offsets recovered from the checkpoint, only new
-    // messages merged) is pinned in Round11AdditionsSpec.
+    // messages merged) is pinned in SketchStoreSpec.
     Q(
       "ws13_stream_sketch_store",
       """SELECT event_type,
@@ -1714,7 +1714,7 @@ object StreamingQueries {
     // store/batch=<id> with overwrite — a crash-and-replay REPLACES
     // the shard, and the merged answer is a pure function of the
     // committed offset ranges (replay-overwrite and restart-resume
-    // pinned in Round11AdditionsSpec). The value column is recovered
+    // pinned in SketchStoreSpec). The value column is recovered
     // across ALL five payload modes (JSON/XML/CSV parse via m02
     // dispatch; the text/plain fallback's second token — double→
     // string→double round-trips exactly in Spark). Gate is q92b's

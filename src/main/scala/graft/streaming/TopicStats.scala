@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.TopicStore
+import graft.sources.{PulsarLikeSource, TopicStore}
 
 /** Pulsar-admin-style per-partition topic stats ("topics stats" on the
   * reference's broker console; the MI console's other ops surface next
@@ -33,8 +33,14 @@ object TopicStats {
         (t, p, m.base, m.count)
       }
     }.toDF("topic", "partition", "base_offset", "log_end")
-    val msgs = StreamGate.read(spark, root, topics.mkString(","),
+    // a store with no topics has nothing to subscribe to (the source
+    // rejects an empty topicNames): aggregate no messages instead
+    val stored =
+      if (topics.isEmpty)
+        spark.createDataFrame(java.util.List.of[Row](), PulsarLikeSource.schema)
+      else StreamGate.read(spark, root, topics.mkString(","),
         Map("subscriptionInitialPosition" -> "Earliest"))
+    val msgs = stored
       .select(col("topic"),
         // message_id layout: ledger:offset:partition:batch
         split(col("message_id"), ":").getItem(2).cast("int").as("partition"),

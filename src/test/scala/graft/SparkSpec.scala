@@ -5,8 +5,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one JVM-wide session — Spark
-  * session startup dominates suite time otherwise). */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * session startup dominates suite time otherwise), plus the
+  * planted-fixture kit ([[Fixtures]]). */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with Fixtures {
   lazy val spark: SparkSession = SparkSpec.session
 
   def tmpDir(prefix: String): String =

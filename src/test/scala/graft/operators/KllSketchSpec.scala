@@ -12,7 +12,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   * java-serialization seam. */
 class KllSketchSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
   private val quantiles = Seq(0.25, 0.5, 0.9, 0.99)
   private val eps = KllSketch.getNormalizedRankError(200, false)
 

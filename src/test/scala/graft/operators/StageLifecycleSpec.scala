@@ -15,7 +15,7 @@ import graft.{QueryRegistry, SparkSpec}
   * Bench and Verify call it after every query action. */
 class StageLifecycleSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("stage registers the checkpointed RDD; drain unpersists it") {
     val sc = spark.sparkContext

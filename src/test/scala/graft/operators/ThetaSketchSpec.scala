@@ -93,7 +93,7 @@ class ThetaSketchSpec extends SparkSpec {
 
   test("q83 end-to-end at sf0.001: every pair row matches a " +
     "plain-Scala shingle recount and every flag is true") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = small
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("source"), col("text")).collect()
       .map(r => (r.getString(0), r.getString(1)))

@@ -14,7 +14,7 @@ import graft.{SparkSpec, Tables}
   * (b) actually execute at k = 4096 with total coverage. */
 class VectorAssignSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   private def base = Tables(spark, dir, "embeddings")
     .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))

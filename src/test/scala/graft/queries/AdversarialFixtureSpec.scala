@@ -14,10 +14,6 @@ import graft.{QueryRegistry, SparkSpec}
   */
 class AdversarialFixtureSpec extends SparkSpec {
 
-  private def writeTable(dir: String, name: String,
-      df: org.apache.spark.sql.DataFrame): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
-
   test("q48 on boundary-tied events: sweep equals brute force, half-open") {
     import spark.implicits._
     val dir = tmpDir("adv-q48")
@@ -32,7 +28,7 @@ class AdversarialFixtureSpec extends SparkSpec {
       (i.toLong, new Timestamp(t), rnd.nextInt(5).toLong, tpe,
         0.0, "{}")
     }
-    writeTable(dir, "events",
+    plant(dir, "events",
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
     val out = QueryRegistry.byName("q48_interval_concurrency")
       .run(spark, dir).collect()
@@ -58,7 +54,7 @@ class AdversarialFixtureSpec extends SparkSpec {
       (i.toLong, s"p$i", "B", "T", 1 + rnd.nextInt(5),
         1.0 + rnd.nextInt(5).toDouble)
     }
-    writeTable(dir, "part",
+    plant(dir, "part",
       rows.toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice"))
     val pts = rows.map(r => (r._1, r._6, r._5.toLong))
@@ -82,7 +78,7 @@ class AdversarialFixtureSpec extends SparkSpec {
       items.flatMap(pk =>
         Seq.fill(1 + rnd.nextInt(3))((ok.toLong, pk.toLong)))
     }
-    writeTable(dir, "lineitem", baskets.toDF("l_orderkey", "l_partkey"))
+    plant(dir, "lineitem", baskets.toDF("l_orderkey", "l_partkey"))
     val edges = baskets.distinct
       .groupBy(_._1).values.toSeq
       .flatMap { is =>
@@ -107,7 +103,7 @@ class AdversarialFixtureSpec extends SparkSpec {
     // driver fixture has no empty docs, so only this test sees it
     import spark.implicits._
     val dir = tmpDir("adv-t15")
-    writeTable(dir, "documents", Seq(
+    plant(dir, "documents", Seq(
       (1L, "", "en", "s", 0L),
       (2L, "ab", "en", "s", 2L),
       (3L, "aaaa", "en", "s", 4L))
@@ -129,7 +125,7 @@ class AdversarialFixtureSpec extends SparkSpec {
         Seq((si.toLong, Seq.fill(nw)("w").mkString(" "), "en",
           s"src$si", nw.toLong))
       }
-      writeTable(dir, "documents",
+      plant(dir, "documents",
         rows.toDF("doc_id", "text", "lang", "source", "n_chars"))
       val out = QueryRegistry.byName("p24_unimax_mix").run(spark, dir)
         .collect()
@@ -158,15 +154,14 @@ class AdversarialFixtureSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir("adv-degen")
     val doc6 = (1 to 30).map(i => s"w$i").mkString(" ")
-    Seq(
+    plant(dir, "documents", Seq(
       (1L, "srcA", "en", ""),         // 0 words
       (2L, "srcA", "en", "   "),      // whitespace-only -> 0 words
       (3L, "srcA", "en", "one"),      // 1 word
       (4L, "srcB", "fr", "a b"),      // below the trigram/window floor
       (5L, "srcB", "en", "a b c d"),  // exactly at the boundary window
       (6L, "srcB", "en", doc6)
-    ).toDF("doc_id", "source", "lang", "text")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "source", "lang", "text"))
 
     // d21: zero-word docs contribute NO chunks; srcA is exactly doc 3
     val d21 = QueryRegistry.byName("d21_cdc_chunks").run(spark, dir)

@@ -13,7 +13,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   */
 class AnalyticsSemanticsSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   private def coEdges(): Set[(Long, Long)] = {
     val items = Tables(spark, dir, "lineitem")

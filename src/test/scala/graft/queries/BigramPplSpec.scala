@@ -15,11 +15,11 @@ class BigramPplSpec extends SparkSpec {
     val dir = tmpDir("bigramppl")
     // vocab = {a,b,c,x} (V=4); bigram counts: "a b"=3, "b a"=1, "b c"=1;
     // context counts: a=3, b=2
-    Seq(
+    plant(dir, "documents", Seq(
       (1L, "a b a b"), // lps: ln(4/7), ln(2/6), ln(4/7)
       (2L, "a b c"),   // lps: ln(4/7), ln(2/6)
       (3L, "x")        // nw=1 -> no bigram, NULL scores
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val rows = QueryRegistry.byName("t09_bigram_ppl").run(spark, dir)
       .collect()
@@ -53,7 +53,7 @@ class BigramPplSpec extends SparkSpec {
     // oracle.
     import org.apache.spark.sql.functions._
     val out = graft.QueryRegistry.byName("t21_lm_backoff")
-      .run(spark, "/root/testdata/sf0.001")
+      .run(spark, small)
       .filter(col("n_scored") > 0)
       .groupBy(col("lang"))
       .agg(avg(col("avg_logprob")).as("lp"),

@@ -22,10 +22,6 @@ class BloomContractSpec extends SparkSpec {
 
   private val M = 65536 // 16^4 slot space
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
   /** The model mirror of p11's slot function. */
   private def slots(g: String): Seq[String] =
     (0 until 3).map(j => md5hex(s"$j:$g").substring(0, 4))

@@ -10,7 +10,7 @@ import graft.{SparkSpec, Tables}
   * §2B joins row; ARCHITECTURE.md shuffle discipline). */
 class BucketingSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("join of co-bucketed tables plans without a shuffle exchange") {
     // spark.sql.warehouse.dir is static — managed tables land in the

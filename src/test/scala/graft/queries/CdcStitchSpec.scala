@@ -13,10 +13,6 @@ import graft.{QueryRegistry, SparkSpec}
   */
 class CdcStitchSpec extends SparkSpec {
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Reference CDC: boundary after word i (4 <= i <= n-1) iff
     * md5(words[i-3..i] joined) starts with '0'; chunks are the word
     * runs between boundaries. Mirrors DedupOps.cdcBoundaries' DOC
@@ -47,8 +43,7 @@ class CdcStitchSpec extends SparkSpec {
       (3L, "srcA", toks("u", 2).mkString(" ")),  // below one window: 1 chunk
       (7L, "srcB", toks("v", 30).mkString(" "))
     )
-    docs.toDF("doc_id", "source", "text")
-      .write.parquet(s"$dir/documents.parquet")
+    plant(dir, "documents", docs.toDF("doc_id", "source", "text"))
 
     // independent expected accounting (first occurrence by (doc_id, idx))
     val rows = docs.flatMap { case (id, src, text) =>
@@ -120,7 +115,7 @@ class CdcStitchSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir("stitch")
     val o12 = toks("o", 12)
-    Seq(
+    plant(dir, "documents", Seq(
       // planted split targets: %20 == 0, n >= 24
       (20L, (toks("a", 30)).mkString(" ")),            // n=30, q=10
       (40L, (toks("b", 47)).mkString(" ")),            // n=47, q=15
@@ -128,7 +123,7 @@ class CdcStitchSpec extends SparkSpec {
       (3L, (toks("x", 10) ++ o12).mkString(" ")),      // len 22
       (7L, (o12 ++ toks("y", 10)).mkString(" ")),      // len 22
       (9L, toks("z", 15).mkString(" "))                // innocent bystander
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("d22_overlap_stitch").run(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -148,7 +143,7 @@ class CdcStitchSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir("stitch100")
     val o100 = toks("o", 100)
-    Seq(
+    plant(dir, "documents", Seq(
       // natural 100-word overlap: doc3's suffix == doc7's prefix.
       // Round 7's single last-8-gram anchor needed a prefix gram at
       // position ov-7 = 93 > the 32-position cap — undetectable; the
@@ -160,7 +155,7 @@ class CdcStitchSpec extends SparkSpec {
       // B = w[43..126], overlap exactly 42
       (20L, toks("a", 126).mkString(" ")),
       (9L, toks("z", 15).mkString(" "))                // innocent bystander
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("d22_overlap_stitch").run(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -179,9 +174,8 @@ class CdcStitchSpec extends SparkSpec {
     // srcB chunk first occurs under srcA, so srcB stores zero chunks —
     // the report must still carry its row (chunks_stored = 0), not
     // silently drop it (inner-join regression, advisor round 7)
-    Seq((1L, "srcA", t), (2L, "srcB", t))
-      .toDF("doc_id", "source", "text")
-      .write.parquet(s"$dir/documents.parquet")
+    plant(dir, "documents", Seq((1L, "srcA", t), (2L, "srcB", t))
+      .toDF("doc_id", "source", "text"))
     val out = QueryRegistry.byName("d21_cdc_chunks").run(spark, dir)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap

@@ -17,7 +17,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   */
 class ContainmentRecallSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("d14: full containments all recovered; overall recall >= 0.9") {
     import graft.operators.DedupOps

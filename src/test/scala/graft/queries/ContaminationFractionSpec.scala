@@ -16,13 +16,13 @@ class ContaminationFractionSpec extends SparkSpec {
     def words(n: Int, p: String): String =
       (0 until n).map(i => s"$p$i").mkString(" ")
     val eval0 = words(25, "e") // doc 0: eval (0%7==0), >= 20 words
-    Seq(
+    plant(dir, "documents", Seq(
       (0L, eval0),
       (1L, words(30, "c")),  // clean; also the mixed doc's head donor
       (2L, words(5, "s")),   // sub-13 words: accounting row only
       (3L, eval0),           // exact copy of an eval doc -> dirty 1.0
       (10L, words(15, "t"))  // %10 plants a near-dup (not eval-related)
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     // corpus the query builds: docs 1,2,3,10 (eval 0 excluded),
     // near-dups 100000 (of 0, first word dropped) and 100010 (of 10),

@@ -12,7 +12,7 @@ import graft.operators.DedupOps
   */
 class CorpusReportSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("p24: waterfill invariants — whole-or-capped, budget-tight, no overdraw") {
     val rows = QueryRegistry.byName("p24_unimax_mix").run(spark, dir)
@@ -73,7 +73,7 @@ class CorpusReportSpec extends SparkSpec {
     // mirrored on BOTH sides would still hash-match — this pins the
     // actual leakage guarantee on the query output
     val out = QueryRegistry.byName("p26_leakfree_split")
-      .run(spark, "/root/testdata/sf0.001").collect()
+      .run(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val byCluster = out.groupBy(_._2)
     val multi = byCluster.filter(_._2.length > 1)

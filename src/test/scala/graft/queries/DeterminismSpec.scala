@@ -15,7 +15,7 @@ import graft.{QueryRegistry, SparkSpec}
   */
 class DeterminismSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   private val floatHeavy = Seq(
     "p31_dsir_importance",   // ordered ln-term fold per doc

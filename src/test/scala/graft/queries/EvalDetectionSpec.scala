@@ -18,10 +18,6 @@ import graft.{QueryRegistry, SparkSpec}
   * query, never a reimplementation. */
 class EvalDetectionSpec extends SparkSpec {
 
-  private def writeTable(dir: String, name: String,
-      df: org.apache.spark.sql.DataFrame): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
-
   private val T0 = Timestamp.valueOf("2024-01-02 00:00:00").getTime
 
   /** events rows: clicks with score k; converting users get a purchase
@@ -49,7 +45,7 @@ class EvalDetectionSpec extends SparkSpec {
     // distinct users so outcome joins can't cross-contaminate
     val rows = (1L to 40L).map(i => (i, i, 90L, true, true)) ++
       (41L to 100L).map(i => (i, i, 10L, false, true))
-    writeTable(dir, "events", clickRows(rows))
+    plant(dir, "events", clickRows(rows))
     val auc = QueryRegistry.byName("q69_auc_roc").run(spark, dir)
       .collect().head
     assert(auc.getLong(1) == 40L && auc.getLong(2) == 60L)
@@ -71,13 +67,13 @@ class EvalDetectionSpec extends SparkSpec {
   test("q69: one fully-tied score is exactly chance (AUC 0.5); zero " +
     "positives degrades to NULL, never an exception") {
     val tied = tmpDir("det-tied")
-    writeTable(tied, "events", clickRows(
+    plant(tied, "events", clickRows(
       (1L to 30L).map(i => (i, i, 50L, i % 3 == 0L, true))))
     val r = QueryRegistry.byName("q69_auc_roc").run(spark, tied)
       .collect().head
     assert(r.getDouble(4) == 0.5, s"all-tied AUC ${r.getDouble(4)}")
     val nopos = tmpDir("det-nopos")
-    writeTable(nopos, "events", clickRows(
+    plant(nopos, "events", clickRows(
       (1L to 20L).map(i => (i, i, i % 100, false, true))))
     val r2 = QueryRegistry.byName("q69_auc_roc").run(spark, nopos)
       .collect().head
@@ -100,7 +96,7 @@ class EvalDetectionSpec extends SparkSpec {
     "magnitude above the identical-distribution floor") {
     val drift = tmpDir("det-drift")
     // ref half: uniform bins; current half: everything in bin 9
-    writeTable(drift, "events", clickRows(
+    plant(drift, "events", clickRows(
       (1L to 200L).map(i => (i, i, i % 100, false, true)) ++
         (201L to 400L).map(i => (i, i, 95L, false, false))))
     // the gated surface carries exact BIGINT e9 probabilities and
@@ -116,7 +112,7 @@ class EvalDetectionSpec extends SparkSpec {
       .run(spark, drift).collect()
     val psiDrift = psiOf(driftRows)
     val still = tmpDir("det-still")
-    writeTable(still, "events", clickRows(
+    plant(still, "events", clickRows(
       (1L to 200L).map(i => (i, i, i % 100, false, true)) ++
         (201L to 400L).map(i => (i, i, i % 100, false, false))))
     val stillRows = QueryRegistry.byName("q71_psi_drift")
@@ -147,7 +143,7 @@ class EvalDetectionSpec extends SparkSpec {
       val rows = (1L to 120L).map { i =>
         (i, i, rnd.nextInt(10) * 5L, rnd.nextDouble() < 0.3, true)
       }
-      writeTable(dir, "events", clickRows(rows))
+      plant(dir, "events", clickRows(rows))
       val data = rows.map(r => (r._1, r._3, r._4))
       val pos = data.filter(_._3).map(_._2)
       val neg = data.filterNot(_._3).map(_._2)
@@ -200,7 +196,7 @@ class EvalDetectionSpec extends SparkSpec {
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("d").cast("timestamp").as("o_orderdate"),
         lit("1-URGENT").as("o_orderpriority"))
-    writeTable(dir, "orders", df)
+    plant(dir, "orders", df)
     val r = QueryRegistry.byName("q73_cusum_changepoint")
       .run(spark, dir).collect().head
     assert(r.getLong(0) == 24L)
@@ -221,7 +217,7 @@ class EvalDetectionSpec extends SparkSpec {
             .toLocalDateTime.plusYears(m / 12).toString
             .replace("T", " ")))
       }
-      writeTable(dir, "orders", rows
+      plant(dir, "orders", rows
         .toDF("o_orderkey", "o_custkey", "o_orderstatus",
           "o_totalprice", "d")
         .select(col("o_orderkey"), col("o_custkey"),
@@ -261,7 +257,7 @@ class EvalDetectionSpec extends SparkSpec {
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("d").cast("timestamp").as("o_orderdate"),
         lit("1-URGENT").as("o_orderpriority"))
-    writeTable(dir, "orders", df)
+    plant(dir, "orders", df)
     val rowsOut = QueryRegistry.byName("q74_seasonal_decompose")
       .run(spark, dir).collect()
     val byMoy = rowsOut.map(r => r.getLong(1) -> r.getDouble(4)).toMap
@@ -286,7 +282,7 @@ class EvalDetectionSpec extends SparkSpec {
         (k + 1000L, new Timestamp(t + k * 1000L), k.toLong, "purchase",
           0.0, """{"k": 1}"""))
     }
-    writeTable(dir, "events",
+    plant(dir, "events",
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
     val r = QueryRegistry.byName("q75_funnel_latency").run(spark, dir)
       .collect()
@@ -308,7 +304,7 @@ class EvalDetectionSpec extends SparkSpec {
     // for q70/q77 (round-9 guards; unreachable on the driver fixture
     // but a real pipeline sees empty partitions routinely)
     val empty = tmpDir("det-empty")
-    writeTable(empty, "events", clickRows(Seq.empty))
+    plant(empty, "events", clickRows(Seq.empty))
     val auc = QueryRegistry.byName("q69_auc_roc").run(spark, empty)
       .collect()
     assert(auc.length == 1 && (0 to 5).forall(auc.head.isNullAt),
@@ -322,7 +318,7 @@ class EvalDetectionSpec extends SparkSpec {
     // (all odd event_ids): the oracle's qh GROUP BY over nothing
     // leaves eval clicks joining to zero qhat rows
     val calEmpty = tmpDir("det-cal-empty")
-    writeTable(calEmpty, "events", clickRows(
+    plant(calEmpty, "events", clickRows(
       (1L to 99L by 2).map(i => (i, i, i % 100, false, true))))
     assert(QueryRegistry.byName("q77_conformal_coverage")
       .run(spark, calEmpty).collect().isEmpty,
@@ -334,7 +330,7 @@ class EvalDetectionSpec extends SparkSpec {
       val rows = for (m <- 0 until nMonths; i <- 0 until 3) yield
         ((m * 3 + i).toLong, i.toLong, "O", 100.0,
           f"2020-${m + 1}%02d-15 00:00:00")
-      writeTable(dir, "orders", rows
+      plant(dir, "orders", rows
         .toDF("o_orderkey", "o_custkey", "o_orderstatus",
           "o_totalprice", "d")
         .select(col("o_orderkey"), col("o_custkey"),

@@ -9,7 +9,7 @@ import graft.{SparkSpec, Tables}
   * spark.read/write paths — round-trip equality on a real table slice. */
 class FileFormatSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("json/csv/orc/parquet round-trip a table slice losslessly") {
     val src = Tables(spark, dir, "nation")

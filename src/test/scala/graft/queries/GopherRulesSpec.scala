@@ -18,12 +18,12 @@ class GopherRulesSpec extends SparkSpec {
     // single deliberate failure
     def words(n: Int, p: String): String =
       (Seq("the", "a") ++ (0 until n - 2).map(_ => p)).mkString(" ")
-    Seq(
+    plant(dir, "documents", Seq(
       (1L, words(60, "wxyz")),  // no modulus hit: passes everything
       (13L, words(26, "wxyz")), // +ceil(26/3)=9 '#': fails wc, sym, alpha
       (9L, words(50, "wxyz")),  // bullets on all 5 lines: fails bullet
       (11L, words(50, "wxyz"))  // '...' on all 5 lines: fails ellipsis
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("t10_gopher_rules").run(spark, dir)
       .collect().map { r =>

@@ -35,7 +35,7 @@ class HllRollingSpec extends SparkSpec {
   }
 
   test("per-day relative error <= 5% vs exact q58 (sf0.001 and sf0.01)") {
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { dir =>
+    Seq(small, large).foreach { dir =>
       val es = errors(dir)
       assert(es.nonEmpty, s"no days at $dir")
       val worst = es.maxBy(_._4)
@@ -48,7 +48,7 @@ class HllRollingSpec extends SparkSpec {
   }
 
   test("q60: inclusion-exclusion overlap error <= 5% of the exact union per month") {
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { dir =>
+    Seq(small, large).foreach { dir =>
       val orders = Tables(spark, dir, "orders")
       val mo = orders
         .select(trunc(col("o_orderdate"), "month").as("m"),
@@ -86,7 +86,7 @@ class HllRollingSpec extends SparkSpec {
 
   test("q59's gated flag is TRUE on every row at sf0.001") {
     val out = QueryRegistry.byName("q59_rolling_distinct_hll")
-      .run(spark, "/root/testdata/sf0.001").collect()
+      .run(spark, small).collect()
     assert(out.nonEmpty)
     assert(out.forall(r => r.getBoolean(2)),
       out.filterNot(_.getBoolean(2)).mkString(", "))

@@ -15,7 +15,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   */
 class MultimodalRecallSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("mm05: planted pairs all recovered; recall vs exhaustive truth >= 0.9") {
     val docs = Tables(spark, dir, "documents")
@@ -129,7 +129,7 @@ class MultimodalRecallSpec extends SparkSpec {
   test("mm14: every detected planted crop matches at offset +2; recall floor holds") {
     // sf0.01: richer peak population than sf0.001 (the vote floor
     // needs >= 4 shared landmark pairs)
-    val d01 = "/root/testdata/sf0.01"
+    val d01 = large
     val out = QueryRegistry.byName("mm14_audio_fingerprint")
       .run(spark, d01).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

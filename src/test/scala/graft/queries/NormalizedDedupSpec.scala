@@ -13,12 +13,12 @@ class NormalizedDedupSpec extends SparkSpec {
   test("d12: every planted variant collapses into its canonical's group") {
     import spark.implicits._
     val dir = tmpDir("normdedup")
-    Seq(
+    plant(dir, "documents", Seq(
       (0L, "some plain text here"),     // %11: gets a shouting variant
       (5L, "other distinct words"),
       (11L, "eleven doc body text"),    // %11: variant too
       (12L, "some plain text here")     // verbatim copy of doc 0's text
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val rows = QueryRegistry.byName("d12_normalized_dedup").run(spark, dir)
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
@@ -34,8 +34,9 @@ class NormalizedDedupSpec extends SparkSpec {
     // grade = 0.39*(3/1) + 11.8*(3/3) - 15.59 = 1.17 + 11.8 - 15.59
     // "aeiou xyz beautiful": syllables = 1 + max(1,0) + 4 ('eau','i','u'
     //  -> [aeiou]+ runs: 'eau', 'i', 'u' = 3... pinned by the collect)
-    Seq((1L, "the cat sat"), (2L, "aeiou xyz beautiful"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    plant(dir, "documents",
+      Seq((1L, "the cat sat"), (2L, "aeiou xyz beautiful"))
+        .toDF("doc_id", "text"))
     val out = QueryRegistry.byName("t12_readability").run(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap

@@ -12,7 +12,7 @@ class PlanSpec extends SparkSpec {
 
   import RegistrySweep.{streamLoops, value}
 
-  private val dir = RegistrySweep.small
+  private val dir = small
 
   /** The sf0.001 sweep minus the stream loops, whose executed plan is
     * only the landed parquet read — plan-shape lints don't apply. */

@@ -17,7 +17,7 @@ import graft.operators.VectorOps
   */
 class QuantizedRecallSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   private def truthTop3: Set[(Long, Long)] = {
     val base = Tables(spark, dir, "embeddings")

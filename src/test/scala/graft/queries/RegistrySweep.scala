@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.{GraftSession, QueryRegistry, SparkSpec}
+import graft.Fixtures.{large, small}
 
 /** One build of every registered query per scale for the seven
   * registry-wide lints (PlanSpec's window, decimal, broadcast, cartesian
@@ -17,9 +18,6 @@ import graft.{GraftSession, QueryRegistry, SparkSpec}
   * session is released before the next query. A fact that could not be
   * recorded (a failed build fails them all) fails every lint reading it. */
 object RegistrySweep {
-
-  val small = "/root/testdata/sf0.001"
-  val large = "/root/testdata/sf0.01" // 10x rows, for scale lints
 
   /** Queries whose run() executes a stream end-to-end (publish + consume
     * + landed parquet): their executed plan is the final parquet read,

@@ -7,7 +7,7 @@ import graft.{QueryRegistry, SparkSpec}
   * correct greedy water-fill; these pin the contract itself. */
 class RepeatScheduleSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("p27: greedy repeat schedule is budget-exact, capped, small-first") {
     val rows = QueryRegistry.byName("p27_repeat_schedule")

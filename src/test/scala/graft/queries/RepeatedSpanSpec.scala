@@ -19,14 +19,14 @@ class RepeatedSpanSpec extends SparkSpec {
     val s10 = toks("s", 10) // 10-token run shared by docs 1,2,3
     val t10 = toks("t", 10) // 10-token run shared by docs 3,11
     val r8 = toks("r", 8)   // 8-gram repeated WITHIN doc 12 only
-    Seq(
+    plant(dir, "documents", Seq(
       (1L, s"$s10 u1 u2"),                  // nw=12: span [1,10]
       (2L, s"v1 v2 $s10 v3"),               // nw=13: span [3,12]
       (3L, s"$s10 ${toks("w", 9)} $t10"),   // nw=29: [1,10] + [20,29]
       (11L, t10),                           // nw=10: span [1,10]
       (12L, s"$r8 x0 $r8"),                 // nw=17: same-doc repeat only
       (13L, "tiny doc")                     // nw=2: below one gram
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("d10_repeated_spans").run(spark, dir)
       .collect()
@@ -41,20 +41,16 @@ class RepeatedSpanSpec extends SparkSpec {
     assert(out(13L) == ((2L, 0L, 0L)), s"sub-gram doc: ${out(13L)}")
   }
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   test("d11 strips exactly the span tokens; fully-covered docs keep a 0-row") {
     import spark.implicits._
     val dir = tmpDir("spanstrip")
     val s10 = toks("s", 10)
-    Seq(
+    plant(dir, "documents", Seq(
       (1L, s"$s10 u1 u2"),  // span [1,10] -> keeps "u1 u2"
       (2L, s"v1 v2 $s10"),  // span [3,12] -> keeps "v1 v2"
       (11L, s10),           // fully covered -> 0 kept, NULL hash
       (13L, "tiny doc")     // no grams -> untouched
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = graft.QueryRegistry.byName("d11_span_strip").run(spark, dir)
       .collect().map(r => r.getLong(0) ->

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.functions._
 
 import graft.{QueryRegistry, SparkSpec, Tables}
@@ -16,11 +14,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   */
 class Round8AdditionsSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+  private val dir = small
 
   private def hrw(docId: Long, n: Int): Int =
     (1 to n).maxBy(sh => (md5hex(s"$docId:$sh"), sh))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.functions._
 
 import graft.{QueryRegistry, SparkSpec, Tables}
@@ -16,14 +14,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   */
 class Round8EvalSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private val dir = small
 
   /** (event_id, user_id, score, converted, ts_micros) per click,
     * re-derived with a plain-Scala scan of the events fixture (micros

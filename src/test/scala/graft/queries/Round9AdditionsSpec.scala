@@ -1,156 +1,25 @@
 package graft.queries
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.functions._
 
 import graft.{QueryRegistry, SparkSpec, Tables}
 
-/** Semantic pins for the round-9 second-session additions (d24
-  * winnowing, q86 frequent-items sketch, q87 isotonic calibration,
-  * s24 grid DBSCAN). Discipline as in Round8EvalSpec /
-  * Round8AdditionsSpec: every oracle MIRRORS its query's formula, so a
-  * wrong-direction bug reproduces identically in DuckDB and still
-  * hash-matches — these tests re-derive each result through an
-  * INDEPENDENT implementation (sequential winnowing scan, sequential
-  * stack-based PAV, brute-force DBSCAN) and planted-truth fixtures
-  * (known shared runs, known blobs, forced sketch purges).
+/** Semantic pins for the round-9 second-session additions that have no
+  * subject suite yet (q87 isotonic calibration, s24 grid DBSCAN, q88
+  * Adamic-Adar, q89 robust location, t28 JSD drift, q90 ANOVA, q91
+  * Markov removal effects, p40 quantile normalization; d24 lives in
+  * NearDupSpec, q86 in FreqSketchSpec and SketchStoreSpec). Discipline
+  * as in Round8EvalSpec / Round8AdditionsSpec: every oracle MIRRORS
+  * its query's formula, so a wrong-direction bug reproduces
+  * identically in DuckDB and still hash-matches — these tests
+  * re-derive each result through an INDEPENDENT implementation
+  * (sequential stack-based PAV, brute-force DBSCAN, sequential chain
+  * solves) and planted-truth fixtures (known blobs, planted causal
+  * graphs).
   */
 class Round9AdditionsSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  // -----------------------------------------------------------------
-  // d24 winnowing
-
-  /** Sequential winnowing (k=4, w=5) of one token list: every window
-    * of 5 consecutive gram hashes contributes its minimum; docs with
-    * fewer grams than w degenerate to one whole-doc window. Returns
-    * the distinct fingerprint set. */
-  private def winnow(toks: Seq[String]): Set[String] = {
-    if (toks.length < 4) return Set.empty
-    val hs = toks.sliding(4).map(g => md5hex(g.mkString(" "))).toVector
-    val starts = 1 to math.max(1, hs.length - 4)
-    starts.map(s0 => hs.slice(s0 - 1, s0 - 1 + 5).min).toSet
-  }
-
-  test("d24: a sequential winnowing scan reproduces every pair row " +
-    "(fingerprint sets, shared counts, jaccard) on the fixture") {
-    val base = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    // corpusWithNearDups: every 10th doc re-appears at id+100000 with
-    // its first word dropped
-    val corpus = base.toSeq ++ base.filter(_._1 % 10 == 0)
-      .map { case (id, t) => (id + 100000L, t.split(" ").filter(_.nonEmpty)
-        .drop(1).mkString(" ")) }
-    val fps = corpus.map { case (id, t) =>
-      id -> winnow(t.split(" ").filter(_.nonEmpty).toSeq)
-    }.toMap
-    val expected = (for {
-      (a, fa) <- fps.toSeq; (b, fb) <- fps.toSeq if a < b
-      shared = (fa & fb).size if shared >= 2
-    } yield (a, b, fa.size.toLong, fb.size.toLong, shared.toLong,
-      shared.toDouble / (fa.size + fb.size - shared)))
-      .sortBy(t => (t._1, t._2))
-    val got = QueryRegistry.byName("d24_winnowing").run(spark, dir)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getDouble(5))).toSeq
-    assert(got == expected,
-      s"winnowing pair accounting diverged: got ${got.take(3)}... " +
-        s"expected ${expected.take(3)}...")
-    assert(expected.nonEmpty, "fixture produced no winnowing pairs — " +
-      "the planted near-dups should share fingerprints")
-  }
-
-  test("d24: the w+k-1 guarantee and density bound on planted docs — " +
-    "a 20-token shared run is found, disjoint-gram docs are not") {
-    import spark.implicits._
-    val d = tmpDir("winnow")
-    val shared = (1 to 20).map(i => s"s$i").mkString(" ")
-    def uniq(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
-    // ids chosen non-multiples of 10 so corpusWithNearDups plants no
-    // copies that would add pairs beyond the constructed truth
-    Seq(
-      (1L, s"${uniq("a", 30)} $shared ${uniq("z", 30)}", "en", "s0"),
-      (3L, s"${uniq("b", 25)} $shared ${uniq("y", 25)}", "en", "s0"),
-      (7L, uniq("c", 120), "en", "s0"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val rows = QueryRegistry.byName("d24_winnowing").run(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
-    // guarantee: a shared run of >= w+k-1 = 8 tokens shares >= 1
-    // fingerprint; 20 shared tokens give 17 shared grams = 13 full
-    // windows inside the run, hence >= ceil(13/5) >= 2 — above the
-    // query's >=2 noise filter
-    assert(rows.map(t => (t._1, t._2)).toSet == Set((1L, 3L)),
-      s"expected exactly the planted pair (1,3), got ${rows.toSeq}")
-    assert(rows.head._3 >= 2)
-    // density: fingerprints per doc ~ 2/(w+1) of windows; doc 7 has
-    // 117 grams -> 113 windows; assert the sampled index is well under
-    // half the gram index d10 would build
-    val toks7 = (1 to 120).map(i => s"c$i")
-    val nfp = winnow(toks7).size
-    assert(nfp <= 113 / 2, s"winnowing density too high: $nfp of 113")
-    assert(nfp >= 113 / 8, s"winnowing density implausibly low: $nfp")
-  }
-
-  // -----------------------------------------------------------------
-  // q86 frequent-items sketch
-
-  test("q86 operator: forced-purge FreqLongs keeps the Misra-Gries " +
-    "guarantees — bounds bracket every true count, no false negatives, " +
-    "and the guarantees survive an 8-shard merge") {
-    import graft.operators.SketchOps
-    import spark.implicits._
-    // planted zipf-ish stream: item i in 1..400 appears 401-i times;
-    // 400 distinct >> 0.75*64, so a maxMapSize=64 sketch MUST purge
-    val stream = (1 to 400).flatMap(i => Seq.fill(401 - i)(i.toLong))
-    val truth = stream.groupBy(identity).view.mapValues(_.size.toLong)
-      .toMap
-    for (parts <- Seq(1, 8)) {
-      val df = stream.toDF("v").repartition(parts)
-      val sk = SketchOps.freqSketch(df, col("v"), 64)
-      val err = sk.getMaximumError
-      assert(err > 0, "purges expected: 400 distinct into a 64-slot map")
-      truth.foreach { case (item, n) =>
-        val (lb, ub) = (sk.getLowerBound(item), sk.getUpperBound(item))
-        assert(lb <= n && n <= ub,
-          s"parts=$parts item=$item n=$n outside [$lb, $ub]")
-        assert(ub - lb <= err,
-          s"bracket wider than maxError for $item: [$lb, $ub] err=$err")
-        assert(lb <= sk.getEstimate(item) && sk.getEstimate(item) <= ub,
-          s"estimate outside its own bracket for $item")
-        if (n > err) assert(sk.getEstimate(item) > 0,
-          s"false negative: item=$item n=$n > maxError=$err untracked")
-      }
-      // untracked items are provably light
-      assert(truth.filter(_._2 > err)
-        .forall { case (i, _) => sk.getEstimate(i) > 0 })
-    }
-  }
-
-  test("q86 gate: the exact top-20 equals a plain-Scala recount and " +
-    "both flags hold on the fixture") {
-    val toks = Tables(spark, dir, "documents")
-      .select(col("text")).collect().map(_.getString(0))
-      .flatMap(_.split(" ").filter(_.nonEmpty))
-    val top = toks.groupBy(identity).view.mapValues(_.size.toLong).toSeq
-      .sortBy { case (t, n) => (-n, t) }.take(20)
-    val got = QueryRegistry.byName("q86_frequent_tokens").run(spark, dir)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2),
-        r.getBoolean(3)))
-    assert(got.map(g => (g._1, g._2)).toSeq == top.map(t => (t._1, t._2)))
-    assert(got.forall(g => g._3 && g._4),
-      "structurally-true sketch flags must hold")
-  }
+  private val dir = small
 
   // -----------------------------------------------------------------
   // q87 isotonic calibration
@@ -223,10 +92,9 @@ class Round9AdditionsSpec extends SparkSpec {
     val pts = (blobA ++ chain ++ border ++ noise).map { case (id, x, y) =>
       (id, x.toFloat.toDouble, y.toFloat.toDouble)
     }
-    pts.map { case (id, x, y) =>
+    plant(d, "embeddings", pts.map { case (id, x, y) =>
       (id, Seq(x.toFloat, y.toFloat) ++ Seq.fill(62)(0f), 0)
-    }.toDF("vec_id", "embedding", "label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    }.toDF("vec_id", "embedding", "label"))
     // brute-force reference with the same arithmetic
     val eps2 = 0.02 * 0.02
     def nbrs(id: Long): Seq[Long] = {
@@ -403,14 +271,11 @@ class Round9AdditionsSpec extends SparkSpec {
     }
     // planted: one source drawn from a disjoint alphabet must carry a
     // JSD far above two identically-distributed sources
-    import spark.implicits._
     val d = tmpDir("jsd")
     val common = "the quick brown fox jumps over the lazy dog " * 5
-    Seq((1L, common, "en", "sA"), (2L, common, "en", "sB"),
-      (3L, "zzzqqqxxxwwwvvv" * 12, "en", "sC"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    plant(d, "documents", documents(
+      Seq((1L, common, "en", "sA"), (2L, common, "en", "sB"),
+        (3L, "zzzqqqxxxwwwvvv" * 12, "en", "sC"))))
     val p = QueryRegistry.byName("t28_jsd_drift").run(spark, d)
       .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
     assert(p("sC") > 0.5, s"divergent source not flagged: ${p("sC")}")
@@ -423,14 +288,10 @@ class Round9AdditionsSpec extends SparkSpec {
 
   test("t28: a single-source corpus has no 'rest' and yields NULL " +
     "jsd_nats (not NaN/inf) — the degenerate-input guard") {
-    import spark.implicits._
     val d = tmpDir("jsd-single")
-    Seq((1L, "the quick brown fox jumps over the lazy dog", "en", "sOnly"),
-      (2L, "pack my box with five dozen liquor jugs", "en", "sOnly"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$d/documents.parquet")
+    plant(d, "documents", documents(
+      Seq((1L, "the quick brown fox jumps over the lazy dog", "en", "sOnly"),
+        (2L, "pack my box with five dozen liquor jugs", "en", "sOnly"))))
     val rows = QueryRegistry.byName("t28_jsd_drift").run(spark, d)
       .collect()
     assert(rows.length == 1 && rows.head.getString(0) == "sOnly")
@@ -475,21 +336,16 @@ class Round9AdditionsSpec extends SparkSpec {
     }
     // degenerate guards: one group -> NULL F; zero within-variance
     // (constant lengths per group) -> NULL F, never Inf/NaN
-    import spark.implicits._
     val d1 = tmpDir("anova1")
-    Seq((1L, "aaa", "en", "s0"), (2L, "bbbb", "en", "s0"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d1/documents.parquet")
+    plant(d1, "documents", documents(
+      Seq((1L, "aaa", "en", "s0"), (2L, "bbbb", "en", "s0"))))
     val one = QueryRegistry.byName("q90_anova_length_by_source")
       .run(spark, d1).collect()
     assert(one.forall(_.isNullAt(8)), "k=1 must NULL the F statistic")
     val d2 = tmpDir("anova2")
-    Seq((1L, "aaa", "en", "s0"), (2L, "xyz", "en", "s0"),
-      (3L, "ccccc", "en", "s1"), (4L, "ddddd", "en", "s1"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d2/documents.parquet")
+    plant(d2, "documents", documents(
+      Seq((1L, "aaa", "en", "s0"), (2L, "xyz", "en", "s0"),
+        (3L, "ccccc", "en", "s1"), (4L, "ddddd", "en", "s1"))))
     val zero = QueryRegistry.byName("q90_anova_length_by_source")
       .run(spark, d2).collect()
     assert(zero.forall(_.isNullAt(8)), "ssw=0 must NULL the F statistic")
@@ -579,12 +435,11 @@ class Round9AdditionsSpec extends SparkSpec {
       Seq("start", "side").foreach { t =>
         rows += ((eid, u, t)); eid += 1 }
     }
-    rows.toSeq.toDF("event_id", "user_id", "event_type")
+    plant(d, "events", rows.toSeq.toDF("event_id", "user_id", "event_type")
       .withColumn("ts", expr(
         "timestamp'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0,event_id)"))
       .withColumn("value", lit(1.0))
-      .withColumn("props", lit("{}"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
+      .withColumn("props", lit("{}")))
     val got = QueryRegistry.byName("q91_markov_removal").run(spark, d)
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
@@ -632,9 +487,8 @@ class Round9AdditionsSpec extends SparkSpec {
     val d = tmpDir("qnorm")
     val rows = (1L to 50L).map(i => (i, "x" * (100 + i.toInt), "en", "sLo")) ++
       (51L to 100L).map(i => (i, "x" * (5000 + 3 * i.toInt), "en", "sHi"))
-    rows.toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    plant(d, "documents", rows.toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")).cast("long")))
     val p = QueryRegistry.byName("p40_quantile_normalize").run(spark, d)
       .collect().map(r => (r.getString(1), r.getLong(5)))
     val bySrc = p.groupBy(_._1).view

@@ -13,7 +13,7 @@ import graft.{QueryRegistry, SparkSpec}
   * rewrite is result-identical to the default-conf run. */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("q53: bloom runtime filter injects above thresholds, results identical") {
     val q = QueryRegistry.byName("q53_runtime_filter_join")

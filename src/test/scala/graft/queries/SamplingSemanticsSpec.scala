@@ -12,7 +12,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   */
 class SamplingSemanticsSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = large
 
   test("p18: the weighted sample skews toward heavier docs") {
     // A-Res with w = n_tokens must over-represent long docs: the

@@ -12,7 +12,7 @@ import graft.operators.DedupOps
   * anti-join pins correctness of the layout change. */
 class SeenSetBucketingSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("bucketed seen-set anti join: no broadcast, no shuffle of the history") {
     spark.sql("DROP TABLE IF EXISTS seen_b")

@@ -12,12 +12,12 @@ class ShortDocAccountingSpec extends SparkSpec {
   test("d09 emits n_segments=0, n_tokens_kept=nw for sub-segment docs") {
     import spark.implicits._
     val dir = tmpDir("shortdoc")
-    Seq(
+    plant(dir, "documents", Seq(
       (1L, "just two"),                           // nw=2 -> no segment
       (2L, "one"),                                // nw=1
       (3L, "alpha beta gamma delta"),             // nw=4 -> 1 seg + 1 tail
       (4L, "alpha beta gamma delta epsilon zeta") // nw=6 -> 2 segs
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("d09_line_dedup").run(spark, dir)
       .collect().map(r => r.getLong(0) ->

@@ -16,6 +16,8 @@ import graft.operators.VectorOps
   * that training actually adapts to structure.) */
 class SimilaritySpec extends SparkSpec {
 
+  private val dir = small
+
   test("trained IVF recall@3 >= 0.8 on clustered embeddings") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -63,7 +65,6 @@ class SimilaritySpec extends SparkSpec {
     * on the driver fixture: multiprobe recall@3 must dominate
     * single-probe per query and be strictly higher in aggregate. */
   test("s11 multiprobe recall@3 strictly beats s02 single-probe") {
-    val dir = "/root/testdata/sf0.001"
     def hitSet(name: String): Set[(Long, Long)] =
       graft.QueryRegistry.byName(name).run(spark, dir)
         .select(col("q_id").cast("long"), col("neighbor_id").cast("long"))
@@ -97,7 +98,6 @@ class SimilaritySpec extends SparkSpec {
     // deterministic set). The behavior MMR exists for: the selected
     // set's worst-case internal similarity must sit below plain
     // top-k's, strictly for at least one query on this fixture.
-    val dir = "/root/testdata/sf0.001"
     val base = graft.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
       .withColumn("nv", VectorOps.norm(col("v")))
@@ -141,8 +141,8 @@ class SimilaritySpec extends SparkSpec {
   test("s18: purity/NMI invariants hold and the report covers the corpus") {
     import org.apache.spark.sql.functions._
     val out = graft.QueryRegistry.byName("s18_cluster_purity")
-      .run(spark, "/root/testdata/sf0.001").collect()
-    val n = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings").count()
+      .run(spark, dir).collect()
+    val n = graft.Tables(spark, dir, "embeddings").count()
     assert(out.map(_.getLong(1)).sum == n, "cells don't partition the corpus")
     out.foreach { r =>
       val cp = r.getDouble(4)
@@ -152,7 +152,7 @@ class SimilaritySpec extends SparkSpec {
     val (gp, nmi) = (out.head.getDouble(5), out.head.getDouble(6))
     // global purity can never fall below the plurality-class share
     // (assign every cell the global majority and you're already there)
-    val plurality = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val plurality = graft.Tables(spark, dir, "embeddings")
       .groupBy(col("label")).count().agg(max("count")).head.getLong(0)
       .toDouble / n
     assert(gp >= plurality - 1e-9, s"purity $gp below plurality $plurality")

@@ -9,7 +9,7 @@ import graft.{QueryRegistry, SparkSpec}
   * checkpoint storage, not executor blocks), or recomputed. */
 class StageSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   test("checkpoint modes agree: local == reliable == none (d02)") {
     def run(mode: String): Seq[String] = {

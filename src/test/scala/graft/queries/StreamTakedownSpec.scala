@@ -13,7 +13,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   * plain-Scala recount of the removal set. */
 class StreamTakedownSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   private def noticeAgg(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = df

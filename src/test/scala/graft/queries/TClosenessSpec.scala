@@ -13,7 +13,7 @@ import graft.{QueryRegistry, SparkSpec, Tables}
   * remediation lever for a failed t-closeness audit. */
 class TClosenessSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = small
 
   /** (class key → band counts) → per-class ordered EMD, exact-integer
     * cumulative sums, one display division (the query's arithmetic). */

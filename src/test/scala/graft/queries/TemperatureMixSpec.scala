@@ -14,8 +14,8 @@ class TemperatureMixSpec extends SparkSpec {
   test("p16 quotas match hand-computed temperature weights; rare domains upweighted") {
     import spark.implicits._
     val dir = tmpDir("tempmix")
-    (0L until 100L).map(id => (id, s"text $id"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    plant(dir, "documents", (0L until 100L).map(id => (id, s"text $id"))
+      .toDF("doc_id", "text"))
 
     // expected: same arithmetic, same fold order (domains sorted by
     // name — d0, d1, …, d9 — matching the query's ordered fold)

@@ -73,8 +73,9 @@ class UrlCanonSpec extends SparkSpec {
     // ids chosen against the moduli: 0 trips everything (incl. the
     // %63 port-split case), 9 is the clean base+plant pair, 14 keeps
     // :8080, 3/353 are the natural mod-350 collision
-    Seq(0L, 3L, 9L, 14L, 353L).map(id => (id, s"text $id"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    plant(dir, "documents",
+      Seq(0L, 3L, 9L, 14L, 353L).map(id => (id, s"text $id"))
+        .toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("p14_url_canonicalize").run(spark, dir)
       .collect()

@@ -17,13 +17,13 @@ class VideoShingleSpec extends SparkSpec {
     def fr(tag: String, k: Int): String = s"$tag$k".padTo(16, '.')
     def video(tag: String, n: Int): String =
       (0 until n).map(fr(tag, _)).mkString
-    Seq(
+    plant(dir, "documents", Seq(
       (0L, video("a", 6)),                       // %12: plant drops frame a0
       (1L, video("d", 6)),                       // unrelated
       (2L, video("e", 3)),                       // 3 frames: no shingles
       (12L, video("b", 8)),                      // %12: plant drops frame b0
       (24L, video("b", 7) + fr("c", 7))          // %12: doc 12 with last frame edited
-    ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    ).toDF("doc_id", "text"))
 
     val out = QueryRegistry.byName("mm07_video_neardup").run(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap

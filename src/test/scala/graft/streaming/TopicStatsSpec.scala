@@ -91,4 +91,14 @@ class TopicStatsSpec extends SparkSpec {
       .map(_.getLong(5)).sum
     assert(restBytes == (20L - victim.getLong(4)) * 2, after.mkString(","))
   }
+
+  test("a store with no topics reports the same nine columns and no rows") {
+    val none = TopicStats.report(spark, tmpDir("statstore-none"))
+    val root = tmpDir("statstore-one")
+    publish(root, "solo", 3, keySpace = 1, paySize = 1)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => (f.name, f.dataType))
+    assert(shape(none) == shape(TopicStats.report(spark, root)))
+    assert(none.columns.length == 9 && none.collect().isEmpty)
+  }
 }

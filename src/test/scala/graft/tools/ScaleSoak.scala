@@ -68,10 +68,10 @@ object ScaleSoak {
 
     def replicate(name: String, f: (DataFrame, Int) => DataFrame): Unit = {
       if (java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$soakDir/$name.parquet"))) return
+          java.nio.file.Paths.get(Tables.path(soakDir, name)))) return
       val src = Tables(spark, base, name)
       val out = (0 until reps).map(i => f(src, i)).reduce(_ unionByName _)
-      out.write.mode("overwrite").parquet(s"$soakDir/$name.parquet")
+      out.write.mode("overwrite").parquet(Tables.path(soakDir, name))
     }
     locally {
       // ts as BIGINT nanos: graft.Tables reads the fixture's
@@ -161,9 +161,9 @@ object ScaleSoak {
         Set("events", "documents", "embeddings", "orders", "lineitem"))
       .foreach { t =>
       if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$soakDir/$t.parquet")))
+          java.nio.file.Paths.get(Tables.path(soakDir, t))))
         Tables(spark, base, t).write.mode("overwrite")
-          .parquet(s"$soakDir/$t.parquet")
+          .parquet(Tables.path(soakDir, t))
     }
 
     val names =

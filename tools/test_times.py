@@ -4,6 +4,8 @@
 One directory: summed test time, test count, the N slowest suites and
 the N slowest tests. Two directories (before, after): also the per-test
 time delta, largest moves first, and the tests present on one side only.
+A test whose name is unique on both sides but whose suite changed is
+paired as "moved: A -> B" and counts in the delta.
 
   python3 tools/test_times.py target/test-reports
   python3 tools/test_times.py before/ after/ -n 10
@@ -57,19 +59,39 @@ def summary(label, tests, n):
         print(f"    {t:8.1f} s  {key}{flag}")
 
 
+def moved(before, after):
+    """{before key: after key} for the tests whose name is unique on
+    both sides and whose suite changed."""
+    def by_name(tests):
+        names = {}
+        for key in tests:
+            names.setdefault(key.split("::", 1)[1], []).append(key)
+        return names
+    nb, na = by_name(before), by_name(after)
+    return {kb[0]: na[name][0] for name, kb in nb.items()
+            if len(kb) == 1 and len(na.get(name, ())) == 1
+            and kb[0] != na[name][0]}
+
+
 def delta(before, after, n):
-    shared = sorted(set(before) & set(after),
-                    key=lambda k: -abs(after[k][0] - before[k][0]))
-    tb = sum(before[k][0] for k in shared)
-    ta = sum(after[k][0] for k in shared)
+    moves = moved(before, after)
+    pairs = sorted([(k, k) for k in set(before) & set(after)]
+                   + list(moves.items()),
+                   key=lambda p: -abs(after[p[1]][0] - before[p[0]][0]))
+    tb = sum(before[b][0] for b, _ in pairs)
+    ta = sum(after[a][0] for _, a in pairs)
     ratio = f" ({ta / tb:.2f}x)" if tb else ""
-    print(f"delta over {len(shared)} shared tests: {tb:.1f} s -> "
-          f"{ta:.1f} s{ratio}")
-    for k in shared[:n]:
-        b, a = before[k][0], after[k][0]
-        print(f"    {b:8.1f} -> {a:8.1f} s  ({a - b:+8.1f})  {k}")
-    for label, only in (("only before", set(before) - set(after)),
-                        ("only after", set(after) - set(before))):
+    print(f"delta over {len(pairs)} paired tests ({len(moves)} moved): "
+          f"{tb:.1f} s -> {ta:.1f} s{ratio}")
+    for kb, ka in pairs[:n]:
+        b, a = before[kb][0], after[ka][0]
+        print(f"    {b:8.1f} -> {a:8.1f} s  ({a - b:+8.1f})  {ka}")
+    for kb, ka in sorted(moves.items()):
+        suite_b, name = kb.split("::", 1)
+        print(f"  moved: {suite_b} -> {ka.split('::', 1)[0]}  {name}")
+    for label, only in (("only before", set(before) - set(after) - set(moves)),
+                        ("only after",
+                         set(after) - set(before) - set(moves.values()))):
         for k in sorted(only):
             print(f"  {label}: {k}")
 
