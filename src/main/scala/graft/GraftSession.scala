@@ -63,10 +63,14 @@ object GraftSession {
     * blocks: un-drained they accumulate across a whole run — hundreds
     * of dead block sets squeezing the storage pool, the round-6
     * mechanism for a 6× recorded blowup on the heaviest staged queries
-    * ([[graft.operators.Stage.drain]] has the end-of-life contract). */
+    * ([[graft.operators.Stage.drain]] has the end-of-life contract).
+    * Last, deletes the query's temp roots ([[TempRoots.release]]): only
+    * after the providers are unloaded may their checkpoints go, and
+    * nothing of the query may be read after this call. */
   def release(spark: SparkSession): Unit = {
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     catch { case _: Throwable => () }
     graft.operators.Stage.drain(spark)
+    TempRoots.release()
   }
 }

@@ -414,11 +414,7 @@ object SketchOps {
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     // swap: drop the old store, move the fresh one into place (local
     // FS rename; object stores would version by batch id instead)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    if (fs.exists()) rm(fs)
+    graft.TempRoots.delete(fs.toPath)
     require(new java.io.File(tmp).renameTo(fs),
       s"sketch-store swap failed: $tmp -> $path")
   }
@@ -497,30 +493,13 @@ object SketchOps {
       }
     val tmp = shardRoot + ".tmp"
     val tmpDir = new java.io.File(tmp)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    if (tmpDir.exists()) rm(tmpDir)
+    graft.TempRoots.delete(tmpDir.toPath)
     spark.createDataFrame(merged).toDF("k", "bytes")
       .coalesce(1).write.parquet(s"$tmp/batch=${fold.max}")
-    keep.foreach { id =>
-      // kept shards move byte-identically into the new store
-      java.nio.file.Files.walk(
-          java.nio.file.Paths.get(s"$shardRoot/batch=$id"))
-        .sorted()
-        .forEach { p =>
-          val rel = java.nio.file.Paths.get(s"$shardRoot/batch=$id")
-            .relativize(p)
-          val dst = java.nio.file.Paths.get(s"$tmp/batch=$id")
-            .resolve(rel)
-          if (java.nio.file.Files.isDirectory(p))
-            java.nio.file.Files.createDirectories(dst)
-          else java.nio.file.Files.copy(p, dst)
-          ()
-        }
-    }
-    rm(rootDir)
+    // kept shards move byte-identically into the new store
+    keep.foreach(id =>
+      graft.TempRoots.copy(s"$shardRoot/batch=$id", s"$tmp/batch=$id"))
+    graft.TempRoots.delete(rootDir.toPath)
     require(tmpDir.renameTo(rootDir),
       s"kll-shard compaction swap failed: $tmp -> $shardRoot")
   }

@@ -67,7 +67,7 @@ object Stage {
           // getOption first: a default ARGUMENT evaluates eagerly and
           // would orphan a temp dir even when the conf is set
           val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
-            .getOrElse(graft.TempRoots.create("graft-reliable-ckpt"))
+            .getOrElse(graft.TempRoots.session("graft-reliable-ckpt"))
           spark.sparkContext.setCheckpointDir(dir)
         }
         df.checkpoint(eager = true)

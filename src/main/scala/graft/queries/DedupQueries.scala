@@ -253,7 +253,7 @@ object DedupQueries {
       import graft.streaming.{BatchLanding, StreamGate}
       import graft.sources.TopicStore
       val root = graft.TempRoots.create("graft-incdedup")
-      val ckpt = graft.TempRoots.create("graft-incdedup-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/fresh"
       val docs = Tables(s, dir, "documents")
       val seen = docs.filter(col("doc_id") % 5 < 3)

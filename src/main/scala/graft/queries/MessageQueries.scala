@@ -158,8 +158,7 @@ object MessageQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-infer")
-      graft.sources.TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       val consumed = StreamGate.read(s, root, "events")
       val schemas = MessageOps.inferPayloadSchemas(s, consumed,
         samplePerType = 200, xmlRowTag = "e")
@@ -278,7 +277,7 @@ object MessageQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-xonce")
-      val ckpt = root + "/ckpt"
+      val ckpt = root + "/.ckpt"
       graft.sources.TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "hop-in", 4)
       // several epochs per pass, so the replayed epoch is a real
@@ -334,8 +333,8 @@ object MessageQueries {
     ) { (s, dir) =>
       import graft.streaming.BatchLanding
       val root = graft.TempRoots.create("graft-roundtrip")
-      val ckptRelay = root + "/ckpt-relay"
-      val ckptDown = root + "/ckpt-down"
+      val ckptRelay = root + "/.ckpt-relay"
+      val ckptDown = root + "/.ckpt-down"
       val outDir = root + "/landed"
       graft.sources.TopicStore.publish(s,
         MessageOps.fromEvents(Tables(s, dir, "events")), root, "hop-in", 4)

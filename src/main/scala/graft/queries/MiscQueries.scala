@@ -1624,8 +1624,9 @@ object MiscQueries {
           ab.getLowerBound(3), ab.getUpperBound(3))
       }
       // the 190-row pair spine (keys, exact totals, sketch bounds) is
-      // itself model-state-sized and broadcasts; the only remaining
-      // corpus-side work is the intersection pair join
+      // itself model-state-sized; as the preserved side of the left
+      // outer join it cannot be built, so it takes no broadcast hint.
+      // The only remaining corpus-side work is the intersection pair join
       val boundsDf = s.createDataFrame(bounds.toSeq)
         .toDF("src_a", "src_b", "n_a", "n_b", "i_lb", "i_ub",
           "u_lb", "u_ub", "a_lb", "a_ub")
@@ -1645,8 +1646,7 @@ object MiscQueries {
         .filter(col("src_a") < col("src_b"))
         .groupBy(col("src_a"), col("src_b"))
         .agg(count(lit(1)).cast("long").as("n_inter"))
-      broadcast(boundsDf)
-        .join(pairs, Seq("src_a", "src_b"), "left_outer")
+      boundsDf.join(pairs, Seq("src_a", "src_b"), "left_outer")
         .select(col("src_a"), col("src_b"), col("n_a"), col("n_b"),
           coalesce(col("n_inter"), lit(0L)).as("n_inter"),
           (col("n_a") + col("n_b") -

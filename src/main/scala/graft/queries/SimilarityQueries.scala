@@ -644,7 +644,7 @@ object SimilarityQueries {
       import graft.streaming.{BatchLanding, StreamGate}
       import graft.sources.TopicStore
       val root = graft.TempRoots.create("graft-incann")
-      val ckpt = graft.TempRoots.create("graft-incann-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/landed"
       val base = Tables(s, dir, "embeddings")
         .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))

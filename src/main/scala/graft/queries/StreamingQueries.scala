@@ -37,10 +37,9 @@ object StreamingQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-stream")
-      val ckpt = graft.TempRoots.create("graft-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/consumed"
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       val payloadSchema = MessageOps.payloadSchema
       // parse + project inside foreachBatch and land parquet
       // executor-side — the consumed topic never touches the driver
@@ -88,14 +87,11 @@ object StreamingQueries {
     ) { (s, dir) =>
       import graft.streaming.AckingSink
       val root = graft.TempRoots.create("graft-retry")
-      val ckpt = graft.TempRoots.create("graft-retry-ckpt")
+      val ckpt = root + "/.ckpt"
       // delivery-SEMANTICS gate on a bounded topic slice (ps01 is the
       // full-scale ingest-throughput query; re-running the whole volume
       // through a second stream pair here would only re-measure ps01)
-      TopicStore.publish(s,
-        MessageOps.fromEvents(
-          Tables(s, dir, "events").filter(col("event_id") < 30000)),
-        root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root, slice = true)
       val preLines = (0 until 4).map(p =>
         TopicStore.partitionMeta(root, "events", p)._1).sum
 
@@ -154,7 +150,7 @@ object StreamingQueries {
     ) { (s, dir) =>
       import graft.streaming.ChunkReassembly
       val root = graft.TempRoots.create("graft-chunks")
-      val ckpt = graft.TempRoots.create("graft-chunks-ckpt")
+      val ckpt = root + "/.ckpt"
       // empty text excluded on BOTH sides: zero chunks can't be
       // published (and sequence(0, -1) would count down)
       val docs = Tables(s, dir, "documents")
@@ -222,8 +218,7 @@ object StreamingQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-seek")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       StreamGate.read(s, root, "events",
           Map("startingTime" -> "2024-01-15T00:00:00Z"))
         .select(col("message_id"), col("key"), col("publish_time"))
@@ -251,8 +246,7 @@ object StreamingQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-range")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       StreamGate.read(s, root, "events", Map(
           "startingTime" -> "2024-01-10T00:00:00Z",
           "endingTime" -> "2024-01-20T00:00:00Z"))
@@ -288,9 +282,7 @@ object StreamingQueries {
         |WHERE off >= 500 ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-midseek")
-      val slice = MessageOps.fromEvents(
-        Tables(s, dir, "events").filter(col("event_id") < 30000))
-      TopicStore.publish(s, slice, root, "events", 1)
+      SharedEventsTopic.publish(s, dir, root, slice = true, partitions = 1)
       StreamGate.read(s, root, "events", Map("startingMessageId" -> "0:500:0:0"))
         .select(col("message_id"), col("key"), col("publish_time"))
         .orderBy(col("message_id"))
@@ -325,9 +317,7 @@ object StreamingQueries {
         |WHERE off >= 500 ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-cumack")
-      val slice = MessageOps.fromEvents(
-        Tables(s, dir, "events").filter(col("event_id") < 30000))
-      TopicStore.publish(s, slice, root, "events", 1)
+      SharedEventsTopic.publish(s, dir, root, slice = true, partitions = 1)
       // the consumer finished the first 500 messages: ONE cumulative
       // ack at offset 499 commits the whole prefix…
       TopicStore.ackCumulative(root, "events", "sub-default", 0, 499L)
@@ -361,8 +351,7 @@ object StreamingQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-expire")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       val cutoffUs = java.time.Instant.parse("2024-01-12T00:00:00Z")
         .toEpochMilli * 1000L
       TopicStore.partitionIds(root, "events").foreach { p =>
@@ -395,10 +384,7 @@ object StreamingQueries {
         |ORDER BY slice""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-count")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(
-          Tables(s, dir, "events").filter(col("event_id") < 30000)),
-        root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root, slice = true)
       val full = StreamGate.read(s, root, "events")
         .agg(count(lit(1)).cast("long").as("n"))
         .select(lit("full").as("slice"), col("n"))
@@ -429,10 +415,7 @@ object StreamingQueries {
         |GROUP BY ts ORDER BY publish_time""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-latestn")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(
-          Tables(s, dir, "events").filter(col("event_id") < 30000)),
-        root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root, slice = true)
       StreamGate.read(s, root, "events")
         .orderBy(col("publish_time").desc).limit(100)
         .groupBy(col("publish_time"))
@@ -459,8 +442,7 @@ object StreamingQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-reset")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       val toUs = java.time.Instant.parse("2024-01-20T00:00:00Z")
         .toEpochMilli * 1000L
       TopicStore.partitionIds(root, "events").foreach { p =>
@@ -496,12 +478,10 @@ object StreamingQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-once")
-      val ckpt = graft.TempRoots.create("graft-once-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/deduped"
-      val slice = MessageOps.fromEvents(
-        Tables(s, dir, "events").filter(col("event_id") < 30000))
-      TopicStore.publish(s, slice, root, "events", 4)
-      TopicStore.publish(s, slice, root, "events", 4) // the redelivery
+      SharedEventsTopic.publish(s, dir, root, slice = true)
+      SharedEventsTopic.publish(s, dir, root, slice = true) // the redelivery
       StreamGate.run(s,
         StreamGate.source(s, root, "events", StreamGate.PlainCap)
           .withWatermark("event_time", "60 days")
@@ -608,10 +588,9 @@ object StreamingQueries {
         |ORDER BY click_id, buy_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-sj")
-      val ckpt = graft.TempRoots.create("graft-sj-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/joined"
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
 
       val payloadSchema = MessageOps.payloadSchema
       def side(eventType: String, idAs: String, tsAs: String) = {
@@ -894,7 +873,7 @@ object StreamingQueries {
         |ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-wmu")
-      val ckpt = graft.TempRoots.create("graft-wmu-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/windows"
       val events = Tables(s, dir, "events")
       val onTime = events.filter(pmod(col("event_id"), lit(3)) =!= 0)
@@ -959,7 +938,7 @@ object StreamingQueries {
         |ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-complete")
-      val ckpt = graft.TempRoots.create("graft-complete-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/totals"
       val events = Tables(s, dir, "events")
       def runPass(): Unit = StreamGate.run(s,
@@ -1057,10 +1036,9 @@ object StreamingQueries {
         |ORDER BY message_id""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-enrich")
-      val ckpt = graft.TempRoots.create("graft-enrich-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/enriched"
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      SharedEventsTopic.publish(s, dir, root)
       val dim = Tables(s, dir, "customer")
         .select(col("c_custkey").cast("string").as("key"),
           col("c_mktsegment"))
@@ -1109,7 +1087,7 @@ object StreamingQueries {
       import s.implicits._
       import graft.streaming.{Top2Processor, TwsEvent}
       val root = graft.TempRoots.create("graft-tws")
-      val ckpt = graft.TempRoots.create("graft-tws-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/top2"
       val events = Tables(s, dir, "events")
       def runPass(): Unit = {
@@ -1291,12 +1269,10 @@ object StreamingQueries {
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-dwin")
-      val ckpt = graft.TempRoots.create("graft-dwin-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/windows"
-      val slice = MessageOps.fromEvents(
-        Tables(s, dir, "events").filter(col("event_id") < 30000))
-      TopicStore.publish(s, slice, root, "events", 4)
-      TopicStore.publish(s, slice, root, "events", 4) // the redelivery
+      SharedEventsTopic.publish(s, dir, root, slice = true)
+      SharedEventsTopic.publish(s, dir, root, slice = true) // the redelivery
       def sentinel(ts: String) = {
         val t = java.sql.Timestamp.valueOf(ts)
         Tables(s, dir, "events").limit(1).select(
@@ -1377,7 +1353,7 @@ object StreamingQueries {
       import graft.operators.DedupOps
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
       val root = graft.TempRoots.create("graft-sneardup")
-      val ckpt = graft.TempRoots.create("graft-sneardup-ckpt")
+      val ckpt = root + "/.ckpt"
       val outDir = root + "/flags"
       val corpus = DedupQueries.corpusWithNearDups(Tables(s, dir, "documents"))
       // strictly increasing publish times ⇒ the single-partition log
@@ -1676,14 +1652,12 @@ object StreamingQueries {
         |ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-wsketch")
-      val ckpt = graft.TempRoots.create("graft-wsketch-ckpt")
-      val store = graft.TempRoots.create("graft-wsketch-store") +
-        "/sketch_store"
+      val ckpt = root + "/.ckpt"
+      val store = root + "/sketch_store"
       // sentinel-free topic (this gate has no event-time state, and
       // sentinel users must not enter the sketch), published once per
       // fixture dir and copied per query — the SharedEventsTopic shave
-      SharedEventsTopic.copyInto(SharedEventsTopic.basePlain(s, dir),
-        root)
+      graft.TempRoots.copy(SharedEventsTopic.basePlain(s, dir), root)
       StreamSketchGate.pass(s, root, ckpt, store, 25000L)
       // the sketch side below reads ONLY the store (bounded |types|
       // rows of model state)
@@ -1743,12 +1717,10 @@ object StreamingQueries {
         |ORDER BY event_type, q""".stripMargin
     ) { (s, dir) =>
       val root = graft.TempRoots.create("graft-wkll")
-      val ckpt = graft.TempRoots.create("graft-wkll-ckpt")
-      val shards = graft.TempRoots.create("graft-wkll-store") +
-        "/kll_shards"
+      val ckpt = root + "/.ckpt"
+      val shards = root + "/kll_shards"
       // sentinel-free shared topic copy (ws13's rationale)
-      SharedEventsTopic.copyInto(SharedEventsTopic.basePlain(s, dir),
-        root)
+      graft.TempRoots.copy(SharedEventsTopic.basePlain(s, dir), root)
       StreamKllShardGate.pass(s, root, ckpt, shards, 25000L)
       // compact to checkpoint+1 BEFORE answering: the gated row rides
       // the compacted store wherever the pass split into multiple
@@ -1858,18 +1830,31 @@ private[queries] object StreamSketchGate {
   * each query gets a byte-identical filesystem COPY under its own
   * root — same files, same message ids, same partition routing; the
   * per-query pass-2 sentinel still appends to the private copy, so
-  * the two-pass watermark choreography under test is untouched. */
-private[queries] object SharedEventsTopic {
+  * the two-pass watermark choreography under test is untouched. The
+  * bases outlive the query that publishes them, so they are
+  * session-scoped roots ([[graft.TempRoots.session]]). */
+private[graft] object SharedEventsTopic {
   import org.apache.spark.sql.SparkSession
   private val cache = scala.collection.mutable.HashMap.empty[String, String]
+
+  /** Publish the `events` fixture through [[MessageOps.fromEvents]] as
+    * topic `events` in `partitions` partitions under `root`; with
+    * `slice`, only `event_id < 30000` (the delivery-semantics gates'
+    * bounded slice). */
+  def publish(s: SparkSession, dir: String, root: String,
+      slice: Boolean = false, partitions: Int = 4): Unit = {
+    val events = Tables(s, dir, "events")
+    TopicStore.publish(s, MessageOps.fromEvents(
+        if (slice) events.filter(col("event_id") < 30000) else events),
+      root, "events", partitions)
+  }
 
   /** Root holding a published-once `events` topic: the full fixture
     * plus the two 2035 per-side watermark sentinels. */
   def base(s: SparkSession, dir: String): String = synchronized {
     cache.getOrElseUpdate(dir, {
-      val root = graft.TempRoots.create("graft-soj-base")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      val root = graft.TempRoots.session("graft-soj-base")
+      publish(s, dir, root)
       val farFuture = java.sql.Timestamp.valueOf("2035-01-01 00:00:00")
       import s.implicits._
       TopicStore.publish(s,
@@ -1891,7 +1876,7 @@ private[queries] object SharedEventsTopic {
     * private copy mid-choreography). */
   def baseOnTime(s: SparkSession, dir: String): String = synchronized {
     cache.getOrElseUpdate("ontime:" + dir, {
-      val root = graft.TempRoots.create("graft-wgate-base")
+      val root = graft.TempRoots.session("graft-wgate-base")
       val events = Tables(s, dir, "events")
       TopicStore.publish(s,
         MessageOps.fromEvents(
@@ -1916,24 +1901,10 @@ private[queries] object SharedEventsTopic {
     * hand each query a byte-identical filesystem copy. */
   def basePlain(s: SparkSession, dir: String): String = synchronized {
     cache.getOrElseUpdate("plain:" + dir, {
-      val root = graft.TempRoots.create("graft-plain-base")
-      TopicStore.publish(s,
-        MessageOps.fromEvents(Tables(s, dir, "events")), root, "events", 4)
+      val root = graft.TempRoots.session("graft-plain-base")
+      publish(s, dir, root)
       root
     })
-  }
-
-  /** Recursive file copy of the base topic into a fresh query root. */
-  def copyInto(baseRoot: String, root: String): Unit = {
-    val src = java.nio.file.Paths.get(baseRoot)
-    val dst = java.nio.file.Paths.get(root)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = dst.resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
   }
 }
 
@@ -1948,12 +1919,12 @@ private[queries] object StreamOuterJoinGate {
   def run(s: SparkSession, dir: String, tag: String,
       joinType: String, windowAgg: Boolean = false): DataFrame = {
     val root = graft.TempRoots.create(tag)
-    val ckpt = graft.TempRoots.create(tag + "-ckpt")
+    val ckpt = root + "/.ckpt"
     val outDir = root + "/joined"
     // byte-identical copy of the shared published topic (full events
     // fixture + the two 2035 per-side watermark sentinels — parseable
     // payloads, far-future event time, user ids no real row carries)
-    SharedEventsTopic.copyInto(SharedEventsTopic.base(s, dir), root)
+    graft.TempRoots.copy(SharedEventsTopic.base(s, dir), root)
     import s.implicits._
 
     val payloadSchema = MessageOps.payloadSchema
@@ -2064,7 +2035,7 @@ private[queries] object StreamingWindowGate {
       agg: DataFrame => DataFrame, orderCols: Seq[String])
       : (DataFrame, Counters) = {
     val root = graft.TempRoots.create(tag)
-    val ckpt = graft.TempRoots.create(tag + "-ckpt")
+    val ckpt = root + "/.ckpt"
     val outDir = root + "/windows"
     val events = Tables(s, dir, "events")
     val sentinelTs = java.sql.Timestamp.valueOf("2035-01-01 00:00:00")
@@ -2107,8 +2078,7 @@ private[queries] object StreamingWindowGate {
 
     // byte-identical copy of the shared pass-1 topic (on-time subset +
     // the 2035 wm-sentinel); pass 2's late publish appends per query
-    SharedEventsTopic.copyInto(
-      SharedEventsTopic.baseOnTime(s, dir), root)
+    graft.TempRoots.copy(SharedEventsTopic.baseOnTime(s, dir), root)
     runPass()
     TopicStore.publish(s,
       MessageOps.fromEvents(events.filter(pmod(col("event_id"), lit(3)) === 0)),

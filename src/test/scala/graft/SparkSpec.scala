@@ -11,7 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with Fixtures {
   lazy val spark: SparkSession = SparkSpec.session
 
   def tmpDir(prefix: String): String =
-    TempRoots.create(prefix)  // registered for shutdown-hook deletion
+    TempRoots.session(prefix)  // survives release; deleted at JVM exit
 }
 
 object SparkSpec {

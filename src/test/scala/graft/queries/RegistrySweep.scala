@@ -70,7 +70,7 @@ object RegistrySweep {
   private def attempt[T](body: => T): Try[T] =
     try Success(body) catch { case e: Throwable => Failure(e) }
 
-  private def sweep(dir: String, in: String => Boolean,
+  private[graft] def sweep(dir: String, in: String => Boolean,
       tie: String => Boolean): VectorMap[String, Facts] = {
     val spark = SparkSpec.session
     VectorMap.from(QueryRegistry.all.filter(q => in(q.name)).map { q =>
@@ -93,6 +93,9 @@ object RegistrySweep {
                 attempt(RoundTieLint.lint(q.name, df))
               else Success(Nil))
         }
+        // every fact is a value, recorded before release deletes the
+        // query's temp roots (GraftSessionSpec: "RegistrySweep records
+        // every fact before release deletes the query's roots")
       } finally GraftSession.release(spark))
     })
   }

@@ -5,7 +5,9 @@ One directory: summed test time, test count, the N slowest suites and
 the N slowest tests. Two directories (before, after): also the per-test
 time delta, largest moves first, and the tests present on one side only.
 A test whose name is unique on both sides but whose suite changed is
-paired as "moved: A -> B" and counts in the delta.
+paired as "moved: A -> B" and counts in the delta. Within one directory,
+a test name reported by several suites (a stale report of a deleted
+suite) is counted once, from the newest report, with a warning.
 
   python3 tools/test_times.py target/test-reports
   python3 tools/test_times.py before/ after/ -n 10
@@ -23,13 +25,20 @@ import xml.etree.ElementTree as ET
 
 
 def load(directory, match=None):
-    """{"suite::test": (seconds, status)} from every report in directory."""
+    """{"suite::test": (seconds, status)} from every report in directory.
+
+    sbt never removes the report of a deleted suite, so a test that moved
+    suites can sit in two reports of one directory. A test name found
+    under several suites is counted only from the newest report (its
+    `timestamp`), and the suites are printed as a warning."""
     files = sorted(glob.glob(os.path.join(directory, "TEST-*.xml")))
     if not files:
         sys.exit(f"no TEST-*.xml reports in {directory}")
-    tests = {}
+    seen = {}  # test name -> [(report timestamp, key, (seconds, status))]
     for path in files:
-        for case in ET.parse(path).getroot().iter("testcase"):
+        root = ET.parse(path).getroot()
+        stamp = root.get("timestamp") or ""
+        for case in root.iter("testcase"):
             key = f"{case.get('classname')}::{case.get('name')}"
             if match and not re.search(match, key):
                 continue
@@ -37,7 +46,20 @@ def load(directory, match=None):
             for tag in ("failure", "error", "skipped"):
                 if case.find(tag) is not None:
                     status = tag
-            tests[key] = (float(case.get("time") or 0.0), status)
+            seen.setdefault(case.get("name"), []).append(
+                (stamp, key, (float(case.get("time") or 0.0), status)))
+    tests, stale = {}, {}
+    for entries in seen.values():
+        newest = max(entries)
+        tests[newest[1]] = newest[2]
+        if len(entries) > 1:
+            suites = tuple(sorted({(e[0], e[1].split("::", 1)[0])
+                                   for e in entries}))
+            stale[suites] = stale.get(suites, 0) + 1
+    for suites, n in sorted(stale.items()):
+        listed = ", ".join(f"{suite} ({stamp})" for stamp, suite in suites)
+        print(f"warning: {directory}: {n} test name(s) reported by {listed}; "
+              f"counting only the newest, {suites[-1][1]}", file=sys.stderr)
     return tests
 
 
