@@ -31,20 +31,35 @@ object GraftSession {
     // upload pool also deadlocks under many concurrent RocksDB snapshot
     // zips (Spark 4.1.2, local fs): every task parks in
     // ChecksumCheckpointFileManager.awaitResult forever.
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-    // Hadoop's default `file:` filesystem is ChecksumFileSystem: every
-    // task output file gets a sibling .crc written on write and
-    // VERIFIED on read-back. The stream gates' foreachBatch landings
-    // are write-once scratch handoffs on local disk, re-read once in
-    // the same process — the checksum layer doubles their tiny-file
-    // count and re-hashes every byte both ways (round-12 A/B:
-    // ws10 7.3→3.7 s, ws05 3.9→2.5 s, ws04 7.4→5.8 s). Same class as
-    // the streaming checkpoint-checksum disable above: local-scratch
-    // I/O integrity, not results; HDFS/S3 deployments never use this
-    // FS and keep their own integrity layers.
-    "spark.hadoop.fs.file.impl" -> "graft.hadoop.NoChecksumLocalFileSystem")
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+  // The `file:` filesystem (no `.crc` files for the FileSystem API, no
+  // chmod/readlink process per file for either API) is not a session
+  // conf: src/main/resources/core-site.xml names it for every Hadoop
+  // Configuration on the classpath (graft.hadoop.NoChecksumLocalFileSystem).
 
-  /** A `local[cores]` session with [[confs]], logging at WARN. */
+  /** WARN lines that are benign by design, as (logger, message text):
+    * hundreds of them in a test run drown the real warnings.
+    *  - Stage.drain unpersists staged localCheckpoint RDDs at the end of
+    *    their query — the end of life that the warning warns about.
+    *  - Every stateful pass starts on a one-shot checkpoint, so its
+    *    state-store providers never find a loaded map (Spark notes this
+    *    is normal). The provider's logger name carries its id, so the
+    *    text is matched on the package's logger.
+    *  - Stateful streaming queries run without AQE by Spark's design.
+    *  - A query's job group is cancelled after its jobs are done.
+    * The loggers keep their level: only lines with that text are
+    * dropped, every other WARN still prints. */
+  private val benignWarnings: Seq[(String, String)] = Seq(
+    "org.apache.spark.rdd.MapPartitionsRDD" ->
+      "cannot be recomputed after unpersisting",
+    "org.apache.spark.sql.execution.streaming.state" ->
+      "doesn't exist in loadedMaps",
+    "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution" ->
+      "Disabling AQE",
+    "org.apache.spark.scheduler.DAGScheduler" -> "Failed to cancel job group")
+
+  /** A `local[cores]` session with [[confs]], logging at WARN without
+    * the [[benignWarnings]]. */
   def build(cores: Int): SparkSession = {
     val s = confs(cores)
       .foldLeft(SparkSession.builder().master(s"local[$cores]")) {
@@ -52,7 +67,28 @@ object GraftSession {
       }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    dropBenignWarnings()
     s
+  }
+
+  private def dropBenignWarnings(): Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    import org.apache.logging.log4j.core.filter.StringMatchFilter
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    // once per JVM: a session built again finds the loggers configured
+    benignWarnings.filterNot(w => cfg.getLoggers.containsKey(w._1))
+      .foreach { case (logger, text) =>
+        // level null: the logger keeps inheriting the root's level
+        val lc = new LoggerConfig(logger, null, true)
+        lc.addFilter(StringMatchFilter.newBuilder().setMatchString(text)
+          .setOnMatch(Filter.Result.DENY)
+          .setOnMismatch(Filter.Result.NEUTRAL).build())
+        cfg.addLogger(logger, lc)
+      }
+    ctx.updateLoggers()
   }
 
   /** Per-query cleanup after a query's terminal action, outside any

@@ -78,12 +78,22 @@ object StreamGate {
     * holds any other session override. Both hold while the query runs
     * — `foreachBatch` bodies that use the session see them — and are
     * restored afterwards even on failure: a leaked override would
-    * reach every later query in a shared Verify/Bench session. */
+    * reach every later query in a shared Verify/Bench session.
+    *
+    * Each pass also runs with `spark.sql.artifact.isolation.enabled`
+    * off. A started query runs on a clone of the session, and with
+    * isolation on (Spark 4.1's default) the clone gets a fresh artifact
+    * classloader — which is part of the key of Spark's codegen cache, so
+    * every pass recompiled the classes an earlier pass had compiled,
+    * while its tasks waited on the compile lock (ARCHITECTURE.md,
+    * "Measurement and verification", has the counts). The engine adds no
+    * session artifacts, so the session's own classloader serves. */
   def run[T](s: SparkSession, writer: DataStreamWriter[T], ckpt: String,
       statePartitions: Option[Int] = None,
       conf: Map[String, String] = Map.empty): StreamingQuery =
-    withConf(s, (conf ++ statePartitions.map(n =>
-        "spark.sql.shuffle.partitions" -> n.toString)).toSeq) {
+    withConf(s, (Map("spark.sql.artifact.isolation.enabled" -> "false") ++
+        conf ++ statePartitions.map(n =>
+          "spark.sql.shuffle.partitions" -> n.toString)).toSeq) {
       val q = writer
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())

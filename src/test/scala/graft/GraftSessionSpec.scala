@@ -22,8 +22,15 @@ class GraftSessionSpec extends SparkSpec {
     GraftSession.confs(4).foreach { case (k, v) =>
       assert(spark.conf.getOption(k).contains(v), s"$k")
     }
-    assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
-      "graft.hadoop.NoChecksumLocalFileSystem")
+  }
+
+  test("a session's file: URIs resolve to the engine's filesystem for both Hadoop APIs") {
+    val conf = spark.sessionState.newHadoopConf()
+    val local = java.net.URI.create("file:///")
+    assert(org.apache.hadoop.fs.FileSystem.get(local, conf)
+      .isInstanceOf[graft.hadoop.NoChecksumLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(local, conf)
+      .getDefaultFileSystem.isInstanceOf[graft.hadoop.ForkFreeLocalFs])
   }
 
   private val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
